@@ -12,8 +12,6 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
-
 DEFAULTS = {
     "api_url": "https://wrm.example/api/stations",  # stand-in; reference default is the WRM endpoint
     "s3_endpoint": None,
@@ -43,15 +41,3 @@ def resolve(overrides: dict | None = None, env: dict | None = None) -> dict:
             out[key] = default
     return out
 
-
-def apply_s3a(spark: SparkSession, conf: dict) -> None:
-    """Push resolved credentials into the Hadoop conf the S3A connector
-    reads (per-session; no global mutation)."""
-    hconf = spark.sparkContext._jsc.hadoopConfiguration()
-    if conf.get("s3_endpoint"):
-        hconf.set("fs.s3a.endpoint", conf["s3_endpoint"])
-        hconf.set("fs.s3a.path.style.access", "true")
-    if conf.get("s3_access_key"):
-        hconf.set("fs.s3a.access.key", conf["s3_access_key"])
-    if conf.get("s3_secret_key"):
-        hconf.set("fs.s3a.secret.key", conf["s3_secret_key"])

@@ -20,8 +20,6 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-METERS_PER_DEG_LAT = 111320.0  # bike_spatial_density_analysis.py:126-134
-
 
 def station_summary(enhanced: DataFrame, top_n: int = 10) -> dict:
     """COUNT(*) + latest-N sample (A1, O2). Small collect at the edge —

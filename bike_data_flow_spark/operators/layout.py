@@ -71,19 +71,6 @@ def salted_join(
     return out.drop("_salt")
 
 
-def repartition_for_write(
-    df: DataFrame, partition_col: str, files_per_partition: int = 8
-) -> DataFrame:
-    """Bound output file counts: hash-spread rows of each dt over a fixed
-    number of writers (avoids both one-giant-file and
-    one-file-per-task)."""
-    return df.repartition(
-        files_per_partition * 4,
-        F.col(partition_col),
-        F.pmod(F.xxhash64(*df.columns), F.lit(files_per_partition)),
-    )
-
-
 def zorder_key(cols: list, bits: int = 16) -> "F.Column":
     """Morton (Z-order) interleave of non-negative integer columns — the
     multi-dimension clustering key behind Delta/Iceberg OPTIMIZE ZORDER.

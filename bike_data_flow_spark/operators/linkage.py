@@ -45,6 +45,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..session import overlap
+
 
 def field_u_long(records: DataFrame, fields: list[str]) -> DataFrame:
     """(field, u) rows — one per compared field — where u is the
@@ -318,22 +320,18 @@ def sorted_neighborhood_pairs(
     u = window - 1
     # The per-pass ranked frames are independent until the union, and
     # each global_sort_index pays serial driver-blocking jobs (range-
-    # bound sampling + the determinism pin's materialization) — build
-    # them on driver threads so one pass's stragglers back-fill with
-    # the other's tasks (guide §2.6). Pass ORDER is preserved in the
-    # output construction below, and each pass's pin is still exactly
-    # one materialization, so the rank-invariance/determinism contract
-    # is untouched.
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(max_workers=max(1, len(sort_passes))) as pool:
+    # bound sampling + the determinism pin's materialization), so the
+    # passes build in overlap. Pass ORDER is preserved in the output
+    # construction below, and each pass's pin is still exactly one
+    # materialization, so the rank-invariance/determinism contract is
+    # untouched.
+    with overlap() as submit:
         idx_futs = [
-            pool.submit(global_sort_index, records, id_col, keys, n_parts)
+            submit(global_sort_index, records, id_col, keys, n_parts)
             for keys in sort_passes
         ]
-        idxs = [f.result() for f in idx_futs]
     out: DataFrame | None = None
-    for idx in idxs:
+    for idx in (f.result() for f in idx_futs):
         left = idx.select(
             F.col(id_col).alias("_id_l"),
             *[F.col(c).alias(f"_{c}_l") for c in carry],

@@ -23,24 +23,6 @@ from collections.abc import Iterator
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import (
-    BinaryType,
-    IntegerType,
-    StringType,
-    StructField,
-    StructType,
-)
-
-MEDIA_SCHEMA = StructType(
-    [
-        StructField("media_id", StringType(), False),
-        StructField("media_type", StringType(), False),  # image|audio|video
-        StructField("content", BinaryType(), True),
-        StructField("width", IntegerType(), True),
-        StructField("height", IntegerType(), True),
-        StructField("n_bytes", IntegerType(), True),
-    ]
-)
 
 IMAGE_FEATURES_DDL = (
     "media_id string, n_bytes int, sha1 string, "

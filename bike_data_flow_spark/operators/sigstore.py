@@ -76,6 +76,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..session import overlap
 from .bloom import (
     BLOOM_BITS_DEFAULT,
     BLOOM_K_DEFAULT,
@@ -240,7 +241,7 @@ def signature_store_init(
     an ever-less-selective superset.
 
     The band rows are minhashed ONCE (localCheckpoint) and feed BOTH
-    writes, which then run on two driver threads: they are independent
+    writes, which then run in overlap: they are independent
     outputs of the same pinned rows, and overwrite-bootstrap has no
     bloom-before-append ordering constraint (that invariant belongs to
     admit_delta, where a store append must never outrun its bloom
@@ -259,8 +260,6 @@ def signature_store_init(
     layout sprays ~8k tiny files and the probe's scan drowns in file
     opens (measured 16× on the composed gate query). Hash-routing each
     shard to one task makes it one file per shard per commit."""
-    from concurrent.futures import ThreadPoolExecutor
-
     n_shards = SIGSTORE_SHARDS
     bits, bk = SIGSTORE_BLOOM_BITS, SIGSTORE_BLOOM_K
     rows = band_keys_for(
@@ -290,13 +289,9 @@ def signature_store_init(
                   "bits": bits, "k": bk},
         )
 
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        store_fut = pool.submit(_write_store)
-        bloom_fut = pool.submit(_write_bloom)
-        errs = [f.exception() for f in (store_fut, bloom_fut)]
-    for e in errs:
-        if e is not None:
-            raise e
+    with overlap() as submit:
+        store_fut = submit(_write_store)
+        submit(_write_bloom)
     # self-check the predicted stamp (ADVICE r12): under the
     # single-bootstrap contract the store write MUST land exactly on
     # next_version — if a concurrent writer (or a crashed writer's
@@ -457,10 +452,10 @@ def admit_delta(
     the carried table properties — the streaming sink's txn fence keys
     go here.
 
-    The two commits are FUSED for wall time (guide §2.6): the bloom
-    CAS runs on a driver thread concurrently with the append's data
-    write, and the append's manifest publish gates on the bloom commit
-    (snapshot_write ``publish_gate``). The bloom-never-lags invariant
+    The two commits are FUSED for wall time: the bloom CAS runs in
+    overlap with the append's data write, and the append's manifest
+    publish gates on the bloom commit (snapshot_write
+    ``publish_gate``). The bloom-never-lags invariant
     is about VISIBILITY order, not data-write order: the append's data
     files are unreferenced until the pointer flips, so every crash
     cut leaves exactly the same observable states as the old serial
@@ -471,26 +466,23 @@ def admit_delta(
     if delta.isEmpty():
         return None
     bloom_dir = _bloom_table(table_dir)
-    bloom_fut = None
-    pool = None
-    if current_version(bloom_dir) is not None:
-        from concurrent.futures import ThreadPoolExecutor
-
-        bits, bk = bloom_geometry(table_dir)  # recorded, never the dial
-        # lazy on purpose: the bitmap evaluates inside the CAS write's
-        # plan, so the admission pays ONE action here, not a pinning
-        # action plus the write; a CAS retry (rare — contended
-        # concurrent admitters only) recomputes the same deterministic
-        # aggregate from the caller-pinned delta rows
-        delta_bloom = bloom_build(
-            delta.select(_combine()), F.col("_bk_comb"), num_bits=bits, k=bk
-        )
-        store_version = current_version(table_dir)
-        pool = ThreadPoolExecutor(max_workers=1)
-        bloom_fut = pool.submit(
-            _commit_bloom_merge, spark, bloom_dir, delta_bloom, store_version
-        )
-    try:
+    with overlap() as submit:
+        bloom_fut = None
+        if current_version(bloom_dir) is not None:
+            bits, bk = bloom_geometry(table_dir)  # recorded, never the dial
+            # lazy on purpose: the bitmap evaluates inside the CAS write's
+            # plan, so the admission pays ONE action here, not a pinning
+            # action plus the write; a CAS retry (rare — contended
+            # concurrent admitters only) recomputes the same deterministic
+            # aggregate from the caller-pinned delta rows
+            delta_bloom = bloom_build(
+                delta.select(_combine()), F.col("_bk_comb"),
+                num_bits=bits, k=bk,
+            )
+            bloom_fut = submit(
+                _commit_bloom_merge, spark, bloom_dir, delta_bloom,
+                current_version(table_dir),
+            )
         # carry the table's properties forward so latest_meta/
         # table_layout survive any number of appends — but never stale
         # txn fence keys from a previous writer's commit (the fence
@@ -525,9 +517,6 @@ def admit_delta(
             # append before any metadata exists
             publish_gate=bloom_fut.result if bloom_fut is not None else None,
         )
-    finally:
-        if pool is not None:
-            pool.shutdown(wait=True)
 
 
 def expire_store(table_dir: str, keep_last: int = 2) -> dict:

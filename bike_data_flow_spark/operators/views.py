@@ -14,14 +14,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-VIEW_NAMES = (
-    "wrm_stations_all",
-    "wrm_stations_only",
-    "wrm_bikes_only",
-    "wrm_stations_latest",
-)
-
-
 def latest_per_station(df: DataFrame) -> DataFrame:
     """W1 (create_enhanced_views.py:84-94): newest snapshot per station.
     Catalyst's InferWindowGroupLimit turns the rn=1 filter into a
@@ -47,9 +39,3 @@ def create_views(spark: SparkSession, enhanced: DataFrame) -> None:
     )
     latest_per_station(enhanced).createOrReplaceTempView("wrm_stations_latest")
 
-
-def ordered_all(spark: SparkSession) -> DataFrame:
-    """The reference's main-view ordering (O1), applied at query level."""
-    return spark.table("wrm_stations_all").orderBy(
-        F.desc("date"), F.desc("file_timestamp"), F.asc("station_id")
-    )

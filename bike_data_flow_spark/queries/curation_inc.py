@@ -37,6 +37,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators import text as T
+from ..session import overlap
 from ..streaming import await_or_raise
 from ..tables import load
 from . import query
@@ -165,18 +166,14 @@ LEFT JOIN sigc ON sigc.doc_id = dec.doc_id
 
 
 def _init_both_stores(sig_init, vec_init) -> None:
-    """Bootstrap the two stores on two driver threads: the inits are
-    independent (different source frames, different table dirs) and
-    each is a serial chain of small jobs (shuffle-write, manifest
-    commit, bloom build), so overlapping them hides one behind the
-    other — same stores, same contents, only the job order changes."""
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        sig_fut = pool.submit(sig_init)
-        vec_fut = pool.submit(vec_init)
-        sig_fut.result()
-        vec_fut.result()
+    """Bootstrap the two stores in overlap: the inits are independent
+    (different source frames, different table dirs) and each is a
+    serial chain of small jobs (shuffle-write, manifest commit, bloom
+    build), so overlapping them hides one behind the other — same
+    stores, same contents, only the job order changes."""
+    with overlap() as submit:
+        submit(sig_init)
+        submit(vec_init)
 
 
 def _quality_gate(df: DataFrame) -> DataFrame:

@@ -14,7 +14,6 @@ from ..tables import load
 from . import query
 
 # incremental split point: history vs "today's" delta
-_CUTOFF_SQL = "TIMESTAMP '2024-01-21'"
 _CUTOFF_NS = 1705795200 * 1_000_000_000  # 2024-01-21T00:00:00Z in epoch ns
 
 _MEASURES = {
@@ -474,8 +473,6 @@ def zone_map_pruning(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
 
-
-_JOIN_CUTOFF_SQL = "DATE '1997-01-01'"
 
 _JOIN_MEASURES = {
     "n_orders": ("count", "o_orderkey"),

@@ -15,6 +15,7 @@ from pyspark.sql import functions as F
 
 from ..operators import dedup as D
 from ..operators import text as T
+from ..session import overlap
 from ..tables import load
 from . import query
 
@@ -306,25 +307,19 @@ def incremental_dedup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     shutil.rmtree(table, ignore_errors=True)
     delta_flag = F.pmod(F.col("doc_id"), F.lit(4)) == 0
     # the store bootstrap and Δ's minhash pin are independent until the
-    # probe — overlap them on driver threads (guide §2.6): the Δ pin's
-    # serial materialization hides entirely inside the bootstrap's
-    # longer wall, and the probe/admit (which read store metadata at
-    # call time) start only after both have finished
-    from concurrent.futures import ThreadPoolExecutor
-
+    # probe: the Δ pin's serial materialization hides entirely inside
+    # the bootstrap's longer wall, and the probe/admit (which read store
+    # metadata at call time) start only after both have finished
     from ..operators.sigstore import band_keys_for
 
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        init_fut = pool.submit(
-            signature_store_init, docs.filter(~delta_flag), table
-        )
-        delta_fut = pool.submit(
+    with overlap() as submit:
+        submit(signature_store_init, docs.filter(~delta_flag), table)
+        delta = submit(
             lambda: band_keys_for(docs.filter(delta_flag)).localCheckpoint()
         )
-        init_fut.result()
-        delta = delta_fut.result()
     return incremental_lsh_pairs(
-        spark, docs.filter(delta_flag), table, commit=True, delta_rows=delta
+        spark, docs.filter(delta_flag), table, commit=True,
+        delta_rows=delta.result(),
     )
 
 

@@ -1,7 +1,6 @@
 """Schema definitions — Spark StructType translations of the reference's
 Pandera schemas (reference: wrm_pipeline/wrm_pipeline/models/stations.py:10-31
-processed, :39-60 enhanced) plus the raw wire-format contract
-(processed_all.py:112-199, FIXTURES.md §1).
+processed, :39-60 enhanced).
 
 Constraint metadata (the Pandera Check-s) lives in CONSTRAINTS and is
 enforced by operators/quality.validate — declaratively, as Spark
@@ -19,24 +18,6 @@ from pyspark.sql.types import (
     StructType,
     TimestampType,
 )
-
-# Wire format: 13 CSV columns; column 2 is the composite
-# "epoch|gmt_local_diff|gmt_servertime_diff" field (FIXTURES.md §1).
-RAW_WIRE_COLUMNS = [
-    "#id",
-    "composite_ts",
-    "name",
-    "lat",
-    "lon",
-    "bikes",
-    "spaces",
-    "installed",
-    "locked",
-    "temporary",
-    "total_docks",
-    "givesbonus_acceptspedelecs_fbbattlevel",
-    "pedelecs",
-]
 
 # models/stations.py:10-31 → processed_data_schema, column order
 # pinned by processed_all.py:188.

@@ -1,4 +1,4 @@
-"""SparkSession factory.
+"""SparkSession factory, and the one driver-concurrency primitive.
 
 Replaces the reference's ad-hoc engine wiring (DuckDB connect +
 httpfs/S3 config at create_enhanced_views.py:14-33, pandas in assets)
@@ -11,8 +11,13 @@ pandas-UDF paths).
 from __future__ import annotations
 
 import os
+import threading
+from collections.abc import Callable, Iterator
+from concurrent.futures import Future
+from contextlib import contextmanager
 
 from pyspark.sql import SparkSession
+from pyspark.util import inheritable_thread_target
 
 
 def get_spark(
@@ -85,3 +90,53 @@ def get_spark(
         for k, v in extra_conf.items():
             builder = builder.config(k, v)
     return builder.getOrCreate()
+
+
+@contextmanager
+def overlap() -> Iterator[Callable[..., Future]]:
+    """Run independent serial chains of small Spark jobs on driver
+    threads, so their jobs overlap instead of queueing behind each
+    other (the scheduler back-fills one chain's idle cores with the
+    other's tasks)::
+
+        with overlap() as submit:
+            a = submit(build_a, x)
+            b = submit(build_b)
+        a.result(), b.result()  # submission order
+
+    ``submit(fn, *args)`` starts ``fn(*args)`` at once on its own
+    thread and returns its Future. Each branch runs under a copy of the
+    caller's local properties taken at submit time (job group, job
+    description, scheduler pool), so its jobs stay attributed to the
+    caller and a ``cancelJobGroup`` on the caller's group reaches them;
+    a plain thread would see none of them.
+
+    The block exits only after every branch has settled, so no thread
+    outlives it. An exception from the block itself wins; otherwise
+    the first failed branch, in submission order, is re-raised."""
+    spark = SparkSession.active()
+    branches: list[tuple[threading.Thread, Future]] = []
+
+    def submit(fn: Callable, *args) -> Future:
+        fut: Future = Future()
+        target = inheritable_thread_target(spark)(fn)
+
+        def run() -> None:
+            try:
+                fut.set_result(target(*args))
+            except BaseException as e:  # noqa: BLE001 — re-raised below
+                fut.set_exception(e)
+
+        thread = threading.Thread(target=run)
+        thread.start()
+        branches.append((thread, fut))
+        return fut
+
+    try:
+        yield submit
+    finally:
+        for thread, _ in branches:
+            thread.join()
+    for _, fut in branches:
+        if fut.exception() is not None:
+            raise fut.exception()

@@ -53,6 +53,7 @@ from ..operators.vecstore import (
     probe_vector_pairs,
     validate_store_dials,
 )
+from ..session import overlap
 from .snapshot_sink import _app_id
 
 
@@ -332,12 +333,9 @@ def curation_batch(
     # The two store chains are INDEPENDENT given probe_docs (different
     # delta derivation, different store, different probe), and each is
     # a serial run of small driver-blocking steps (checkpoint
-    # materialization, the occupied-shard collect, manifest reads) —
-    # run them on two driver threads so their jobs overlap instead of
-    # queueing behind each other (guide: overlap independent jobs; the
-    # scheduler back-fills the tail of one chain with the other's
-    # tasks). Same frames, same plans, same results — only the action
-    # ORDER changes.
+    # materialization, the occupied-shard collect, manifest reads), so
+    # they run in overlap. Same frames, same plans, same results — only
+    # the action ORDER changes.
     def _sig_chain():
         sd = band_keys_for(probe_docs, id_col, text_col).localCheckpoint()
         # _drop_batch_echo keeps replay output byte-identical: a
@@ -364,13 +362,11 @@ def curation_batch(
         )
         return vd, vc
 
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        sig_fut = pool.submit(_sig_chain)
-        vec_fut = pool.submit(_vec_chain)
-        sig_delta, t_cross = sig_fut.result()
-        vec_delta, v_cross = vec_fut.result()
+    with overlap() as submit:
+        sig_fut = submit(_sig_chain)
+        vec_fut = submit(_vec_chain)
+    sig_delta, t_cross = sig_fut.result()
+    vec_delta, v_cross = vec_fut.result()
     a = sig_delta.select(F.col(id_col).alias("id_a"), "band", "band_key")
     b = sig_delta.select(F.col(id_col).alias("id_b"), "band", "band_key")
     t_within = (

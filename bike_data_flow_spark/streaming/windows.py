@@ -65,32 +65,6 @@ def windowed_counts(
     )
 
 
-def windowed_bike_stats(
-    events: DataFrame,
-    ts_col: str = "timestamp",
-    window_duration: str = "15 minutes",
-    watermark: str = "1 hour",
-) -> DataFrame:
-    """Sliding availability stats — the streaming twin of the batch daily
-    summary (A5)."""
-    return (
-        events.withWatermark(ts_col, watermark)
-        .groupBy(F.window(F.col(ts_col), window_duration).alias("win"), F.col("station_id"))
-        .agg(
-            F.avg("bikes").alias("bikes_mean"),
-            F.min("bikes").alias("bikes_min"),
-            F.max("bikes").alias("bikes_max"),
-        )
-        .select(
-            F.col("win.start").alias("window_start"),
-            "station_id",
-            "bikes_mean",
-            "bikes_min",
-            "bikes_max",
-        )
-    )
-
-
 def dedup_stream(
     events: DataFrame,
     hash_cols: list[str],

@@ -322,6 +322,23 @@ _CUR_AXIS = {
 }
 
 
+# batch 0's decisions against the two-document stores {100, 101}
+_CUR_BATCH0_DECISIONS = {
+    1: "rejected_quality",
+    2: "admitted",
+    3: "rejected_exact",
+    4: "rejected_near_text",
+    5: "rejected_near_vec",
+    6: "admitted",
+    7: "rejected_within_text",
+    8: "admitted",
+    9: "rejected_within_vec",
+    20: "admitted",
+    21: "admitted",
+    22: "rejected_within_text",
+}
+
+
 def _cur_docs(spark, ids):
     return spark.createDataFrame(
         [(i, _CUR_TEXTS[i]) for i in ids], "doc_id long, text string"
@@ -377,20 +394,7 @@ def test_curation_batch_every_decision_class_and_post_state(spark, cur_dirs):
         r["doc_id"]: r
         for r in spark.read.parquet(cur_dirs["out"]).collect()
     }
-    expected = {
-        1: "rejected_quality",
-        2: "admitted",
-        3: "rejected_exact",
-        4: "rejected_near_text",
-        5: "rejected_near_vec",
-        6: "admitted",
-        7: "rejected_within_text",
-        8: "admitted",
-        9: "rejected_within_vec",
-        20: "admitted",
-        21: "admitted",
-        22: "rejected_within_text",
-    }
+    expected = _CUR_BATCH0_DECISIONS
     assert {i: r["decision"] for i, r in rows.items()} == expected
     # splits: present iff admitted; cluster-consistent through the
     # rejected middleman 22 (component {20, 21, 22} hashes on 20)
@@ -454,13 +458,12 @@ def test_curation_batch_every_decision_class_and_post_state(spark, cur_dirs):
     assert b1 == {30: "rejected_near_text", 31: "rejected_near_vec"}
 
 
-def test_curation_batch_partial_crash_between_admissions(
-    spark, cur_dirs, monkeypatch
-):
-    """VERDICT r11 ask #6: a crash in the window BETWEEN the two fenced
-    admissions (sig committed, vec not) must converge on replay — the
-    already-committed store's fence skips, the other catches up, nothing
-    double-admits, and the decisions output is byte-identical."""
+def _crash_and_replay(spark, cur_dirs, monkeypatch, fault, moved, decided):
+    """Run batch 0 with a one-shot crash injected into ``fault``, check
+    the partial state it leaves (``moved`` = store versions advanced),
+    replay the same batch id and check both stores and the decisions
+    converge on a clean run's. ``decided`` says whether the crashed
+    call had already written its decisions partition."""
     import bike_data_flow_spark.streaming.store_probe as SP
     from bike_data_flow_spark.operators.dedup import MINHASH_BANDS
     from bike_data_flow_spark.operators.vecstore import vector_store_init
@@ -478,16 +481,16 @@ def test_curation_batch_partial_crash_between_admissions(
         current_version(cur_dirs["vec"]),
     )
 
-    real = SP.admit_vector_delta
+    real = getattr(SP, fault)
     calls = {"n": 0}
 
     def crash_once(*args, **kwargs):
         calls["n"] += 1
         if calls["n"] == 1:
-            raise RuntimeError("injected crash between the two admissions")
+            raise RuntimeError(f"injected crash in {fault}")
         return real(*args, **kwargs)
 
-    monkeypatch.setattr(SP, "admit_vector_delta", crash_once)
+    monkeypatch.setattr(SP, fault, crash_once)
 
     def run():
         SP.curation_batch(
@@ -496,18 +499,23 @@ def test_curation_batch_partial_crash_between_admissions(
             dim=_CUR_DIM, tau=0.4, gate=_quality_gate, app_id="test-app",
         )
 
+    def decisions():
+        if not os.path.isdir(cur_dirs["out"]):
+            return set()  # the fault struck before the decisions write
+        return {
+            (r["doc_id"], r["decision"], r["split"])
+            for r in spark.read.parquet(cur_dirs["out"]).collect()
+        }
+
     with pytest.raises(RuntimeError, match="injected crash"):
         run()
-    # the partial state the fault leaves behind: sig admitted, vec not
-    assert current_version(cur_dirs["sig"]) == sv0 + 1
-    assert current_version(cur_dirs["vec"]) == vv0
-    crashed = {
-        (r["doc_id"], r["decision"], r["split"])
-        for r in spark.read.parquet(cur_dirs["out"]).collect()
-    }
+    # the partial state the fault leaves behind
+    assert current_version(cur_dirs["sig"]) == sv0 + moved[0]
+    assert current_version(cur_dirs["vec"]) == vv0 + moved[1]
+    crashed = decisions()
 
     run()  # replay of the same batch id (engine at-least-once)
-    # sig's fence held (no double-admit), vec caught up exactly once
+    # each store admitted batch 0 exactly once across crash + replay
     assert current_version(cur_dirs["sig"]) == sv0 + 1
     assert current_version(cur_dirs["vec"]) == vv0 + 1
     assert calls["n"] == 2
@@ -531,12 +539,37 @@ def test_curation_batch_partial_crash_between_admissions(
     }
     assert vec_counts == {i: 1 for i in set(store_ids) | admitted}
     # the replay overwrote its own decisions partition: byte-identical
-    replayed = {
-        (r["doc_id"], r["decision"], r["split"])
-        for r in spark.read.parquet(cur_dirs["out"]).collect()
-    }
-    assert replayed == crashed
+    replayed = decisions()
+    assert crashed == (replayed if decided else set())
     assert spark.read.parquet(cur_dirs["out"]).count() == len(batch0)
+    # ... and equal to a clean run's decisions
+    assert {d: dec for d, dec, _ in replayed} == _CUR_BATCH0_DECISIONS
+
+
+def test_curation_batch_partial_crash_between_admissions(
+    spark, cur_dirs, monkeypatch
+):
+    """A crash in the window BETWEEN the two fenced admissions (sig
+    committed, vec not) must converge on replay — the already-committed
+    store's fence skips, the other catches up, nothing double-admits,
+    and the decisions output is byte-identical."""
+    _crash_and_replay(
+        spark, cur_dirs, monkeypatch, "admit_vector_delta",
+        moved=(1, 0), decided=True,
+    )
+
+
+def test_curation_batch_crash_inside_overlapped_probe(
+    spark, cur_dirs, monkeypatch
+):
+    """A fault inside the vec probe chain, while the sig chain runs
+    beside it, fails the call before the decisions write and either
+    admission: neither store moves, and the replay gives a clean run's
+    decisions."""
+    _crash_and_replay(
+        spark, cur_dirs, monkeypatch, "probe_vector_pairs",
+        moved=(0, 0), decided=False,
+    )
 
 
 def test_curation_batch_scopes_to_embedded_corpus(spark, cur_dirs):

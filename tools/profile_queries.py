@@ -11,8 +11,12 @@ execution-shape counters alongside wall time:
 - task_ms:  summed executor task runtime (CPU-ish, less I/O-noise
             sensitive than wall)
 
+After each query's reps it prints one `QUERY: best=… reps=[…]` wall
+summary line.
+
 Usage: python tools/profile_queries.py QUERY [QUERY ...] [--reps=N]
-Same SPARK_GRAFT_* env contract and noop-sink methodology as bench.py.
+Same SPARK_GRAFT_* env contract and noop-sink methodology as bench.py
+(warm run, then N timed reps, clearCache + GC between queries).
 """
 
 from __future__ import annotations
@@ -63,18 +67,21 @@ def main() -> None:
         q = registry[name]
         spark.sparkContext.setJobDescription(f"warm: {name}")
         q.fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
+        walls = []
         for i in range(reps):
             spark.sparkContext.setJobDescription(f"timed[{i}]: {name}")
             j0, s0, t0 = _job_stage_task(spark)
             w0 = time.time()
             q.fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
             wall = time.time() - w0
+            walls.append(round(wall, 3))
             j1, s1, t1 = _job_stage_task(spark)
             print(
                 f"{name}[{i}]: wall={wall:.3f} jobs={j1 - j0} "
                 f"stages={s1 - s0} task_ms={t1 - t0}",
                 flush=True,
             )
+        print(f"{name}: best={min(walls)} reps={walls}", flush=True)
         spark.catalog.clearCache()
         spark.sparkContext._jvm.System.gc()
     spark.stop()
