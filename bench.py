@@ -5,8 +5,9 @@ Runs the headline queries at $SPARK_GRAFT_SF_DIR (default
 line: {"metric": ..., "value": total_sec, "unit": "sec",
 "queries": {name: sec}, "sf": ...}.
 
-Each query is fully materialized through the noop sink (computes every
-output column on executors, ships nothing to the driver).
+Every timing tool in tools/ measures through ``measure`` (warm, best of
+N, release) or its single-rep primitive ``measure_rep``; their
+docstrings hold the protocol and the counters' sources.
 """
 
 from __future__ import annotations
@@ -15,15 +16,15 @@ import json
 import os
 import sys
 import time
+from functools import partial
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
+from py4j.protocol import Py4JError  # noqa: E402
+from pyspark.sql import SparkSession  # noqa: E402
+
 from bike_data_flow_spark.queries import is_materializing, load_all  # noqa: E402
 from bike_data_flow_spark.session import get_spark  # noqa: E402
-
-
-def materialize(df) -> None:
-    df.write.format("noop").mode("overwrite").save()
 
 
 def _host_state(sf_dir: str) -> dict:
@@ -131,13 +132,20 @@ def _peak_heap_mb(spark) -> float:
     )
 
 
-def _spill_mb(spark) -> float:
-    """Total memory+disk bytes spilled across all stages so far, from
-    the AppStatusStore (present even with the UI disabled); deltas per
-    query. Returns -1.0 if the internal API moved."""
+def _stage_totals(spark, first_stage: int) -> tuple[int, float]:
+    """(task ms, spill MB) summed over the stages numbered from
+    ``first_stage`` on, from the AppStatusStore (present even with the
+    UI disabled), read after the listener bus drains so every finished
+    stage of the window is in it. The store keeps only the newest
+    ``spark.ui.retainedStages`` stages, so a difference of two totals
+    over it reads 0 or negative once a session passes that limit; the
+    stage-id filter stays exact however long the session has run.
+    Returns (-1, -1.0) if the internal API moved."""
     try:
         sc = spark.sparkContext
-        store = sc._jsc.sc().statusStore()
+        jsc = sc._jsc.sc()
+        jsc.listenerBus().waitUntilEmpty()
+        store = jsc.statusStore()
         # stageList is Scala-default-heavy: pass the empty status filter
         # (= all stages) and the compiler-generated defaults explicitly
         empty = sc._jvm.java.util.ArrayList()
@@ -145,13 +153,111 @@ def _spill_mb(spark) -> float:
             getattr(store, f"stageList$default${i}")() for i in (2, 3, 4, 5)
         ]
         it = store.stageList(empty, *args).iterator()
-        total = 0
-        while it.hasNext():
+        task_ms = spilled = 0
+        while it.hasNext():  # newest stage first
             st = it.next()
-            total += st.memoryBytesSpilled() + st.diskBytesSpilled()
-        return round(total / 2**20, 1)
-    except Exception:
-        return -1.0
+            if st.stageId() < first_stage:
+                break
+            task_ms += st.executorRunTime()
+            spilled += st.memoryBytesSpilled() + st.diskBytesSpilled()
+        return task_ms, round(spilled / 2**20, 1)
+    except Py4JError:
+        return -1, -1.0
+
+
+def measure_rep(fn, label: str) -> dict:
+    """One timed call of ``fn`` in the active session. ``fn`` takes no
+    arguments; a DataFrame it returns is materialized through the noop
+    sink (every output column computed on executors, nothing shipped to
+    the driver) inside the timed window, and ``None`` means it did its
+    own work. ``label`` becomes the description of the call's jobs.
+
+    Returns ``wall`` (s, ms-rounded) and the call's ``jobs``,
+    ``stages``, ``task_ms`` (summed executor run time) and
+    ``spill_mb`` (memory + disk). Jobs and stages are deltas of the DAG
+    scheduler's id counters, which count every job and stage however
+    long the session has run; task ms and spill come from
+    ``_stage_totals``. Every counter read sits outside the timed
+    window."""
+    spark = SparkSession.active()
+    sc = spark.sparkContext
+    dag = sc._jsc.sc().dagScheduler()
+    sc.setJobDescription(label)
+    jobs0, stages0 = dag.nextJobId(), dag.nextStageId()
+    t0 = time.time()
+    df = fn()
+    if df is not None:
+        df.write.format("noop").mode("overwrite").save()
+    wall = time.time() - t0
+    jobs1, stages1 = dag.nextJobId(), dag.nextStageId()
+    sc.setJobDescription(None)
+    task_ms, spill_mb = _stage_totals(spark, stages0)
+    return {
+        "wall": round(wall, 3),
+        "jobs": jobs1 - jobs0,
+        "stages": stages1 - stages0,
+        "task_ms": task_ms,
+        "spill_mb": spill_mb,
+    }
+
+
+def measure(fn, reps: int, label: str) -> dict:
+    """The shared measurement protocol, one block per query: one
+    untimed warm call, then ``reps`` timed calls (``measure_rep``), then
+    ``release``.
+
+    The warm call pays JVM JIT, codegen and file-index caches and builds
+    the query's own ``.cache()``/``.localCheckpoint()`` subtrees; cache
+    reuse is plan-matched, so those serve the timed calls of the SAME
+    query, and its wall time is the query's cold number. Best-of-N
+    because single-shot timings on a busy host carry ±25% scheduler
+    noise. Releasing between queries stops cache entries accumulating
+    across a long session: every cached subtree of the heavy kNN/ANN
+    queries staying registered inflated CacheManager plan-matching and
+    BlockManager pressure for every later query (r6 shared-16: 10.9 s
+    accumulated vs 5.9 s grouped, BENCH_COMPARE.md "Bench hygiene").
+
+    Returns ``warm`` and ``reps`` (the ``measure_rep`` dicts), ``best``
+    (least timed wall, None for 0 reps) and, over the timed window, the
+    JVM counters that attribute a timing anomaly from the artifact
+    alone: ``gc_ms``/``gc_n`` deltas, post-reset ``peak_heap_mb`` and
+    ``spill_mb``. Elevated GC or peak heap marks memory pressure, spill
+    an under-sized shuffle, and flat counters with inflated wall time
+    external host noise."""
+    warm = measure_rep(fn, f"warm: {label}")
+    spark = SparkSession.active()
+    _reset_heap_peaks(spark)
+    gc0_ms, gc0_n = _gc_totals(spark)
+    timed = [measure_rep(fn, f"timed[{i}]: {label}") for i in range(reps)]
+    gc1_ms, gc1_n = _gc_totals(spark)
+    spill = [r["spill_mb"] for r in timed]
+    out = {
+        "warm": warm,
+        "reps": timed,
+        "best": min((r["wall"] for r in timed), default=None),
+        "gc_ms": gc1_ms - gc0_ms,
+        "gc_n": gc1_n - gc0_n,
+        "peak_heap_mb": _peak_heap_mb(spark),
+        "spill_mb": round(sum(spill), 1) if min(spill, default=0) >= 0 else -1.0,
+    }
+    release()
+    return out
+
+
+def release() -> None:
+    """Drop every cached relation of the active session and collect the
+    JVM heap, so the next query starts from the same state."""
+    spark = SparkSession.active()
+    spark.catalog.clearCache()
+    spark.sparkContext._jvm.System.gc()
+
+
+def rep_line(rep: dict) -> str:
+    """The counter fields the tools print for one ``measure_rep``."""
+    return (
+        f"wall={rep['wall']:.3f} jobs={rep['jobs']} "
+        f"stages={rep['stages']} task_ms={rep['task_ms']}"
+    )
 
 
 def main() -> None:
@@ -162,48 +268,16 @@ def main() -> None:
     registry = load_all()
     bench_queries = [q for q in registry.values() if q.bench]
 
-    # Per-query block: warm once (JVM JIT + codegen + file-index caches,
-    # and the query's own .cache()/.localCheckpoint() subtrees), time
-    # steady-state best-of-2, then clearCache + GC before the next query.
-    # Cache reuse is plan-matched, so the warm run's cached subtrees serve
-    # the timed runs of the SAME query; clearing between queries stops
-    # cache entries accumulating across the 30-query session — measured
-    # root cause of the r6 shared-16 +25% inflation (every cached subtree
-    # of the 14 heavy kNN/ANN queries stayed registered, inflating
-    # CacheManager plan-matching and BlockManager pressure for every
-    # later query: shared-16 10.9 s accumulated vs 5.9 s grouped on the
-    # same host/session — see BENCH_COMPARE.md "Bench hygiene").
-    # Best-of-2: single-shot timings on a busy host carry ±25% scheduler
-    # noise that swamps real deltas.
-    # Per-query JVM counters (GC time/count deltas, post-reset peak
-    # heap, spill deltas) ride along in the JSON so a driver-host
-    # timing anomaly is attributable from the artifact alone — an
-    # elevated gc_ms/peak_heap_mb marks memory pressure, a spill delta
-    # marks an under-sized shuffle, and a query with flat counters but
-    # inflated wall time marks external host noise.
+    # Per-query block: measure's protocol with best-of-2; the JVM and
+    # shape counters ride along in the sibling artifact.
     timings: dict[str, float] = {}
     counters: dict[str, dict] = {}
     for q in bench_queries:
-        materialize(q.fn(spark, sf_dir))
-        _reset_heap_peaks(spark)
-        gc0_ms, gc0_n = _gc_totals(spark)
-        sp0 = _spill_mb(spark)
-        best = float("inf")
-        for _ in range(2):
-            t0 = time.time()
-            materialize(q.fn(spark, sf_dir))
-            best = min(best, time.time() - t0)
-        gc1_ms, gc1_n = _gc_totals(spark)
-        sp1 = _spill_mb(spark)
-        timings[q.name] = round(best, 3)
+        m = measure(partial(q.fn, spark, sf_dir), 2, q.name)
+        timings[q.name] = m["best"]
         counters[q.name] = {
-            "gc_ms": gc1_ms - gc0_ms,
-            "gc_n": gc1_n - gc0_n,
-            "peak_heap_mb": _peak_heap_mb(spark),
-            "spill_mb": round(sp1 - sp0, 1) if sp0 >= 0 and sp1 >= 0 else -1.0,
-        }
-        spark.catalog.clearCache()
-        spark.sparkContext._jvm.System.gc()
+            k: m[k] for k in ("gc_ms", "gc_n", "peak_heap_mb", "spill_mb")
+        } | {k: [r[k] for r in m["reps"]] for k in ("jobs", "stages", "task_ms")}
 
     total = round(sum(timings.values()), 3)
     # Split the headline (VERDICT r10 #4): the scratch-committing /

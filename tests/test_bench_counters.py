@@ -1,18 +1,30 @@
-"""bench.py's per-query JVM counters (GC deltas, post-reset peak heap,
-spill deltas) must read real values through the Py4J management APIs —
-the attribution story in BENCH_COMPARE.md depends on these not silently
-returning sentinels."""
+"""bench.py's measurement core and per-query JVM counters (GC deltas,
+post-reset peak heap, jobs, stages, task ms, spill) must read real,
+exact values through the Py4J APIs — the attribution story in
+BENCH_COMPARE.md depends on these not silently returning sentinels or
+drifting in a long session."""
 
 from __future__ import annotations
 
+import ast
+import json
 import os
+import pathlib
+import re
+import subprocess
 import sys
+import textwrap
 
-sys.path.insert(
-    0, os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+ROOT = pathlib.Path(__file__).resolve().parent.parent
+sys.path.insert(0, str(ROOT))
+
+from bench import (  # noqa: E402
+    _gc_totals,
+    _peak_heap_mb,
+    _reset_heap_peaks,
+    measure,
+    measure_rep,
 )
-
-from bench import _gc_totals, _peak_heap_mb, _reset_heap_peaks, _spill_mb  # noqa: E402
 
 
 def test_gc_totals_monotone_nonnegative(spark):
@@ -69,10 +81,110 @@ def test_contract_line_fits_driver_capture_window():
 
 
 def test_spill_reader_returns_real_total(spark):
-    # the AppStatusStore path must resolve (not the -1.0 sentinel): a
+    # the AppStatusStore path must resolve (not the -1 sentinels): a
     # moved internal API would silently break attribution
-    spark.range(10).selectExpr("sum(id)").collect()
-    assert _spill_mb(spark) >= 0.0
+    m = measure(lambda: spark.range(10).selectExpr("sum(id)"), 1, "spill")
+    for rep in (m["warm"], *m["reps"]):
+        assert rep["spill_mb"] >= 0.0 and rep["task_ms"] >= 0
+    assert m["spill_mb"] >= 0.0
+
+
+def test_rep_reports_known_job_and_stage_counts(spark):
+    sc = spark.sparkContext
+
+    def three_rdd_actions():
+        for _ in range(3):  # an RDD count is exactly one single-stage job
+            sc.parallelize(range(8), 2).count()
+
+    rep = measure_rep(three_rdd_actions, "three jobs")
+    assert (rep["jobs"], rep["stages"]) == (3, 3)
+    assert rep["wall"] > 0.0
+    # a returned DataFrame is materialized (one scan-only noop write)
+    rep = measure_rep(lambda: spark.range(10), "noop write")
+    assert (rep["jobs"], rep["stages"]) == (1, 1)
+
+
+_LONG_SESSION = textwrap.dedent(
+    """
+    import json
+    from pyspark.sql import SparkSession, functions as F
+    from bench import measure
+
+    spark = (
+        SparkSession.builder.master("local[2]")
+        .config("spark.ui.enabled", "false")
+        .config("spark.ui.retainedJobs", "10")
+        .config("spark.ui.retainedStages", "10")
+        .config("spark.sql.adaptive.enabled", "false")
+        .config("spark.sql.shuffle.partitions", "2")
+        .config("spark.driver.memory", "1g")
+        .getOrCreate()
+    )
+    jsc = spark.sparkContext._jsc.sc()
+    dag, store = jsc.dagScheduler(), jsc.statusStore()
+    for _ in range(30):  # 30 jobs, 60 stages: far past both limits
+        spark.range(10).count()
+    starts = []
+
+    def probe():
+        starts.append(dag.nextStageId())
+        return spark.range(0, 4000, 1, 4).groupBy(F.col("id") % 3).count()
+
+    m = measure(probe, 3, "probe")
+    defaults = [getattr(store, f"stageData$default${i}")() for i in (2, 3, 4, 5)]
+
+    def run_ms(stage_id):
+        seq = store.stageData(stage_id, *defaults)
+        return sum(seq.apply(i).executorRunTime() for i in range(seq.size()))
+
+    truth = [
+        sum(run_ms(s) for s in range(s0, s0 + rep["stages"]))
+        for s0, rep in zip(starts[1:], m["reps"])
+    ]
+    print(json.dumps({"reps": m["reps"], "truth": truth}))
+    spark.stop()
+    """
+)
+
+
+def test_rep_counters_exact_past_status_store_retention():
+    """The status store keeps only the newest retainedJobs/retainedStages
+    entries; counting or summing over it drifts to 0 or negative once a
+    session passes that limit. Each rep must still read its own exact
+    jobs, stages and task ms (checked per stage id against the store)."""
+    env = dict(os.environ, PYTHONPATH=str(ROOT))
+    out = subprocess.run(
+        [sys.executable, "-c", _LONG_SESSION],
+        cwd=ROOT, env=env, capture_output=True, text=True, timeout=300,
+    )
+    assert out.returncode == 0, out.stderr[-3000:]
+    got = json.loads(out.stdout.strip().splitlines()[-1])
+    for rep, truth in zip(got["reps"], got["truth"], strict=True):
+        # one noop write of scan -> partial agg -> exchange -> final agg
+        assert (rep["jobs"], rep["stages"]) == (1, 2), got
+        assert rep["task_ms"] == truth > 0, got
+
+
+def test_measurement_loops_only_in_the_core():
+    """Timing tools measure through bench.measure / measure_rep only:
+    no noop materialize, status-store counter reader or forced GC may
+    appear in bench.py or tools/*.py outside the core functions."""
+    banned = re.compile(r'format\("noop"\)|statusStore\(|System\.gc\(\)')
+    core = {"_stage_totals", "measure_rep", "measure", "release"}
+    bench = ROOT / "bench.py"
+    allowed = {
+        n
+        for f in ast.parse(bench.read_text()).body
+        if isinstance(f, ast.FunctionDef) and f.name in core
+        for n in range(f.lineno, f.end_lineno + 1)
+    }
+    hits = [
+        f"{path.relative_to(ROOT)}:{n}: {line.strip()}"
+        for path in [bench, *sorted((ROOT / "tools").glob("*.py"))]
+        for n, line in enumerate(path.read_text().splitlines(), 1)
+        if banned.search(line) and not (path == bench and n in allowed)
+    ]
+    assert hits == []
 
 
 def test_host_state_fields_present_and_sane():

@@ -16,20 +16,21 @@ Usage:
 
 A = first value, B = second value. Current session defaults are in
 bike_data_flow_spark/session.py (A should normally be the committed
-default so "A" mirrors the shipped tree).
+default so "A" mirrors the shipped tree). Each rep is one
+bench.measure_rep; counter sources are in its docstring.
 """
 
 from __future__ import annotations
 
 import os
 import sys
-import time
+from functools import partial
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from bench import measure_rep, release, rep_line  # noqa: E402
 from bike_data_flow_spark.queries import load_all  # noqa: E402
 from bike_data_flow_spark.session import get_spark  # noqa: E402
-from tools.profile_queries import _job_stage_task  # noqa: E402
 
 
 def main() -> None:
@@ -57,49 +58,32 @@ def main() -> None:
 
     results: dict[str, dict[str, list]] = {}
     for name in names:
-        q = registry[name]
+        fn = partial(registry[name].fn, spark, sf_dir)
         rows: dict[str, list] = {"A": [], "B": []}
         for first in ("A", "B"):  # both orders
             order = [first, "B" if first == "A" else "A"]
             for side in order:  # warm each side once per pass
                 set_side(side)
-                spark.sparkContext.setJobDescription(f"warm[{side}]: {name}")
-                q.fn(spark, sf_dir).write.format("noop").mode(
-                    "overwrite"
-                ).save()
+                measure_rep(fn, f"warm[{side}]: {name}")
             for i in range(reps):
                 for side in order:
                     set_side(side)
-                    spark.sparkContext.setJobDescription(
-                        f"timed[{side}{i}]: {name}"
-                    )
-                    j0, s0, t0 = _job_stage_task(spark)
-                    w0 = time.time()
-                    q.fn(spark, sf_dir).write.format("noop").mode(
-                        "overwrite"
-                    ).save()
-                    wall = time.time() - w0
-                    j1, s1, t1 = _job_stage_task(spark)
-                    rows[side].append(
-                        (wall, j1 - j0, s1 - s0, t1 - t0, first)
-                    )
+                    r = measure_rep(fn, f"timed[{side}{i}]: {name}")
+                    rows[side].append(r)
                     print(
-                        f"{name} [{side} pass={first}] rep{i}: "
-                        f"wall={wall:.3f} jobs={j1 - j0} stages={s1 - s0} "
-                        f"task_ms={t1 - t0}",
+                        f"{name} [{side} pass={first}] rep{i}: {rep_line(r)}",
                         flush=True,
                     )
-            spark.catalog.clearCache()
-            spark.sparkContext._jvm.System.gc()
+            release()
         results[name] = rows
 
     print("\n== summary (best / median wall; jobs; task_ms median) ==")
     for name, rows in results.items():
         line = [name]
         for side in ("A", "B"):
-            walls = sorted(r[0] for r in rows[side])
-            tasks = sorted(r[3] for r in rows[side])
-            jobs = rows[side][0][1]
+            walls = sorted(r["wall"] for r in rows[side])
+            tasks = sorted(r["task_ms"] for r in rows[side])
+            jobs = rows[side][0]["jobs"]
             line.append(
                 f"{side}: best={walls[0]:.3f} "
                 f"med={walls[len(walls) // 2]:.3f} jobs={jobs} "

@@ -3,30 +3,28 @@
 bench.py warms each query once and times best-of-2 with plan-matched
 cache reuse, so a query whose plan contains a lazy ``.cache()`` gets
 its cached subtrees pre-materialized by the warm run. That is the
-documented warm-rep semantics (see bench.py's per-query block
-comment) — but it means the bench walls for the r12 pin→cache swaps
-are warm-flattered (VERDICT r12 "What's wrong" #2). This tool
-publishes the scale-honest number: each rep clears the cache first
-and times the FIRST materialize, so every cached subtree is built
-inside the timed action.
+documented warm-rep semantics — but it means the bench walls for the
+r12 pin→cache swaps are warm-flattered (VERDICT r12 "What's wrong"
+#2). This tool publishes the scale-honest number: each rep is the warm
+call of a fresh ``measure`` block with no timed reps, so every cached
+subtree is built inside the timed action and released after it.
 
 Usage: python tools/cold_time.py QUERY [QUERY ...] [--reps=N]
-Same SPARK_GRAFT_* env contract and noop-sink methodology as bench.py.
-Reports per-rep wall plus the deterministic jobs/stages/task_ms
-counters (host-noise protocol, OPTIMIZATION_r12.md).
+Same SPARK_GRAFT_* env contract as bench.py; protocol and counter
+sources: bench.measure.
 """
 
 from __future__ import annotations
 
 import os
 import sys
-import time
+from functools import partial
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from bench import measure, rep_line  # noqa: E402
 from bike_data_flow_spark.queries import load_all  # noqa: E402
 from bike_data_flow_spark.session import get_spark  # noqa: E402
-from tools.profile_queries import _job_stage_task  # noqa: E402
 
 
 def main() -> None:
@@ -40,30 +38,15 @@ def main() -> None:
     registry = load_all()
     # one throwaway query warms the JVM/JIT and the parquet footer
     # caches so rep 0 of the FIRST query isn't paying JVM start
-    spark.sparkContext.setJobDescription("jvm-warm")
-    registry["pricing_summary"].fn(spark, sf_dir).write.format("noop").mode(
-        "overwrite"
-    ).save()
+    measure(partial(registry["pricing_summary"].fn, spark, sf_dir), 0, "jvm-warm")
     for name in names:
-        q = registry[name]
+        fn = partial(registry[name].fn, spark, sf_dir)
         walls = []
         for i in range(reps):
-            spark.catalog.clearCache()
-            spark.sparkContext._jvm.System.gc()
-            spark.sparkContext.setJobDescription(f"cold[{i}]: {name}")
-            j0, s0, t0 = _job_stage_task(spark)
-            w0 = time.time()
-            q.fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-            wall = time.time() - w0
-            j1, s1, t1 = _job_stage_task(spark)
-            walls.append(wall)
-            print(
-                f"{name} cold[{i}]: wall={wall:.3f} jobs={j1 - j0} "
-                f"stages={s1 - s0} task_ms={t1 - t0}",
-                flush=True,
-            )
+            cold = measure(fn, 0, f"cold[{i}]: {name}")["warm"]
+            walls.append(cold["wall"])
+            print(f"{name} cold[{i}]: {rep_line(cold)}", flush=True)
         print(f"{name} cold best={min(walls):.3f}", flush=True)
-        spark.catalog.clearCache()
     spark.stop()
 
 

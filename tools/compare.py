@@ -6,15 +6,17 @@ tool times every oracle-checked query on both engines over the same
 parquet (Spark: noop sink materialization; DuckDB: fetch-all) and
 writes a table with ratios.
 
-Methodology (VERDICT r1 #8): the headline number is warm best-of-N,
-but the COLD first run (JIT, codegen, file-index caches all empty) is
-recorded per query as well so warmup isn't hiding cold cost.
+Methodology (VERDICT r1 #8): the Spark side is one bench.measure block
+per query (protocol in its docstring); the headline number is its warm
+best-of-N, and its warm call's wall is recorded as the COLD first run
+(JIT, codegen, file-index caches all empty) so warmup isn't hiding cold
+cost.
 `streamed_event_type_counts` boots a real Structured Streaming query
 per call — a correctness gate for the streaming engine, not a batch
 perf path — so it is reported in its own section and excluded from
 the total (keeping round-over-round totals honest).
 
-    python tools/compare.py [sf_dir] [--repeat N]
+    python tools/compare.py [sf_dir]
 """
 
 from __future__ import annotations
@@ -23,11 +25,13 @@ import os
 import statistics
 import sys
 import time
+from functools import partial
 
 import duckdb
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from bench import measure  # noqa: E402
 from bike_data_flow_spark.queries import load_all  # noqa: E402
 from bike_data_flow_spark.session import get_spark  # noqa: E402
 from bike_data_flow_spark.tables import TABLES  # noqa: E402
@@ -44,7 +48,9 @@ from bike_data_flow_spark.queries import is_materializing as _pinned  # noqa: E4
 
 
 def main() -> None:
-    args = [a for a in sys.argv[1:] if not a.startswith("--")]
+    args = sys.argv[1:]
+    if any(a.startswith("--") for a in args) or len(args) > 1:
+        sys.exit(f"usage: python tools/compare.py [sf_dir] (got {args})")
     sf_dir = args[0] if args else "/root/testdata/sf0.1"
     repeat = 3
 
@@ -61,16 +67,9 @@ def main() -> None:
     for q in registry.values():
         if q.oracle is None:
             continue
-        spark_times, duck_times = [], []
+        duck_times = []
         try:
-            # cold = very first execution of this plan shape in the session
-            t0 = time.time()
-            q.fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-            cold = time.time() - t0
-            for _ in range(repeat):
-                t0 = time.time()
-                q.fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-                spark_times.append(time.time() - t0)
+            m = measure(partial(q.fn, spark, sf_dir), repeat, q.name)
             con.execute(q.oracle).fetchall()
             for _ in range(repeat):
                 t0 = time.time()
@@ -79,17 +78,12 @@ def main() -> None:
         except Exception as e:  # noqa: BLE001
             print(f"skip {q.name}: {e}")
             continue
-        rows.append((q.name, min(spark_times), min(duck_times), cold))
+        cold = m["warm"]["wall"]
+        rows.append((q.name, m["best"], min(duck_times), cold))
         print(
-            f"{q.name}: spark {min(spark_times):.3f}s "
+            f"{q.name}: spark {m['best']:.3f}s "
             f"(cold {cold:.3f}s) duck {min(duck_times):.3f}s"
         )
-        # per-query cache lifetime, same hygiene as bench.py: without
-        # this, every query's cached/localCheckpointed subtrees stay
-        # registered for the whole ~220-query session and inflate later
-        # queries (the r6 shared-16 anomaly — see "Bench hygiene")
-        spark.catalog.clearCache()
-        spark.sparkContext._jvm.System.gc()
 
     pinned = [r for r in rows if _pinned(r[0])]
     rows = [r for r in rows if not _pinned(r[0])]

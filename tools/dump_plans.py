@@ -15,8 +15,6 @@ ids, statistics and all — so a reader can see exact plan shapes
 
 from __future__ import annotations
 
-import contextlib
-import io
 import os
 import sys
 
@@ -24,6 +22,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from bike_data_flow_spark.queries import load_all  # noqa: E402
 from bike_data_flow_spark.session import get_spark  # noqa: E402
+from tools.plan_snapshots import explain_text  # noqa: E402
 
 PLANS_DIR = os.path.join(
     os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "plans"
@@ -49,11 +48,7 @@ def main() -> None:
         elif not q.bench:
             continue
         try:
-            df = q.fn(spark, sf_dir)
-            buf = io.StringIO()
-            with contextlib.redirect_stdout(buf):
-                df.explain("formatted")
-            plan = buf.getvalue()
+            plan = explain_text(q.fn(spark, sf_dir))
         except Exception as e:  # noqa: BLE001
             plan = f"EXPLAIN FAILED: {e}\n"
         path = os.path.join(out_dir, f"{q.name}_{tag}.txt")

@@ -75,6 +75,14 @@ def canonicalize(plan: str) -> str:
     return "\n".join(out) + "\n"
 
 
+def explain_text(df) -> str:
+    """The raw ``df.explain("formatted")`` output, captured from stdout."""
+    buf = io.StringIO()
+    with contextlib.redirect_stdout(buf):
+        df.explain("formatted")
+    return buf.getvalue()
+
+
 def current_plan(spark, q, sf_dir: str = SF_DIR) -> str:
     # Deterministic cache state: queries that EXECUTE during plan
     # construction (connected components' convergence probe) leave
@@ -83,11 +91,7 @@ def current_plan(spark, q, sf_dir: str = SF_DIR) -> str:
     # whatever the session cached before. Clearing first makes the
     # materialization history identical in the generator and the test.
     spark.catalog.clearCache()
-    df = q.fn(spark, sf_dir)
-    buf = io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        df.explain("formatted")
-    return canonicalize(buf.getvalue())
+    return canonicalize(explain_text(q.fn(spark, sf_dir)))
 
 
 def main() -> None:

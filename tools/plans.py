@@ -7,8 +7,6 @@ window limits, exchanges) highlighted. Run after plan-affecting changes:
 
 from __future__ import annotations
 
-import io
-import contextlib
 import os
 import re
 import sys
@@ -17,6 +15,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from bike_data_flow_spark.queries import load_all  # noqa: E402
 from bike_data_flow_spark.session import get_spark  # noqa: E402
+from tools.plan_snapshots import explain_text  # noqa: E402
 
 HIGHLIGHT = re.compile(
     r"PushedFilters|ReadSchema|BroadcastHashJoin|SortMergeJoin|ShuffledHashJoin"
@@ -38,11 +37,7 @@ def main() -> None:
     for q in registry.values():
         if not q.bench:
             continue
-        df = q.fn(spark, sf_dir)
-        buf = io.StringIO()
-        with contextlib.redirect_stdout(buf):
-            df.explain("formatted")
-        plan = buf.getvalue()
+        plan = explain_text(q.fn(spark, sf_dir))
         exchanges = len(re.findall(r"\bExchange\b", plan))
         key = [
             ln.strip()

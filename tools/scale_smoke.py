@@ -35,11 +35,13 @@ from __future__ import annotations
 import argparse
 import os
 import sys
-import time
+from functools import partial
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F  # noqa: E402
+
+from bench import measure  # noqa: E402
 
 BASE = "/root/testdata/sf0.1"
 TENX = "/tmp/scale_smoke_10x"
@@ -300,38 +302,6 @@ def generate_100x(spark) -> None:
     open(marker, "w").close()
 
 
-def timed(spark, fn, sf_dir, reps=2) -> tuple[float, dict]:
-    """(best-of-reps seconds, JVM counter deltas around the timed reps).
-    Counters ride along so a surprising ratio is attributable from the
-    artifact alone (bench.py's protocol): flat spill + GC proportional
-    to wall time = compute growth; ballooning peak heap or spill =
-    memory pressure; flat counters + inflated wall = host noise."""
-    from bench import _gc_totals, _peak_heap_mb, _reset_heap_peaks, _spill_mb
-
-    def run():
-        fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-
-    run()  # warm
-    _reset_heap_peaks(spark)
-    gc0_ms, _gc0_n = _gc_totals(spark)
-    sp0 = _spill_mb(spark)
-    best = float("inf")
-    for _ in range(reps):
-        t0 = time.time()
-        run()
-        best = min(best, time.time() - t0)
-    gc1_ms, _gc1_n = _gc_totals(spark)
-    sp1 = _spill_mb(spark)
-    counters = {
-        "gc_ms": gc1_ms - gc0_ms,
-        "peak_heap_mb": _peak_heap_mb(spark),
-        "spill_mb": round(sp1 - sp0, 1) if sp0 >= 0 and sp1 >= 0 else -1.0,
-    }
-    spark.catalog.clearCache()
-    spark.sparkContext._jvm.System.gc()
-    return round(best, 3), counters
-
-
 def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--show-blowup", action="store_true")
@@ -351,28 +321,36 @@ def main() -> None:
     rows = []
     for name in QUERIES:
         q = registry[name]
-        t_base, c_base = timed(spark, q.fn, BASE)
+        # each leg is one bench.measure block (best-of-2); its JVM
+        # counters make a surprising ratio attributable from the
+        # artifact alone (see measure's docstring)
+        base = measure(partial(q.fn, spark, BASE), 2, f"{name}@base")
         if name in KNN_DIAL:
             S.N_HYPERPLANES = 8  # the 10×-deployment dial setting
         if name in PPJOIN_DIAL:
             T3.PPJOIN_THRESHOLD = PPJOIN_DIAL[name]
         if name in FS_DIAL:
             LK.BLOCK_STRIPE_CAP = FS_DIAL[name]
-        t_tenx, c_tenx = timed(spark, q.fn, TENX)
+        tenx = measure(partial(q.fn, spark, TENX), 2, f"{name}@10x")
         S.N_HYPERPLANES = 4
         T3.PPJOIN_THRESHOLD = None
         LK.BLOCK_STRIPE_CAP = None
-        rows.append(
-            (name, t_base, t_tenx, round(t_tenx / t_base, 2), c_base, c_tenx)
-        )
-        print(rows[-1], flush=True)
+        ratio = round(tenx["best"] / base["best"], 2)
+        rows.append((name, base["best"], tenx["best"], ratio, base, tenx))
+        print(rows[-1][:4], flush=True)
 
-    ppjoin_fixed, _ = timed(
-        spark, registry["prefix_filter_jaccard_pairs"].fn, TENX
-    )
+    ppjoin_fixed = measure(
+        partial(registry["prefix_filter_jaccard_pairs"].fn, spark, TENX),
+        2,
+        "prefix_filter_jaccard_pairs@10x fixed tau",
+    )["best"]
     print(("prefix_filter_jaccard_pairs@10x, FIXED tau=0.6", ppjoin_fixed), flush=True)
 
-    fs_fixed, _ = timed(spark, registry["fs_linkage_scores"].fn, TENX)
+    fs_fixed = measure(
+        partial(registry["fs_linkage_scores"].fn, spark, TENX),
+        2,
+        "fs_linkage_scores@10x unstriped",
+    )["best"]
     print(("fs_linkage_scores@10x, UNSTRIPED", fs_fixed), flush=True)
     fs_dialed = next(r[2] for r in rows if r[0] == "fs_linkage_scores")
 
@@ -466,13 +444,13 @@ def main() -> None:
         table = os.path.join(d, "store")
         G.signature_store_init(store_docs, table)
 
-        def probe(spark_, _sf_dir, _table=table):
+        def probe(_table=table):
             return G.incremental_lsh_pairs(
-                spark_, delta_docs, _table, commit=False,
+                spark, delta_docs, _table, commit=False,
                 include_within=False,
             )
 
-        probe_times.append(timed(spark, probe, src)[0])
+        probe_times.append(measure(probe, 2, f"store probe@{src}")["best"])
         shutil.rmtree(d, ignore_errors=True)
     print(("fixed-delta store probe base/10x", probe_times), flush=True)
 
@@ -538,16 +516,8 @@ def main() -> None:
                 gate=_quality_gate, admit=False,
             )
 
-        run()  # warm
-        best = float("inf")
-        for _ in range(2):
-            t0 = time.time()
-            run()
-            best = min(best, time.time() - t0)
-        funnel_times.append(round(best, 3))
+        funnel_times.append(measure(run, 2, f"curation funnel@{src}")["best"])
         S.N_HYPERPLANES = 4
-        spark.catalog.clearCache()
-        spark.sparkContext._jvm.System.gc()
         shutil.rmtree(d, ignore_errors=True)
     print(
         ("fixed-delta curation funnel base/10x/100x", funnel_times),
@@ -559,14 +529,20 @@ def main() -> None:
     # the expected shape is ≤ ~100× wall on 32 fixed cores with flat
     # spill (linear work, no super-linear term from the composition).
     generate_100x(spark)
-    t_100x, c_100x = timed(spark, registry["curation_v2"].fn, HUNX, reps=1)
+    c_100x = measure(
+        partial(registry["curation_v2"].fn, spark, HUNX), 1, "curation_v2@100x"
+    )
+    t_100x = c_100x["best"]
     print(("curation_v2@100x", t_100x, c_100x), flush=True)
 
     blowup = None
     if args.show_blowup:
-        t0, _ = timed(spark, registry["knn_graph_edges"].fn, TENX)
-        blowup = t0
-        print(("knn_graph_edges@10x, FIXED planes=4", t0), flush=True)
+        blowup = measure(
+            partial(registry["knn_graph_edges"].fn, spark, TENX),
+            2,
+            "knn_graph_edges@10x fixed planes",
+        )["best"]
+        print(("knn_graph_edges@10x, FIXED planes=4", blowup), flush=True)
 
     lines = [
         "# SCALE_SMOKE — 10× fact-table smoke (deterministic, seeded by construction)",
