@@ -20,6 +20,13 @@ Spark-first design: one `spark.read.text` scan (line mode), all
 transforms as Column expressions — a single narrow stage, no shuffle,
 no Python. At 100 TB the parser is embarrassingly parallel and the
 file listing/partition pruning comes from the dt= directory layout.
+
+A day is read as its `dt=` *directory* with a `pathGlobFilter` of
+`RAW_FILE_GLOB`, so the file index gets one root and lists it on the
+driver. A *file* glob (`dt=X/*.txt`) would hand it one root per file,
+and above `spark.sql.sources.parallelPartitionDiscovery.threshold` (32
+roots) the listing becomes a Spark job of its own, run while the
+DataFrame is being built.
 """
 
 from __future__ import annotations
@@ -28,6 +35,9 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 FILENAME_TS_REGEX = r"wrm_stations_(\d{4}-\d{2}-\d{2}_\d{2}-\d{2}-\d{2})\.txt$"
+# The landing files a read admits, as a `pathGlobFilter` on file names;
+# it keeps out the `.tmp` files `LandingZone.land` renames into place.
+RAW_FILE_GLOB = "*.txt"
 _BOOL_TRUE = ("true",)  # compared lower-cased; everything else → False
 
 
@@ -172,13 +182,16 @@ def read_raw_partition(
 
     Reading the whole dt= directory in ONE spark.read.text call makes
     the reference's per-file loop + pd.concat (processed_all.py:223,
-    U1) disappear: the union is the scan.
+    U1) disappear: the union is the scan. The roots are directories
+    filtered to `RAW_FILE_GLOB`: one for a day, whose build lists it on
+    the driver and starts no job, or one per day (`dt=*`) for a
+    backfill, not one per file.
     """
-    # one dt= directory, or every partition in one scan (the dt=* glob
-    # resolves at listing time — still a single job over all days)
-    pattern = (
-        f"{landing_dir}/dt={dt}/*.txt" if dt else f"{landing_dir}/dt=*/*.txt"
+    days = f"{landing_dir}/dt={dt}" if dt else f"{landing_dir}/dt=*"
+    lines = (
+        spark.read.option("pathGlobFilter", RAW_FILE_GLOB)
+        .text(days)
+        .select("value", "_metadata")
     )
-    lines = spark.read.text(pattern).select("value", "_metadata")
     parsed = with_lineage(parse_raw_lines(lines))
     return parsed.drop("value", "_metadata")

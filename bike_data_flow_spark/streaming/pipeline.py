@@ -8,8 +8,14 @@ Per micro-batch (foreachBatch):
   2. re-read ALL raw files of each touched dt and rebuild the whole
      day (the reference's idempotent overwrite-by-recompute, ST4 —
      an intentional deviation from pure incremental streaming,
-     SURVEY §7.4.4)
+     SURVEY §7.4.4). The re-read is one scan of the day's directory,
+     listed on the driver; a per-file glob would start a listing job
+     inside every batch once a day holds more than 32 files.
   3. parse → enhance → dynamic-partition-overwrite parquet
+
+The stream and the rebuild admit the same files, `parse.RAW_FILE_GLOB`,
+so a `.tmp` file caught between its write and its rename by a listing
+never enters a batch.
 
 Late files for old days therefore re-trigger exactly that day's
 rebuild, like the reference's partitioned RunRequests.
@@ -25,7 +31,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from ..operators.enhance import enhance, write_enhanced
-from ..operators.parse import read_raw_partition
+from ..operators.parse import RAW_FILE_GLOB, read_raw_partition
 
 DT_REGEX = re.compile(r"dt=(\d{4}-\d{2}-\d{2})")
 
@@ -66,7 +72,7 @@ def start_pipeline(
     catch-up mode); otherwise a 30 s processing-time trigger mirrors
     the sensor cadence (ST1).
     """
-    reader = spark.readStream.format("text")
+    reader = spark.readStream.format("text").option("pathGlobFilter", RAW_FILE_GLOB)
     if max_files_per_trigger:
         reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
     stream = (

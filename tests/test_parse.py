@@ -3,6 +3,9 @@
 
 from __future__ import annotations
 
+import ast
+import pathlib
+import re
 from datetime import datetime
 
 from pyspark.sql import functions as F
@@ -10,7 +13,7 @@ from pyspark.sql import functions as F
 from bike_data_flow_spark.operators.parse import read_raw_partition
 from bike_data_flow_spark.schemas import PROCESSED_SCHEMA
 
-from tests.conftest import BAD_NUMERIC, GOOD_ROWS, write_raw_file
+from tests.conftest import BAD_NUMERIC, GOOD_ROWS, HEADER, write_raw_file
 
 
 def test_good_rows_parse_with_types(spark, landing):
@@ -110,3 +113,113 @@ def test_header_only_file_contributes_nothing(spark, tmp_path):
 def test_all_files_of_partition_unioned(spark, landing):
     df = read_raw_partition(spark, str(landing), "2025-05-01")
     assert df.select("s3_source_key").distinct().count() == 2
+
+
+# --- one driver-listed scan per day -----------------------------------------
+
+
+def _write_day(root, dt: str, files: int) -> dict[tuple[str, str], datetime]:
+    """`files` snapshots of one day, each with its own station id, plus
+    an in-flight `.tmp`; returns {(station_id, source key): file ts}."""
+    expected = {}
+    for i in range(files):
+        ts = f"{dt}_10-{i // 60:02d}-{i % 60:02d}"
+        sid = f"{dt[-2:]}{i:03d}"
+        p = write_raw_file(root, dt, ts, [sid + GOOD_ROWS[0][3:]])
+        expected[(sid, f"file:{p}")] = datetime.strptime(ts, "%Y-%m-%d_%H-%M-%S")
+    (root / f"dt={dt}" / f"wrm_stations_{dt}_23-59-59.tmp").write_text(
+        "\n".join([HEADER, "tmp" + GOOD_ROWS[0][3:]]) + "\n"
+    )
+    return expected
+
+
+def _build_jobs_and_rows(spark, root, dt):
+    sched = spark.sparkContext._jsc.sc().dagScheduler()
+    before = sched.nextJobId()
+    df = read_raw_partition(spark, str(root), dt)
+    jobs = sched.nextJobId() - before
+    rows = df.select("station_id", "s3_source_key", "file_timestamp").collect()
+    return jobs, {(r[0], r[1]): r[2] for r in rows}, len(rows)
+
+
+def test_day_of_many_files_builds_without_a_listing_job(spark, tmp_path):
+    # 40 files is above parallelPartitionDiscovery.threshold (32): a
+    # per-file glob would list them in a Spark job while building.
+    root = tmp_path / "raw"
+    expected = _write_day(root, "2025-08-01", 40)
+    jobs, got, n = _build_jobs_and_rows(spark, root, "2025-08-01")
+    assert jobs == 0
+    assert n == 40 and got == expected
+
+
+def test_backfill_of_many_files_builds_without_a_listing_job(spark, tmp_path):
+    root = tmp_path / "raw"
+    expected = _write_day(root, "2025-08-01", 40) | _write_day(root, "2025-08-02", 40)
+    jobs, got, n = _build_jobs_and_rows(spark, root, None)
+    assert jobs == 0
+    assert n == 80 and got == expected
+
+
+def _reader_path_strings(tree: ast.AST):
+    """(line, path text) of every path argument given to a
+    `….read…`/`….readStream…` terminal call. A name, as the argument or
+    as the reader, is followed to what the same module assigns to it;
+    an f-string's fields read as `{}`."""
+    assigned: dict[str, list[ast.AST]] = {}
+    for node in ast.walk(tree):
+        if isinstance(node, ast.Assign):
+            for target in node.targets:
+                if isinstance(target, ast.Name):
+                    assigned.setdefault(target.id, []).append(node.value)
+
+    def strings(node, seen=()):
+        for sub in ast.walk(node):
+            if isinstance(sub, ast.Constant) and isinstance(sub.value, str):
+                yield sub.value
+            elif isinstance(sub, ast.JoinedStr):
+                yield "".join(
+                    v.value if isinstance(v, ast.Constant) else "{}" for v in sub.values
+                )
+            elif isinstance(sub, ast.Name) and sub.id not in seen:
+                for value in assigned.get(sub.id, []):
+                    yield from strings(value, seen + (sub.id,))
+
+    def from_reader(node, seen=()) -> bool:
+        while isinstance(node, (ast.Attribute, ast.Call)):
+            if isinstance(node, ast.Attribute) and node.attr in ("read", "readStream"):
+                return True
+            node = node.value if isinstance(node, ast.Attribute) else node.func
+        return isinstance(node, ast.Name) and node.id not in seen and any(
+            from_reader(value, seen + (node.id,)) for value in assigned.get(node.id, [])
+        )
+
+    for node in ast.walk(tree):
+        if (
+            isinstance(node, ast.Call)
+            and isinstance(node.func, ast.Attribute)
+            and node.func.attr in _PATH_TAKING
+            and from_reader(node.func.value)
+        ):
+            args = node.args + [k.value for k in node.keywords if k.arg == "path"]
+            for arg in args:
+                for text in strings(arg):
+                    yield node.lineno, text
+
+
+_PATH_TAKING = {"text", "textFile", "parquet", "json", "csv", "orc", "load"}
+# last path segment globs file names: `/*.txt`, `/part-*.parquet`, `/*`
+_FILE_GLOB = re.compile(r"(?:^|/)[^/]*\*[^/]*\.\w+$|(?:^|/)\*$")
+
+
+def test_no_reader_globs_files():
+    """A file glob hands the file index one root per file (and a
+    listing job past 32); a directory plus `pathGlobFilter` is the one
+    way the package filters the files a read admits."""
+    pkg = pathlib.Path(__file__).resolve().parent.parent / "bike_data_flow_spark"
+    hits = [
+        f"{path.relative_to(pkg)}:{line}: {text}"
+        for path in sorted(pkg.rglob("*.py"))
+        for line, text in _reader_path_strings(ast.parse(path.read_text()))
+        if _FILE_GLOB.search(text)
+    ]
+    assert hits == []

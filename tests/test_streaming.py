@@ -62,6 +62,24 @@ def test_checkpoint_prevents_reprocessing(spark, landing, tmp_path):
     assert read_enhanced(spark, str(out)).count() == first
 
 
+def test_in_flight_tmp_file_never_enters_a_batch(spark, landing, tmp_path):
+    # LandingZone.land writes `<name>.tmp` beside the day's files and
+    # renames it; a listing that lands in between must not admit it.
+    (landing / "dt=2025-05-01" / "wrm_stations_2025-05-01_11-00-00.tmp").write_text(
+        "\n".join([HEADER, "tmp1" + GOOD_ROWS[0][3:]]) + "\n"
+    )
+    out, ckpt = tmp_path / "enhanced", tmp_path / "ckpt"
+    _run_stream(spark, landing, out, ckpt)
+    df = read_enhanced(spark, str(out))
+    assert df.count() == 7
+    assert df.filter(F.col("station_id") == "tmp1").count() == 0
+    source_log = "".join(
+        p.read_text() for p in (ckpt / "sources" / "0").iterdir() if p.name[0] != "."
+    )
+    assert source_log.count(".txt") == 3
+    assert ".tmp" not in source_log
+
+
 # --- ingestion gate ---------------------------------------------------------
 
 

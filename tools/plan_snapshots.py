@@ -42,6 +42,7 @@ _STRIP = [
     # relation packing — volatile, not a plan-shape signal
     (re.compile(r", Statistics\([^)]*\)"), ""),
     (re.compile(r"\[plan_id=\d+\]"), ""),
+    (re.compile(r"RDD\[\d+\]"), "RDD"),  # RDD ids of checkpointed relations
     (re.compile(r"\[id=#?x?\d*\]"), ""),
     (re.compile(r"file:[^\s,\]]+"), "PATH"),
     (re.compile(r"/[^\s,\]]*parquet[^\s,\]]*"), "PATH"),

@@ -3,6 +3,10 @@ with the scale-relevant fragments (PushedFilters, ReadSchema, joins,
 window limits, exchanges) highlighted. Run after plan-affecting changes:
 
     python tools/plans.py [sf_dir]
+
+Each plan is captured on an empty cache and its lines pass through the
+plan-snapshot normalizer (`plan_snapshots._norm`), so two runs write the
+same file and a diff of it shows a real plan change.
 """
 
 from __future__ import annotations
@@ -15,7 +19,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from bike_data_flow_spark.queries import load_all  # noqa: E402
 from bike_data_flow_spark.session import get_spark  # noqa: E402
-from tools.plan_snapshots import explain_text  # noqa: E402
+from tools.plan_snapshots import _norm, explain_text  # noqa: E402
 
 HIGHLIGHT = re.compile(
     r"PushedFilters|ReadSchema|BroadcastHashJoin|SortMergeJoin|ShuffledHashJoin"
@@ -37,7 +41,9 @@ def main() -> None:
     for q in registry.values():
         if not q.bench:
             continue
-        plan = explain_text(q.fn(spark, sf_dir))
+        # same cache state for every capture, as plan_snapshots.current_plan
+        spark.catalog.clearCache()
+        plan = "\n".join(map(_norm, explain_text(q.fn(spark, sf_dir)).splitlines()))
         exchanges = len(re.findall(r"\bExchange\b", plan))
         key = [
             ln.strip()
