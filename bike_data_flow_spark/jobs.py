@@ -9,8 +9,11 @@ Dagster jobs (`jobs/stations.py`, sensor + asset materializations).
 
 `ingest` polls a source (a URL with requests when available, else a
 local file path — useful for drills/tests) through the SHA-256 dup
-gate. `process` drains the landing zone through the streaming day-
-rebuild pipeline (once with --follow absent, 30 s trigger otherwise).
+gate. `process` drains the landing zone through the streaming
+pipeline, which commits each micro-batch's own files exactly once (a
+late file lands in its own day; `processed_at` is the time of the batch
+that first landed a row), once with --follow absent, 30 s trigger
+otherwise.
 `analytics` prints the summary JSON and renders the density map.
 `curate` runs the training-data pipeline (quality gate → exact dedup →
 LSH near-dup clustering) and writes keeper doc ids.
@@ -188,7 +191,7 @@ def main(argv: list[str] | None = None) -> int:
     p.add_argument("--interval", type=float, default=30.0)
     p.set_defaults(fn=cmd_ingest)
 
-    p = sub.add_parser("process", help="landing → enhanced (streaming day rebuild)")
+    p = sub.add_parser("process", help="landing → enhanced (streaming per-batch commit)")
     p.add_argument("--landing", required=True)
     p.add_argument("--enhanced", required=True)
     p.add_argument("--checkpoint", required=True)

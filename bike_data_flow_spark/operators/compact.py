@@ -1,11 +1,17 @@
 """Small-file compaction for dt=-partitioned parquet zones.
 
-Streaming day-rebuilds and frequent appends accumulate small files; at
+Streaming per-batch commits (one file per day per batch; a late file
+lands in its own day, and `processed_at` is the time of the batch that
+first landed a row) and frequent appends accumulate small files; at
 100 TB the scan cost is dominated by file-open overhead once files drop
 under ~100 MB. This operator rewrites selected partitions to a target
 file count derived from their actual byte size, using a staging dir +
 atomic directory swap so concurrent readers never see a half-written
 partition.
+
+The rewrite names its files `part-*`, so it must not run on a stream's
+zone while a batch may still be replayed: the replay finds its earlier
+output by the `b<batch id>-` prefix (`enhance.commit_batch`).
 """
 
 from __future__ import annotations

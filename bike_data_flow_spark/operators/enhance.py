@@ -1,5 +1,6 @@
 """Enhancement: record-type classification + date/lineage columns and
-the partitioned parquet sink.
+the partitioned parquet sinks (a batch overwrite and the stream's
+per-batch commit).
 
 Reference: wrm_pipeline/wrm_pipeline/assets/stations/enhanced_all.py —
 classification :54-68, date/processed_at :73-74, column order :77-84,
@@ -16,6 +17,10 @@ deviation — station ids are ASCII on the wire.
 """
 
 from __future__ import annotations
+
+import os
+import shutil
+from pathlib import Path
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -55,15 +60,21 @@ def enhance_all(df: DataFrame) -> DataFrame:
     segment of the lineage path, so a whole-tree backfill is ONE scan
     and ONE plan — the per-day ``enhance`` loop submits one Spark job
     per partition, which at a 1000-day history means 1000 scheduler
-    round-trips for work the engine can do in a single stage. (The
-    per-day variant remains the right shape for ST4 streaming rebuilds,
-    where each micro-batch really is one day.) Files outside a dt=
-    layout get a NULL date (try_to_timestamp), matching the tolerant
-    parse path rather than failing the backfill."""
+    round-trips for work the engine can do in a single stage. The
+    stream's micro-batches go through it too, so a batch whose files
+    span several days (a late file for an old day among them) is still
+    one plan. Files outside a dt= layout get a NULL date
+    (try_to_timestamp), matching the tolerant parse path rather than
+    failing the backfill."""
     dt_str = F.regexp_extract(
         F.col("s3_source_key"), r"dt=(\d{4}-\d{2}-\d{2})", 1
     )
     return _enhanced(df, F.try_to_timestamp(dt_str, F.lit("yyyy-MM-dd")))
+
+
+def _with_dt(df: DataFrame) -> DataFrame:
+    """The Hive ``dt=`` partition value of each row, from its date."""
+    return df.withColumn("dt", F.date_format("date", "yyyy-MM-dd"))
 
 
 def write_enhanced(df: DataFrame, out_dir: str, partition_date: str | None = None) -> None:
@@ -71,11 +82,12 @@ def write_enhanced(df: DataFrame, out_dir: str, partition_date: str | None = Non
 
     Dynamic partition overwrite (set in session.py) rebuilds only the
     day(s) present in `df` — the reference's whole-day recompute
-    semantics (ST4) without touching other partitions. The
-    repartition bounds small files: one file per dt per shuffle
-    partition instead of one per input task.
+    semantics (ST4) for batch loads, without touching other partitions.
+    The stream does not use it: it appends each micro-batch with
+    `commit_batch`. The repartition bounds small files: one file per dt
+    per shuffle partition instead of one per input task.
     """
-    out = df.withColumn("dt", F.date_format("date", "yyyy-MM-dd"))
+    out = _with_dt(df)
     if partition_date is not None:
         out = out.filter(F.col("dt") == partition_date)
     (
@@ -84,6 +96,35 @@ def write_enhanced(df: DataFrame, out_dir: str, partition_date: str | None = Non
         .partitionBy("dt")
         .parquet(out_dir)
     )
+
+
+def commit_batch(df: DataFrame, out_dir: str, batch_id: int) -> None:
+    """Append one micro-batch's rows to the dt= zone, exactly once per
+    ``batch_id`` (the idempotent sink half of Structured Streaming's
+    exactly-once; the file source's offset log replays the same files
+    under the same id after a crash).
+
+    The rows are written to ``_b<id>/`` (a ``_`` directory, which Spark's
+    partition discovery and a ``dt=*/*.parquet`` glob both skip) and
+    each file is then renamed into its day as ``b<id>-part-….parquet``.
+    Before writing, the id's staging directory and any ``dt=*/b<id>-*``
+    file are deleted, so a replay after a crash anywhere in the write or
+    the renames leaves exactly one copy. The zone stays plain Parquet.
+    Ids restart with a new checkpoint, so a zone belongs to one stream
+    checkpoint. Renaming these files (for example by compaction) before
+    their batch is committed would defeat the replay cleanup.
+    """
+    root = Path(out_dir)
+    stage, tag = root / f"_b{batch_id}", f"b{batch_id}-"
+    shutil.rmtree(stage, ignore_errors=True)
+    for stale in root.glob(f"dt=*/{tag}*"):
+        stale.unlink()
+    _with_dt(df).repartition("dt").write.partitionBy("dt").parquet(str(stage))
+    for part in sorted(stage.glob("dt=*/part-*")):
+        day = root / part.parent.name
+        day.mkdir(exist_ok=True)
+        os.replace(part, day / f"{tag}{part.name}")
+    shutil.rmtree(stage)
 
 
 def read_enhanced(spark, out_dir: str) -> DataFrame:

@@ -10,7 +10,8 @@ wrm_pipeline/wrm_pipeline/assets/stations/processed_all.py):
 - boolean strings true/false (any case) → bool; empty/missing pedelec
   flag → False (:167-183)
 - rows with unparseable numerics are dropped (the reference skips the
-  whole FILE on cast failure :197-199 — see `strict_numeric` note)
+  whole FILE on cast failure :197-199; row-granular is the scalable
+  choice)
 - epoch-seconds float → timestamp (:226)
 - lineage: source key + file timestamp from filename regex
   `wrm_stations_(\\d{4}-\\d{2}-\\d{2}_\\d{2}-\\d{2}-\\d{2})\\.txt$`,
@@ -31,6 +32,9 @@ DataFrame is being built.
 
 from __future__ import annotations
 
+import glob
+import os
+
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -48,15 +52,17 @@ def _to_bool(c: Column, default_false: bool = True) -> Column:
     return out
 
 
-def parse_raw_lines(df: DataFrame, strict_numeric: bool = False) -> DataFrame:
-    """Parse a line-mode DataFrame (columns: value, plus _metadata) into
-    the processed schema (minus lineage, added by `with_lineage`).
+def parse_raw_lines(df: DataFrame) -> DataFrame:
+    """Parse a line-mode DataFrame (column ``value``, optionally
+    ``_metadata``) into the processed schema (minus lineage, added by
+    `with_lineage`). Rows with unparseable numerics are dropped.
 
-    ``strict_numeric=False`` drops rows with unparseable numerics
-    (row-granular, the scalable choice); the reference's file-granular
-    skip is reproduced in streaming/pipeline.py where files are the
-    unit of work.
+    ``_metadata`` is carried through as a plain column: in a file scan
+    it is a hidden metadata column that resolves through any projection,
+    but in a foreachBatch frame it is an ordinary struct column that a
+    ``select`` would drop.
     """
+    meta = [F.col("_metadata")] if "_metadata" in df.columns else []
     # Header rows start with '#id'; data rows don't.
     lines = df.filter(~F.col("value").startswith("#id") & (F.length(F.trim("value")) > 0))
 
@@ -67,6 +73,7 @@ def parse_raw_lines(df: DataFrame, strict_numeric: bool = False) -> DataFrame:
         F.col("value"),
         *[F.element_at(parts, i + 1).alias(n) for i, n in enumerate(_POSITIONS)],
         composite.alias("_composite"),
+        *meta,
     )
 
     # Drop malformed rows: wrong column count or composite != 3 parts
@@ -97,23 +104,22 @@ def parse_raw_lines(df: DataFrame, strict_numeric: bool = False) -> DataFrame:
             "givesbonus_acceptspedelecs_fbbattlevel"
         ),
         F.col("pedelecs").try_cast("long").alias("pedelecs"),
+        *meta,
     )
 
-    if not strict_numeric:
-        # Casts of garbage → NULL; reference semantics: such rows can't
-        # survive (its pandas astype would throw for the whole file).
-        typed = typed.filter(
-            F.col("timestamp").isNotNull()
-            & F.col("gmt_local_diff_sec").isNotNull()
-            & F.col("gmt_servertime_diff_sec").isNotNull()
-            & F.col("lat").isNotNull()
-            & F.col("lon").isNotNull()
-            & F.col("bikes").isNotNull()
-            & F.col("spaces").isNotNull()
-            & F.col("total_docks").isNotNull()
-            & F.col("pedelecs").isNotNull()
-        )
-    return typed
+    # Casts of garbage → NULL; reference semantics: such rows can't
+    # survive (its pandas astype would throw for the whole file).
+    return typed.filter(
+        F.col("timestamp").isNotNull()
+        & F.col("gmt_local_diff_sec").isNotNull()
+        & F.col("gmt_servertime_diff_sec").isNotNull()
+        & F.col("lat").isNotNull()
+        & F.col("lon").isNotNull()
+        & F.col("bikes").isNotNull()
+        & F.col("spaces").isNotNull()
+        & F.col("total_docks").isNotNull()
+        & F.col("pedelecs").isNotNull()
+    )
 
 
 _POSITIONS = [
@@ -162,9 +168,7 @@ def process_partition(
     (test_processed.py:219-301): missing partition → FileNotFoundError;
     partition whose files yield zero valid rows → ValueError("No valid
     data found after processing"). `read_raw_partition` stays lazy and
-    tolerant for the streaming path (ST7: log-and-continue)."""
-    import os
-
+    tolerant (ST7: log-and-continue)."""
     path = f"{landing_dir}/dt={dt}"
     if not os.path.isdir(path):
         raise FileNotFoundError(f"raw partition not found: {path}")
@@ -184,14 +188,26 @@ def read_raw_partition(
     the reference's per-file loop + pd.concat (processed_all.py:223,
     U1) disappear: the union is the scan. The roots are directories
     filtered to `RAW_FILE_GLOB`: one for a day, whose build lists it on
-    the driver and starts no job, or one per day (`dt=*`) for a
-    backfill, not one per file.
+    the driver and starts no job, or one per day for a backfill, not
+    one per file. The backfill's days are listed here rather than given
+    as one `dt=*` glob, which the file-sink metadata probe takes for a
+    literal path (logging a FileNotFoundException trace on every read).
     """
-    days = f"{landing_dir}/dt={dt}" if dt else f"{landing_dir}/dt=*"
+    if dt:
+        days = [f"{landing_dir}/dt={dt}"]
+    else:
+        pattern = os.path.join(glob.escape(landing_dir), "dt=*")
+        days = sorted(d for d in glob.glob(pattern) if os.path.isdir(d))
     lines = (
         spark.read.option("pathGlobFilter", RAW_FILE_GLOB)
         .text(days)
         .select("value", "_metadata")
     )
-    parsed = with_lineage(parse_raw_lines(lines))
-    return parsed.drop("value", "_metadata")
+    return parse_landed(lines)
+
+
+def parse_landed(lines: DataFrame) -> DataFrame:
+    """Landing-file lines (``value``, ``_metadata``) → processed rows
+    with lineage: the one parse path of the batch read and of the
+    stream's micro-batches."""
+    return with_lineage(parse_raw_lines(lines)).drop("_metadata")

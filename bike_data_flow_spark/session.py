@@ -79,7 +79,7 @@ def get_spark(
         .config(
             "spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold", "64m"
         )
-        # Day-rebuild semantics (SURVEY ST4): overwrite only touched dt= partitions.
+        # Batch day loads (write_enhanced, SURVEY ST4): overwrite only touched dt= partitions.
         .config("spark.sql.sources.partitionOverwriteMode", "dynamic")
         # Arrow for pandas interchange / pandas UDFs.
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")

@@ -1,6 +1,9 @@
 """Structured Streaming surface: the Dagster sensor loop (ST1-ST7)
-re-expressed as a file-source stream + foreachBatch day rebuild, and
-the driver-side ingestion poller with the SHA-256 duplicate gate."""
+re-expressed as a file-source stream + foreachBatch per-batch commit
+(each batch's own files, exactly once by batch id; a late file lands in
+its own day, and `processed_at` is the time of the batch that first
+landed a row), and the driver-side ingestion poller with the SHA-256
+duplicate gate."""
 
 from __future__ import annotations
 
