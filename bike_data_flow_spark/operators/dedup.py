@@ -4,15 +4,15 @@ Exact dedup, n-gram Jaccard, MinHash+LSH, SimHash — each designed as a
 shuffle-bounded DataFrame plan:
 
 - exact: one hash-groupBy shuffle on the content fingerprint.
-- n-gram Jaccard: shingle-explode → distinct → self-equi-join on the
-  shingle (co-partitioned by shingle hash) → per-pair count. The join
-  key is the shingle, so only docs *sharing* a shingle ever meet —
-  no O(n²) cross product.
+- n-gram Jaccard: shingle-explode → distinct → candidate pairs
+  sharing a shingle (joins.pairs_sharing_key) → per-pair count. Only
+  docs *sharing* a shingle ever meet — no O(n²) cross product.
 - MinHash LSH: K md5-derived hash functions → per-doc min-signature →
-  band keys → equi-join on band key. Candidate generation is linear in
-  data + quadratic only *within a band bucket*.
+  band keys → pairs sharing a (band, band key). Candidate generation
+  is linear in data + quadratic only *within a band bucket*.
 - SimHash: bitwise majority vote over token hashes → one 48-bit
-  signature per doc; near-dup = small Hamming distance.
+  signature per doc; near-dup = small Hamming distance, candidates =
+  pairs sharing a signature block.
 
 Hash functions are md5-prefix arithmetic (conv(substr(md5(x),1,k),16,10))
 — chosen because the DuckDB oracle computes the identical value, making
@@ -38,13 +38,15 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from .joins import pairs_sharing_key
 from .text import normalized_text, tokens
 
 # MinHash configuration — mirrored by the SQL oracle generator.
 MINHASH_K = 16  # hash functions
 MINHASH_BANDS = 4  # bands of 4 rows each
 SIMHASH_BITS = 48  # 12 hex chars of md5 → fits exactly in a BIGINT
-SIMHASH_MAX_HAMMING = 3  # near-dup radius; blocks = max_hamming + 1
+SIMHASH_BLOCKS = 4  # 4 bands of 12 bits: pigeonhole-exact for hamming <= 3
+SIMHASH_MAX_HAMMING = 3
 
 
 def md5_hash64(col: Column, salt: int | None = None, hex_chars: int = 8) -> Column:
@@ -194,6 +196,39 @@ def drop_exact_duplicates(
 # ---------------------------------------------------------------------------
 
 
+def _shingle_overlaps(
+    df: DataFrame,
+    id_col: str,
+    text_col: str,
+    n: int,
+    max_shingle_freq: int | None,
+) -> DataFrame:
+    """(id_a, id_b, inter_size, size_a, size_b) for every doc pair
+    sharing ≥ 1 shingle: distinct shingles → per-doc set size
+    (broadcastable side stats) → pairs sharing a shingle (only
+    co-occurring docs meet) → per-pair intersection count → size join.
+    The shared front of the Jaccard and containment joins."""
+    sh = doc_shingles(df, id_col, text_col, n, max_shingle_freq).cache()
+    sizes = sh.groupBy(id_col).agg(F.count(F.lit(1)).alias("set_size"))
+
+    # set sizes count EVERY shingle, but the pair join only needs the
+    # co-occurring ones: a df=1 shingle (the long tail) meets nobody,
+    # so dropping it shrinks the pair join's input without touching the
+    # output. Cached: pairs_sharing_key reads it twice.
+    gf = sh.groupBy("shingle").agg(F.count(F.lit(1)).alias("_df"))
+    joinable = sh.join(
+        gf.filter(F.col("_df") >= 2).select("shingle"), "shingle"
+    ).cache()
+    inter = (
+        pairs_sharing_key(joinable, id_col, ["shingle"])
+        .groupBy("id_a", "id_b")
+        .agg(F.count(F.lit(1)).alias("inter_size"))
+    )
+    sa = sizes.select(F.col(id_col).alias("id_a"), F.col("set_size").alias("size_a"))
+    sb = sizes.select(F.col(id_col).alias("id_b"), F.col("set_size").alias("size_b"))
+    return inter.join(sa, "id_a").join(sb, "id_b")
+
+
 def ngram_jaccard_pairs(
     df: DataFrame,
     id_col: str = "doc_id",
@@ -202,37 +237,10 @@ def ngram_jaccard_pairs(
     threshold: float = 0.2,
     max_shingle_freq: int | None = None,
 ) -> DataFrame:
-    """Pairs (id_a < id_b) with shingle-set Jaccard ≥ threshold.
-
-    Plan: distinct shingles → per-doc set size (broadcastable side
-    stats) → self-join on shingle (only co-occurring docs meet) →
-    per-pair intersection count → |A∪B| = |A|+|B|−|A∩B|.
-    """
-    sh = doc_shingles(df, id_col, text_col, n, max_shingle_freq).cache()
-    sizes = sh.groupBy(id_col).agg(F.count(F.lit(1)).alias("set_size"))
-
-    # set sizes count EVERY shingle, but the pair join only needs the
-    # co-occurring ones: a df=1 shingle (the long tail) meets nobody,
-    # so dropping it shrinks the self-join input without touching the
-    # output. Cached: BOTH self-join sides consume it, and the rename
-    # projections differ enough that Spark won't reuse the exchange.
-    gf = sh.groupBy("shingle").agg(F.count(F.lit(1)).alias("_df"))
-    joinable = sh.join(
-        gf.filter(F.col("_df") >= 2).select("shingle"), "shingle"
-    ).cache()
-    a = joinable.select(F.col(id_col).alias("id_a"), "shingle")
-    b = joinable.select(F.col(id_col).alias("id_b"), "shingle")
-    inter = (
-        a.join(b, "shingle")
-        .filter(F.col("id_a") < F.col("id_b"))
-        .groupBy("id_a", "id_b")
-        .agg(F.count(F.lit(1)).alias("inter_size"))
-    )
-    sa = sizes.select(F.col(id_col).alias("id_a"), F.col("set_size").alias("size_a"))
-    sb = sizes.select(F.col(id_col).alias("id_b"), F.col("set_size").alias("size_b"))
+    """Pairs (id_a < id_b) with shingle-set Jaccard ≥ threshold:
+    |A∪B| = |A|+|B|−|A∩B| over the shingle overlaps."""
     return (
-        inter.join(sa, "id_a")
-        .join(sb, "id_b")
+        _shingle_overlaps(df, id_col, text_col, n, max_shingle_freq)
         .withColumn(
             "jaccard",
             F.round(
@@ -317,21 +325,18 @@ def minhash_lsh_candidates(
     k: int = MINHASH_K,
     bands: int = MINHASH_BANDS,
 ) -> DataFrame:
-    """Distinct candidate near-dup pairs (id_a < id_b) sharing ≥1 LSH band.
+    """Distinct candidate near-dup pairs (id_a < id_b) sharing ≥1 LSH
+    band: pairs_sharing_key on (band, band_key), then ``distinct``.
 
-    The band-key stage is cached before the self-join: without it both
-    join sides re-execute the whole shingle→md5→min-signature pipeline
-    (the most expensive subtree in the dedup family) — at 100 TB that
-    is the difference between one corpus scan and two.
+    The band keys are cached because pairs_sharing_key reads them twice:
+    uncached, the whole shingle→md5→min-signature pipeline (the most
+    expensive subtree in the dedup family) runs once per side.
     """
     keys = minhash_band_keys(
         minhash_signatures(df, id_col, text_col, n, k), id_col, k, bands
     ).cache()
-    a = keys.select(F.col(id_col).alias("id_a"), "band", "band_key")
-    b = keys.select(F.col(id_col).alias("id_b"), "band", "band_key")
     return (
-        a.join(b, ["band", "band_key"])
-        .filter(F.col("id_a") < F.col("id_b"))
+        pairs_sharing_key(keys, id_col, ["band", "band_key"])
         .select("id_a", "id_b")
         .distinct()
     )
@@ -619,75 +624,84 @@ def capped_block_join(
     keys = (
         minhash_band_keys(sigs, id_col="nid", k=k, bands=bands)
         .join(big.select("nid", "name", "blk"), "nid")
-        .cache()
+        .cache()  # pairs_sharing_key reads it twice
     )
-    ka = keys.select(
-        F.col("nid").alias("id_a"), F.col("name").alias("na"),
-        "blk", "band", "band_key",
-    )
-    kb = keys.select(
-        F.col("nid").alias("id_b"), F.col("name").alias("nb"),
-        "blk", "band", "band_key",
-    )
+    # pairs are ordered by NAME (na < nb), as on the exact route
     approx = (
-        ka.join(kb, ["blk", "band", "band_key"])
-        .filter(F.col("na") < F.col("nb"))
-        .select("id_a", "id_b", "na", "nb")
+        pairs_sharing_key(keys, "name", ["blk", "band", "band_key"], ("nid",))
+        .select(
+            F.col("nid_a").alias("id_a"),
+            F.col("nid_b").alias("id_b"),
+            F.col("id_a").alias("na"),
+            F.col("id_b").alias("nb"),
+        )
         .distinct()
     )
     return exact.unionByName(approx)
 
 
-def simhash_near_pairs(
-    sig: DataFrame, id_col: str = "doc_id", max_hamming: int = 3
+def _hamming_band_pairs(
+    sig: DataFrame, id_col: str, sig_col: str, bits: int, blocks: int, max_hamming: int
 ) -> DataFrame:
-    """Near-dup pairs by Hamming distance over SimHash signatures.
-
-    Blocked by signature bytes at scale (pigeonhole: two sigs within
-    hamming d share at least one of d+1 blocks); here the simple
-    variant joins on any shared 12-bit block then verifies exactly.
-    """
-    blocks = 4
-    width = SIMHASH_BITS // blocks
+    """(id_a < id_b, hamming) pairs of ``bits``-wide signatures within
+    ``max_hamming`` bits. Each signature splits into ``blocks`` equal
+    blocks; two signatures within hamming d share at least one of d+1
+    blocks (pigeonhole), so candidates are the pairs sharing a (block,
+    value) — linear in data, quadratic only within a bucket — and an
+    exact bit_count verifies them. A radius the blocks cannot cover
+    would silently lose pairs, so it raises instead. The one band join
+    of simhash_near_pairs and multimodal.perceptual_near_pairs."""
+    if max_hamming >= blocks:
+        raise ValueError(
+            f"max_hamming {max_hamming} needs > {max_hamming} blocks "
+            f"(pigeonhole); the {bits}-bit signature has {blocks}"
+        )
+    width = bits // blocks
     mask = (1 << width) - 1
-    block_col = lambda c, b: (  # noqa: E731
-        F.shiftright(F.col(c), b * width).bitwiseAND(mask)
-    )
-    # One projection + explode (NOT a blocks-way self-union, which would
-    # re-execute the upstream simhash aggregation once per block per join
-    # side), cached so the self-join reads one materialized subtree.
     structs = [
         F.struct(
-            F.lit(b).alias("blk"), block_col("simhash", b).alias("blk_val")
+            F.lit(b).alias("blk"),
+            F.shiftright(F.col(sig_col), b * width).bitwiseAND(mask).alias("blk_val"),
         )
         for b in range(blocks)
     ]
+    # One projection + explode (NOT a blocks-way self-union, which would
+    # re-execute the upstream signature plan once per block). The KEYED
+    # frame is cached because pairs_sharing_key reads it twice: the
+    # upstream plan (the simhash aggregation, a media-decoding
+    # mapInPandas) and the explode then run once, and a keyed row is
+    # only an id and three longs, so holding blocks× rows is cheap.
     keyed = (
         sig.select(
-            F.col(id_col), F.col("simhash"), F.explode(F.array(*structs)).alias("bk")
+            F.col(id_col), F.col(sig_col), F.explode(F.array(*structs)).alias("bk")
         )
         .select(
             id_col,
-            "simhash",
+            sig_col,
             F.col("bk.blk").alias("blk"),
             F.col("bk.blk_val").alias("blk_val"),
         )
         .cache()
     )
-    a = keyed.select(
-        F.col(id_col).alias("id_a"), F.col("simhash").alias("sig_a"), "blk", "blk_val"
-    )
-    b = keyed.select(
-        F.col(id_col).alias("id_b"), F.col("simhash").alias("sig_b"), "blk", "blk_val"
-    )
+    sig_a, sig_b = f"{sig_col}_a", f"{sig_col}_b"
     return (
-        a.join(b, ["blk", "blk_val"])
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b", "sig_a", "sig_b")
+        pairs_sharing_key(keyed, id_col, ["blk", "blk_val"], (sig_col,))
+        .select("id_a", "id_b", sig_a, sig_b)
         .distinct()
-        .withColumn("hamming", F.bit_count(F.col("sig_a").bitwiseXOR(F.col("sig_b"))))
+        .withColumn("hamming", F.bit_count(F.col(sig_a).bitwiseXOR(F.col(sig_b))))
         .filter(F.col("hamming") <= max_hamming)
         .select("id_a", "id_b", "hamming")
+    )
+
+
+def simhash_near_pairs(
+    sig: DataFrame, id_col: str = "doc_id", max_hamming: int = SIMHASH_MAX_HAMMING
+) -> DataFrame:
+    """Near-dup pairs by Hamming distance over SimHash signatures: the
+    band join on SIMHASH_BLOCKS 12-bit blocks (``_hamming_band_pairs``),
+    exact for ``max_hamming`` < SIMHASH_BLOCKS; a wider radius raises."""
+    return _hamming_band_pairs(
+        sig, id_col, "simhash", SIMHASH_BITS, SIMHASH_BLOCKS, max_hamming
     )
 
 
@@ -870,32 +884,15 @@ def containment_pairs(
     is the operator that catches quotes, excerpt reposts, and
     boilerplate-wrapped copies.
 
-    Plan mirrors ngram_jaccard_pairs (shingle equi-join at df ≥ 2 →
-    per-pair intersection count → size join), with the measure swapped;
-    the df=1 prune and ``max_shingle_freq`` skew cap apply unchanged.
+    Same shingle overlaps as ngram_jaccard_pairs (``_shingle_overlaps``:
+    the df=1 prune and ``max_shingle_freq`` skew cap included), with the
+    measure swapped.
     Emits both directions' coefficients once per unordered pair.
     """
-    sh = doc_shingles(df, id_col, text_col, n, max_shingle_freq).cache()
-    sizes = sh.groupBy(id_col).agg(F.count(F.lit(1)).alias("set_size"))
-    gf = sh.groupBy("shingle").agg(F.count(F.lit(1)).alias("_df"))
-    joinable = sh.join(
-        gf.filter(F.col("_df") >= 2).select("shingle"), "shingle"
-    ).cache()  # both self-join sides read it
-    a = joinable.select(F.col(id_col).alias("id_a"), "shingle")
-    b = joinable.select(F.col(id_col).alias("id_b"), "shingle")
-    inter = (
-        a.join(b, "shingle")
-        .filter(F.col("id_a") < F.col("id_b"))
-        .groupBy("id_a", "id_b")
-        .agg(F.count(F.lit(1)).alias("inter_size"))
-    )
-    sa = sizes.select(F.col(id_col).alias("id_a"), F.col("set_size").alias("size_a"))
-    sb = sizes.select(F.col(id_col).alias("id_b"), F.col("set_size").alias("size_b"))
     cont_a = F.round(F.col("inter_size") / F.col("size_a"), 4)
     cont_b = F.round(F.col("inter_size") / F.col("size_b"), 4)
     return (
-        inter.join(sa, "id_a")
-        .join(sb, "id_b")
+        _shingle_overlaps(df, id_col, text_col, n, max_shingle_freq)
         .select(
             "id_a",
             "id_b",
@@ -1096,7 +1093,7 @@ def minhash_estimate_errors(
     Scale shape: ONE groupBy(id) over the distinct-shingle scan yields
     the k min-signature components AND the sorted verify array (MIN
     over the distinct set equals MIN over the multiset, so signatures
-    lose nothing); the cached aggregate feeds the band self-join
+    lose nothing); the cached aggregate feeds the pairs sharing a band
     (candidate generation, the standard LSH equi-join) and BOTH sides
     of the per-candidate join — signature comparison (k integer
     equality checks per CANDIDATE, not per corpus pair) and the exact
@@ -1119,12 +1116,10 @@ def minhash_estimate_errors(
         )
     aggs.append(F.sort_array(F.collect_list("shingle")).alias("arr"))
     sigs = staged.groupBy(id_col).agg(*aggs).cache()
-    keys = minhash_band_keys(sigs, id_col, k, bands)
-    a = keys.select(F.col(id_col).alias("id_a"), "band", "band_key")
-    b = keys.select(F.col(id_col).alias("id_b"), "band", "band_key")
     cand = (
-        a.join(b, ["band", "band_key"])
-        .filter(F.col("id_a") < F.col("id_b"))
+        pairs_sharing_key(
+            minhash_band_keys(sigs, id_col, k, bands), id_col, ["band", "band_key"]
+        )
         .select("id_a", "id_b")
         .distinct()
     )

@@ -1,7 +1,8 @@
-"""Custom join operators Spark lacks natively: as-of join and
-bin-bucketed range join (SURVEY §2.3, task north-star list).
+"""Custom join operators Spark lacks natively: as-of join, bin-bucketed
+range join (SURVEY §2.3, task north-star list) and the candidate-pair
+self-join every near-dup, blocking and store-probe operator starts from.
 
-Both are compositions of built-in operators — no UDFs, no Catalyst
+All are compositions of built-in operators — no UDFs, no Catalyst
 surgery:
 
 - as-of join: union the two sides tagged, one per-key event-time sort
@@ -13,6 +14,10 @@ surgery:
   skew-free for bounded interval length), exact predicate re-verifies.
   Replaces O(|points|·|intervals|) theta joins with
   O(|points| + Σ interval_bins) + a hash join.
+- pairs sharing a key: the frame equi-joined with itself on the key,
+  kept where ``id_a < id_b`` — the one candidate-pair primitive of the
+  dedup, linkage and store-probe operators. Only rows sharing a key
+  ever meet, so the cost is quadratic only within a key bucket.
 """
 
 from __future__ import annotations
@@ -151,3 +156,41 @@ def range_join(
         & (pb[point_col] < ib[end_col])
     )
     return pb.join(ib, cond, how).drop("_pbin", "_ibin")
+
+
+def pairs_sharing_key(
+    df: DataFrame,
+    id_col: str,
+    keys: list[str],
+    carry: tuple[str, ...] | list[str] = (),
+) -> DataFrame:
+    """Candidate pairs: every two rows of ``df`` that agree on all of
+    ``keys``, ordered ``id_a < id_b``, as columns ``id_a``, ``c_a``…,
+    ``id_b``, ``c_b``… for each carried column ``c``.
+
+    One output row per shared key value, NOT per distinct pair: a pair
+    sharing three shingles (or bands, or blocks) appears three times,
+    so counting callers aggregate and the rest take ``distinct``. It is
+    a plain equi-join, so a NULL key never pairs, equal ids never pair,
+    and a duplicated (id, key) row repeats its pairs.
+
+    The join reads ``df`` twice, once per side, and Spark does not
+    reuse the exchange of two differently renamed projections: a
+    caller whose ``df`` is an expensive lazy plan (a shingle or
+    signature pipeline) caches or checkpoints it first, or that plan
+    runs once per side.
+    """
+
+    def side(s: str) -> DataFrame:
+        return df.select(
+            F.col(id_col).alias(f"id_{s}"),
+            *[F.col(c).alias(f"{c}_{s}") for c in carry],
+            *keys,
+        )
+
+    return (
+        side("a")
+        .join(side("b"), keys)
+        .filter(F.col("id_a") < F.col("id_b"))
+        .drop(*keys)
+    )

@@ -24,10 +24,10 @@ Spark shape at 100 TB:
   stacked long (map-side explode ×|fields|), partially aggregated into
   (field, value) counts, reduced to |fields| rows, and pivoted to a
   single row — broadcast to every score task. No driver collect.
-- ``blocked_pairs`` unions several self-equi-joins on cheap blocking
-  keys (multi-pass blocking — the standard way to keep candidate pairs
-  sub-quadratic while letting every compared field still disagree
-  inside some pass). Each pass shuffles on its own compound key; pair
+- ``blocked_pairs`` unions the pairs sharing each of several cheap
+  blocking keys (joins.pairs_sharing_key; multi-pass blocking — the
+  standard way to keep candidate pairs sub-quadratic while letting
+  every compared field still disagree inside some pass). Each pass shuffles on its own compound key; pair
   volume is Σ_blocks |b|²/2 per pass, governed by the key choice, and
   skew-prone keys should go through dedup.capped_block_join instead.
 - ``fs_score`` is a pure map stage over the pairs: the u row rides in
@@ -46,6 +46,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..session import overlap
+from .joins import pairs_sharing_key
 
 
 def field_u_long(records: DataFrame, fields: list[str]) -> DataFrame:
@@ -130,8 +131,9 @@ def blocked_pairs(
     stripe_passes: int | None = None,
     dedup: bool = True,
 ) -> DataFrame:
-    """Multi-pass blocked candidate pairs: one self-equi-join per key
-    list in ``block_keys``, unioned and de-duplicated on the id pair.
+    """Multi-pass blocked candidate pairs: the pairs sharing each key
+    list in ``block_keys`` (joins.pairs_sharing_key), unioned and
+    de-duplicated on the id pair.
     Output columns: id_a, id_b (id_a < id_b) plus ``<c>_a``/``<c>_b``
     for every carried comparison column. ``stripe_cap`` (defaulting to
     the module dial BLOCK_STRIPE_CAP) bounds oversized blocks by hash
@@ -175,7 +177,6 @@ def blocked_pairs(
         def one_striping(salt: str | None) -> DataFrame:
             side = records
             join_keys = list(join_base)
-            stripe_cols: list = []
             if cap:
                 n_stripes = F.greatest(
                     F.lit(1).cast("long"),
@@ -196,25 +197,11 @@ def blocked_pairs(
                 side = records.join(sizes, keys).withColumn(
                     "_stripe", stripe
                 )
-                stripe_cols = [F.col("_stripe")]
                 join_keys = join_keys + ["_stripe"]
-            a = side.select(
-                F.col(id_col).alias("id_a"),
-                *[F.col(c).alias(f"{c}_a") for c in carry],
-                *[F.col(k).alias(f"_bk_{k}") for k in keys],
-                *stripe_cols,
-            )
-            b = side.select(
-                F.col(id_col).alias("id_b"),
-                *[F.col(c).alias(f"{c}_b") for c in carry],
-                *[F.col(k).alias(f"_bk_{k}") for k in keys],
-                *stripe_cols,
-            )
-            return (
-                a.join(b, join_keys)
-                .filter(F.col("id_a") < F.col("id_b"))
-                .drop(*join_keys)
-            )
+            # keys join under _bk_ names, so a carried column may also
+            # be a blocking key
+            keyed = side.select("*", *[F.col(k).alias(f"_bk_{k}") for k in keys])
+            return pairs_sharing_key(keyed, id_col, join_keys, carry)
 
         for p in range(max(1, passes) if cap else 1):
             salt = "fsb|" if p == 0 else f"fsb{p}|"

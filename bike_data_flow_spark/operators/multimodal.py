@@ -24,6 +24,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .dedup import _hamming_band_pairs
+
 IMAGE_FEATURES_DDL = (
     "media_id string, n_bytes int, sha1 string, "
     "decoded_width int, decoded_height int, mean_luma double"
@@ -458,58 +460,14 @@ def perceptual_near_pairs(
     id_col: str = "media_id",
     max_hamming: int = AHASH_MAX_HAMMING,
 ) -> DataFrame:
-    """Near-duplicate image pairs by Hamming distance over the 64-bit
-    average hash — the SimHash band-join shape (dedup.simhash_near_pairs)
-    at 64 bits: 8 blocks of 8 bits, so two signatures within hamming d
-    ≤ 7 share at least one block (pigeonhole) and candidate generation
-    is an equi-join on (block, value) — linear in data, quadratic only
-    within a perceptual bucket. Exact bit_count verify after.
-
-    Caches the INPUT hash frame (1× rows, not the 8×-exploded keyed
-    frame) so an upstream mapInPandas decode runs once, not once per
-    join side. The cache is session-lifetime — it is NOT unpersisted
-    here because the result is returned lazily; callers looping over
-    many corpora should ``hashes.unpersist()`` after materializing, or
-    rely on storage-level LRU eviction (MEMORY_AND_DISK)."""
-    if max_hamming >= AHASH_BLOCKS:
-        raise ValueError(
-            f"max_hamming {max_hamming} needs > {max_hamming} blocks "
-            f"(pigeonhole); AHASH_BLOCKS is {AHASH_BLOCKS}"
-        )
-    width = 64 // AHASH_BLOCKS
-    mask = (1 << width) - 1
-    structs = [
-        F.struct(
-            F.lit(b).alias("blk"),
-            F.shiftright(F.col("ahash"), b * width)
-            .bitwiseAND(mask)
-            .alias("blk_val"),
-        )
-        for b in range(AHASH_BLOCKS)
-    ]
-    hashes = hashes.cache()
-    keyed = hashes.select(
-        F.col(id_col), F.col("ahash"), F.explode(F.array(*structs)).alias("bk")
-    ).select(
-        id_col,
-        "ahash",
-        F.col("bk.blk").alias("blk"),
-        F.col("bk.blk_val").alias("blk_val"),
-    )
-    a = keyed.select(
-        F.col(id_col).alias("id_a"), F.col("ahash").alias("sig_a"), "blk", "blk_val"
-    )
-    b = keyed.select(
-        F.col(id_col).alias("id_b"), F.col("ahash").alias("sig_b"), "blk", "blk_val"
-    )
-    dist = F.bit_count(F.col("sig_a").bitwiseXOR(F.col("sig_b")))
-    return (
-        a.join(b, ["blk", "blk_val"])
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b", dist.alias("hamming"))
-        .filter(F.col("hamming") <= max_hamming)
-        .dropDuplicates(["id_a", "id_b"])
-    )
+    """Near-duplicate image (or audio) pairs by Hamming distance over
+    the 64-bit average hash: the SimHash band join
+    (dedup._hamming_band_pairs) on AHASH_BLOCKS 8-bit blocks, so it is
+    pigeonhole-exact for ``max_hamming`` ≤ 7 and a wider radius raises.
+    The keyed frame it caches holds the decoded hashes, so an upstream
+    mapInPandas decode runs once; the cache lives as long as the
+    session's LRU keeps it (the result is lazy)."""
+    return _hamming_band_pairs(hashes, id_col, "ahash", 64, AHASH_BLOCKS, max_hamming)
 
 
 def _audio_fingerprint64(blob: bytes, frames: int = 64) -> int | None:

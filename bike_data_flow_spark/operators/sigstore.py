@@ -89,6 +89,7 @@ from .dedup import (
     minhash_band_keys,
     minhash_signatures,
 )
+from .joins import pairs_sharing_key
 from .snapshots import (
     SnapshotConflictError,
     current_version,
@@ -560,10 +561,11 @@ def incremental_lsh_pairs(
     ``commit=True`` appends Δ's band keys to the store in the same
     call (the daily-ingest shape: probe, then admit), so consecutive
     calls maintain the store incrementally. Δ's keys are pinned with an
-    eager localCheckpoint first — the probe, the self-join, and the
-    commit all read the pinned rows, so the shingle→minhash pipeline
-    runs exactly once per batch and the commit cannot observe a
-    different recomputation than the probe did. An EMPTY Δ commits
+    eager localCheckpoint first — the probe, both reads of the Δ×Δ
+    pairs_sharing_key join, and the commit all read the pinned rows,
+    so the shingle→minhash pipeline runs exactly once per batch and
+    the commit cannot observe a different recomputation than the
+    probe did. An EMPTY Δ commits
     nothing (no version bump for a no-op day).
 
     ``delta_rows``: precomputed (ideally pinned) ``band_keys_for``-
@@ -579,12 +581,8 @@ def incremental_lsh_pairs(
     )
     cross = probe_store_pairs(spark, delta, table_dir, id_col, use_bloom)
     if include_within:
-        a = delta.select(F.col(id_col).alias("id_a"), "band", "band_key")
-        b = delta.select(F.col(id_col).alias("id_b"), "band", "band_key")
-        within = (
-            a.join(b, ["band", "band_key"])
-            .filter(F.col("id_a") < F.col("id_b"))
-            .select("id_a", "id_b")
+        within = pairs_sharing_key(delta, id_col, ["band", "band_key"]).select(
+            "id_a", "id_b"
         )
         pairs = cross.unionByName(within).distinct()
     else:

@@ -54,6 +54,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .bloom import bloom_build, with_bloom_flag
+from .joins import pairs_sharing_key
 from .similarity import cosine, hyperplane_bucket
 from .snapshots import (
     current_version,
@@ -299,6 +300,24 @@ def admit_vector_delta(
     )
 
 
+def within_cosine_pairs(
+    delta: DataFrame, tau: float, id_col: str = "vec_id", vec_col: str = "embedding"
+) -> DataFrame:
+    """Δ×Δ near-dup pairs (id_a < id_b, cos_sim) from ``bucket_rows_for``
+    rows: pairs sharing a bucket, exact-verified at round(cos,6) ≥ tau
+    — the within-batch arm of incremental_cosine_pairs and of the
+    streaming curation funnel (streaming/store_probe.py). Reads
+    ``delta`` twice; callers pass it pinned."""
+    # cos is a SYMMETRIC fold (zip_with pairs elementwise, the sum folds
+    # left-to-right over positions), so the id order cannot change it
+    ea, eb = F.col(f"{vec_col}_a"), F.col(f"{vec_col}_b")
+    return (
+        pairs_sharing_key(delta, id_col, ["bucket"], (vec_col,))
+        .select("id_a", "id_b", F.round(cosine(ea, eb), 6).alias("cos_sim"))
+        .filter(F.col("cos_sim") >= tau)
+    )
+
+
 def incremental_cosine_pairs(
     spark: SparkSession,
     new_vecs: DataFrame,
@@ -321,8 +340,9 @@ def incremental_cosine_pairs(
 
     ``commit=True`` appends Δ's bucket rows to the store in the same
     call (the daily-ingest shape: probe, then admit). Δ's rows are
-    pinned with an eager localCheckpoint first, so the probe, the
-    self-join, and the commit all read one materialization.
+    pinned with an eager localCheckpoint first, so the probe, both
+    reads of the Δ×Δ pairs_sharing_key join (``within_cosine_pairs``),
+    and the commit all read one materialization.
     """
     validate_store_dials(table_dir, dim)
     delta = bucket_rows_for(
@@ -332,29 +352,8 @@ def incremental_cosine_pairs(
         spark, delta, table_dir, tau, id_col, vec_col, use_bloom
     )
     if include_within:
-        a = delta.select(
-            F.col(id_col).alias("id_a"), "bucket", F.col(vec_col).alias("_ea")
-        )
-        b = delta.select(
-            F.col(id_col).alias("id_b"), "bucket", F.col(vec_col).alias("_eb")
-        )
-        within = (
-            a.join(b, "bucket")
-            .filter(F.col("id_a") < F.col("id_b"))
-            .select(
-                "id_a",
-                "id_b",
-                F.round(cosine(F.col("_ea"), F.col("_eb")), 6).alias(
-                    "cos_sim"
-                ),
-            )
-            .filter(F.col("cos_sim") >= tau)
-        )
-        # cos is a SYMMETRIC fold (zip_with pairs elementwise, the sum
-        # folds left-to-right over positions), so least/greatest id
-        # ordering cannot change the value; Δ∩store = ∅ keeps the two
-        # arms disjoint.
-        pairs = cross.unionByName(within)
+        # Δ∩store = ∅ keeps the two arms disjoint.
+        pairs = cross.unionByName(within_cosine_pairs(delta, tau, id_col, vec_col))
     else:
         pairs = cross
     if commit:

@@ -46,12 +46,14 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from ..operators import snapshots as S
+from ..operators.joins import pairs_sharing_key
 from ..operators.sigstore import admit_delta, band_keys_for, probe_store_pairs
 from ..operators.vecstore import (
     admit_vector_delta,
     bucket_rows_for,
     probe_vector_pairs,
     validate_store_dials,
+    within_cosine_pairs,
 )
 from ..session import overlap
 from .snapshot_sink import _app_id
@@ -302,7 +304,6 @@ def curation_batch(
         return
     from ..operators.dedup import normalized_text
     from ..operators.dedup import connected_components
-    from ..operators.similarity import cosine
 
     spark = batch_df.sparkSession
     # the curation corpus is documents WITH embeddings (both stores
@@ -367,25 +368,13 @@ def curation_batch(
         vec_fut = submit(_vec_chain)
     sig_delta, t_cross = sig_fut.result()
     vec_delta, v_cross = vec_fut.result()
-    a = sig_delta.select(F.col(id_col).alias("id_a"), "band", "band_key")
-    b = sig_delta.select(F.col(id_col).alias("id_b"), "band", "band_key")
     t_within = (
-        a.join(b, ["band", "band_key"])
-        .filter(F.col("id_a") < F.col("id_b"))
+        pairs_sharing_key(sig_delta, id_col, ["band", "band_key"])
         .select("id_a", "id_b")
         .distinct()
     )
-    va = vec_delta.select(
-        F.col("vec_id").alias("id_a"), "bucket", F.col(vec_col).alias("_ea")
-    )
-    vb = vec_delta.select(
-        F.col("vec_id").alias("id_b"), "bucket", F.col(vec_col).alias("_eb")
-    )
-    v_within = (
-        va.join(vb, "bucket")
-        .filter(F.col("id_a") < F.col("id_b"))
-        .filter(F.round(cosine(F.col("_ea"), F.col("_eb")), 6) >= tau)
-        .select("id_a", "id_b")
+    v_within = within_cosine_pairs(vec_delta, tau, "vec_id", vec_col).select(
+        "id_a", "id_b"
     )
 
     def _mark(pairs: DataFrame, flag: str, cross: bool) -> DataFrame:

@@ -1,10 +1,19 @@
-"""as-of join and range join vs brute-force oracles."""
+"""as-of join and range join vs brute-force oracles; the contract of
+pairs_sharing_key, the one candidate-pair self-join."""
 
 from __future__ import annotations
 
+import pathlib
+import re
+from collections import Counter
+
 from pyspark.sql import functions as F
 
-from bike_data_flow_spark.operators.joins import asof_join, range_join
+from bike_data_flow_spark.operators.joins import (
+    asof_join,
+    pairs_sharing_key,
+    range_join,
+)
 
 
 def test_asof_join_backward(spark):
@@ -155,3 +164,82 @@ def test_range_join_rejects_interval_preserving_outer(spark):
     intervals = spark.createDataFrame([(1, 0.0, 10.0)], ["iid", "lo", "hi"])
     with pytest.raises(ValueError, match="inner"):
         range_join(points, intervals, "x", "lo", "hi", bin_size=8.0, how="right")
+
+
+def _pair_rows(df) -> list[tuple]:
+    return sorted(tuple(r) for r in df.collect())
+
+
+def test_pairs_sharing_key_null_keys_never_pair(spark):
+    df = spark.createDataFrame(
+        [(1, None), (2, None), (3, "k"), (4, "k")], "id int, key string"
+    )
+    got = pairs_sharing_key(df, "id", ["key"])
+    assert got.columns == ["id_a", "id_b"]
+    assert _pair_rows(got) == [(3, 4)]
+
+
+def test_pairs_sharing_key_repeats_pairs_like_the_self_join(spark):
+    rows = [(1, "k"), (1, "k"), (2, "k"), (3, "k"), (1, "j"), (2, "j")]
+    df = spark.createDataFrame(rows, "id int, key string")
+    # the hand-written self-join multiset: one row per (left row, right
+    # row) with the same key and id_a < id_b
+    want = Counter(
+        (a, b) for a, ka in rows for b, kb in rows if ka == kb and a < b
+    )
+    got = Counter(_pair_rows(pairs_sharing_key(df, "id", ["key"])))
+    assert got == want
+    # the duplicated (1, "k") row doubles (1, 2) and (1, 3) under "k";
+    # (1, 2) also shares "j" — one row per shared key, not per pair
+    assert got[(1, 2)] == 3 and got[(1, 3)] == 2 and got[(2, 3)] == 1
+
+
+def test_pairs_sharing_key_equal_ids_never_pair(spark):
+    df = spark.createDataFrame(
+        [(5, "k"), (5, "k"), (5, "k"), (7, "j")], "id int, key string"
+    )
+    assert _pair_rows(pairs_sharing_key(df, "id", ["key"])) == []
+
+
+def test_pairs_sharing_key_carries_each_sides_own_columns(spark):
+    df = spark.createDataFrame(
+        [(i, "k", f"p{i}", 10 * i) for i in (3, 1, 2)],
+        "id int, key string, payload string, w int",
+    )
+    got = pairs_sharing_key(df, "id", ["key"], ("payload", "w"))
+    assert got.columns == ["id_a", "payload_a", "w_a", "id_b", "payload_b", "w_b"]
+    rows = got.collect()
+    assert sorted((r.id_a, r.id_b) for r in rows) == [(1, 2), (1, 3), (2, 3)]
+    for r in rows:
+        assert (r.payload_a, r.w_a) == (f"p{r.id_a}", 10 * r.id_a)
+        assert (r.payload_b, r.w_b) == (f"p{r.id_b}", 10 * r.id_b)
+
+
+def test_pairs_sharing_key_multi_column_keys(spark):
+    df = spark.createDataFrame(
+        [(1, "a", 1), (2, "a", 1), (3, "a", 2), (4, "b", 1), (5, "a", None),
+         (6, "a", None)],
+        "id int, k1 string, k2 int",
+    )
+    got = pairs_sharing_key(df, "id", ["k1", "k2"])
+    assert got.columns == ["id_a", "id_b"]
+    assert _pair_rows(got) == [(1, 2)]
+
+
+def test_no_hand_rolled_pair_self_joins_outside_the_helper():
+    """Candidate pairs go through joins.pairs_sharing_key only, so the
+    self-join's form (and any later change of it) lives in one place."""
+    pkg = pathlib.Path(__file__).resolve().parent.parent / "bike_data_flow_spark"
+    banned = re.compile(r"""F\.col\(["']id_a["']\)\s*<\s*F\.col\(["']id_b["']\)""")
+    # mutual_knn_pairs joins the k-NN edges with their REVERSED copy on
+    # (id_a, id_b) to keep reciprocal edges — not pairs sharing a key
+    allowed = {"queries/relational12.py"}
+    hits = [
+        f"{rel}:{n}: {line.strip()}"
+        for path in sorted(pkg.rglob("*.py"))
+        if path != pkg / "operators" / "joins.py"
+        and (rel := str(path.relative_to(pkg))) not in allowed
+        for n, line in enumerate(path.read_text().splitlines(), 1)
+        if banned.search(line)
+    ]
+    assert hits == []

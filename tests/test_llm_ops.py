@@ -62,6 +62,21 @@ def test_simhash_near_pairs(docs):
     assert bin(vals[1] ^ vals[2]).count("1") == 9
 
 
+def test_simhash_near_pairs_rejects_undialed_radius(spark):
+    # one flipped bit in each of the 4 12-bit blocks: hamming 4, no block
+    # shared — the band join cannot find the pair, so radius 4 (or 5)
+    # must raise, not return nothing
+    far = sum(1 << (b * 12) for b in range(4))
+    sig = spark.createDataFrame([(1, 0), (2, far)], "doc_id long, simhash long")
+    for radius in (4, 5):
+        with pytest.raises(ValueError, match="pigeonhole"):
+            D.simhash_near_pairs(sig, max_hamming=radius)
+    # three flipped blocks leave one shared: found at radius 3
+    near = sig.withColumn("simhash", F.col("simhash").bitwiseAND(~1))
+    got = [tuple(r) for r in D.simhash_near_pairs(near, max_hamming=3).collect()]
+    assert got == [(1, 2, 3)]
+
+
 def test_max_shingle_freq_guard(docs):
     unfiltered = D.doc_shingles(docs).count()
     filtered = D.doc_shingles(docs, max_shingle_freq=1).count()
