@@ -10,10 +10,14 @@ evolution) without an Iceberg runtime jar:
 - **time travel**: ``read(version=N)`` pins any retained manifest.
 - **append / overwrite**: an append manifest carries the previous
   manifest's dirs + the new one; an overwrite carries only the new one.
-- **schema evolution**: reads merge schemas across data dirs, so rows
-  written before a column existed surface it as NULL (Iceberg
-  add-column semantics, which the reference relies on across daily
-  partitions).
+- **schema evolution**: the manifest records the TABLE schema — an
+  append adds the frame's new columns to it, and one that changes an
+  existing column's type is refused — and reads scan every dir with
+  that schema instead of merging file footers, so rows written before a
+  column existed surface it as NULL (Iceberg add-column semantics,
+  which the reference relies on across daily partitions) and building
+  a read starts no Spark job: the schema lives in table metadata, not
+  in data files.
 
 Commit protocol (single-writer, any-reader): data files first, then
 the manifest (``_snapshots/v{N}.json``, O_EXCL-published so racing
@@ -36,6 +40,7 @@ from __future__ import annotations
 import json
 import os
 import time
+from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -260,7 +265,8 @@ def snapshot_write(
     append whose partition_by differs from the previous version's is
     refused — a mixed layout would surface the partition column as
     NULL for rows of the differently-laid dirs, silently corrupting
-    reads.
+    reads. The schema is a table property too (see _align_to_table): an
+    append may add or omit columns, not change an existing one's type.
 
     ``expected_version`` makes the commit a compare-and-swap: it
     succeeds only if the table is STILL at that version (0 = no table
@@ -304,8 +310,13 @@ def snapshot_write(
     version = 1 if prev is None else prev + 1
 
     layout = list(partition_by or [])
-    if mode == "append" and prev is not None:
-        prev_layout = _read_manifest(table_dir, prev).get("partition_by", [])
+    prev_manifest = (
+        _read_manifest(table_dir, prev)
+        if mode == "append" and prev is not None
+        else None
+    )
+    if prev_manifest is not None:
+        prev_layout = prev_manifest.get("partition_by", [])
         if prev_layout != layout:
             raise ValueError(
                 f"snapshot table {table_dir} is laid out "
@@ -313,6 +324,7 @@ def snapshot_write(
                 "layouts must match (mixed layouts read the partition "
                 "column as NULL for the other dirs) — overwrite to relay"
             )
+    df, schema = _align_to_table(df, table_dir, prev_manifest)
 
     # CHECK constraints gate NEW data only: maintenance commits
     # (compaction/zorder) rewrite rows that were validated when first
@@ -339,14 +351,14 @@ def snapshot_write(
         publish_gate()
 
     dirs = [rel_dir]
-    if mode == "append" and prev is not None:
-        dirs = _read_manifest(table_dir, prev)["dirs"] + dirs
+    if prev_manifest is not None:
+        dirs = prev_manifest["dirs"] + dirs
     manifest = {
         "version": version,
         "mode": mode,
         "dirs": dirs,
         "committed_at_unix": int(time.time()),
-        "schema": df.schema.jsonValue(),
+        "schema": schema,
         "meta": meta or {},
         "partition_by": layout,
     }
@@ -362,85 +374,119 @@ def snapshot_write(
     return version
 
 
-def _has_data_files(path: str) -> bool:
-    """Does the version dir contain any parquet data file (recursing
-    into Hive partition subdirs)? A partitionBy write of ZERO rows
-    emits a dir holding only _SUCCESS — no schema-carrying file at all
-    (non-partitioned writes do leave one) — and handing such a dir to
-    the reader fails with UNABLE_TO_INFER_SCHEMA. Empty commits are
-    legitimate (a daily batch with no new rows), so reads tolerate the
-    fileless dirs by skipping them: zero rows contributed either way."""
-    for _root, _dirs, files in os.walk(path):
-        if any(f.endswith(".parquet") for f in files):
-            return True
-    return False
+def _nullable(schema_json):
+    """A schema's JSON with every nullability flag set: the form two
+    types are compared in (nullability ignored), and the form a
+    Parquet scan returns (the file source reads every field nullable)."""
+    if isinstance(schema_json, dict):
+        return {
+            k: True
+            if k in ("nullable", "containsNull", "valueContainsNull")
+            else _nullable(v)
+            for k, v in schema_json.items()
+        }
+    if isinstance(schema_json, list):
+        return [_nullable(v) for v in schema_json]
+    return schema_json
+
+
+# lossless widenings an append is cast through to the table's type
+# (a per-dir union of the two files would widen the same way)
+_WIDENS = {
+    ("byte", "short"), ("byte", "integer"), ("byte", "long"),
+    ("short", "integer"), ("short", "long"), ("integer", "long"),
+    ("float", "double"),
+}
+
+
+def _align_to_table(
+    df: DataFrame, table_dir: str, prev_manifest: dict | None
+) -> tuple[DataFrame, dict]:
+    """The frame to write and the TABLE schema (JSON) the new manifest
+    records. An overwrite (``prev_manifest`` None) records the frame's
+    schema. An append records the previous table schema plus the
+    frame's new columns, in order, so a column the frame omits stays in
+    the table and reads NULL for the frame's rows (Iceberg add-column
+    semantics); a column the frame carries in a narrower type (int into
+    a long column) is cast up to the table's. Any other type change of
+    an existing column (nullability aside) is refused here, before any
+    data write — the table is untouched; committing it would leave
+    files no single read schema covers."""
+    if prev_manifest is None:
+        return df, df.schema.jsonValue()
+    table = prev_manifest["schema"]
+    known = {f["name"]: f["type"] for f in table["fields"]}
+    incoming = df.schema.jsonValue()["fields"]
+    changed = {
+        f["name"]: (known[f["name"]], f["type"])
+        for f in incoming
+        if f["name"] in known
+        and _nullable(known[f["name"]]) != _nullable(f["type"])
+    }
+    clash = [
+        f"{name}: table {want}, append {got}"
+        for name, (want, got) in changed.items()
+        if (got, want) not in _WIDENS
+    ]
+    if clash:
+        raise ValueError(
+            f"snapshot table {table_dir} append refused — column type(s) "
+            f"differ from the table schema: {'; '.join(clash)} "
+            "(cast the frame, or overwrite to change a type)"
+        )
+    if changed:
+        from pyspark.sql import functions as F
+
+        df = df.select(
+            *[
+                F.col(c).cast(changed[c][0]).alias(c) if c in changed else c
+                for c in df.columns
+            ]
+        )
+    return df, {
+        **table,
+        "fields": table["fields"]
+        + [f for f in incoming if f["name"] not in known],
+    }
 
 
 def snapshot_read(
     spark: SparkSession, table_dir: str, version: int | None = None
 ) -> DataFrame:
-    """Read the table at a pinned version (time travel) or the latest."""
+    """Read the table at a pinned version (time travel) or the latest.
+
+    Every dir is read with the manifest's recorded table schema, so
+    building the frame starts no Spark job (a schema-inferring or
+    ``mergeSchema`` read opens file footers in a job per dir, a cost
+    that grew with every append). Rows written before a column existed
+    read it as NULL; partition columns take their recorded type, not
+    the one Hive directory-name inference would guess (a string column
+    holding '2024-01-01' is not a DATE); a fileless dir (a partitionBy
+    write of zero rows leaves only _SUCCESS) reads as zero rows."""
+    from pyspark.sql.types import StructType
+
     if version is None:
         version = current_version(table_dir)
         if version is None:
             raise FileNotFoundError(f"no committed snapshot under {table_dir}")
     manifest = _read_manifest(table_dir, version)
-    paths = [
-        p
-        for d in manifest["dirs"]
-        if _has_data_files(p := f"{table_dir}/{d}")
-    ]
-    if not paths:
-        # every referenced dir is fileless (e.g. a table whose only
-        # commits were empty batches): surface the manifest's recorded
-        # schema instead of an unreadable scan
-        from pyspark.sql.types import StructType
-
-        return spark.createDataFrame(
-            [], StructType.fromJson(manifest["schema"])
-        )
-    if len(paths) > 1 and manifest.get("partition_by"):
+    layout = manifest.get("partition_by") or []
+    fields = StructType.fromJson(_nullable(manifest["schema"])).fields
+    # partition columns last, where a partitioned scan puts them, so a
+    # fileless dir's frame lines up with the others
+    schema = StructType(
+        [f for f in fields if f.name not in layout]
+        + [f for f in fields if f.name in layout]
+    )
+    paths = [f"{table_dir}/{d}" for d in manifest["dirs"]]
+    read = spark.read.schema(schema).parquet
+    if len(paths) > 1 and layout:
         # partition discovery refuses multiple roots whose own names
         # differ (CONFLICTING_DIRECTORY_STRUCTURES): read each version
         # dir as its own base and union — per-root PartitionFilters
         # pruning still applies to every branch
-        dfs = [
-            spark.read.option("mergeSchema", "true").parquet(p)
-            for p in paths
-        ]
-        out = dfs[0]
-        for d in dfs[1:]:
-            out = out.unionByName(d, allowMissingColumns=True)
-    else:
-        out = spark.read.option("mergeSchema", "true").parquet(*paths)
-    return _restore_partition_types(out, manifest)
-
-
-def _restore_partition_types(out: DataFrame, manifest: dict) -> DataFrame:
-    """Partition columns come back through Hive directory-name
-    INFERENCE, which can drift from the written type (a string column
-    holding '2024-01-01' reads back as DATE, a zero-padded code as
-    INT) — so time travel would not return the schema that was
-    committed. Cast drifted partition columns back to the manifest's
-    recorded type. Cast ONLY on mismatch: for the common case (int
-    shard/bin columns, where inference already agrees) the column is
-    untouched, so predicates on it still push down as
-    PartitionFilters — a cast would shadow the pruning column."""
-    layout = manifest.get("partition_by") or []
-    if not layout:
-        return out
-    from pyspark.sql import functions as F
-    from pyspark.sql.types import StructType
-
-    recorded = {
-        f.name: f.dataType
-        for f in StructType.fromJson(manifest["schema"]).fields
-    }
-    actual = dict(zip(out.schema.names, [f.dataType for f in out.schema]))
-    for c in layout:
-        if c in recorded and c in actual and recorded[c] != actual[c]:
-            out = out.withColumn(c, F.col(c).cast(recorded[c]))
-    return out
+        return reduce(DataFrame.unionByName, [read(p) for p in paths])
+    return read(*paths)
 
 
 def latest_meta(table_dir: str) -> dict:
@@ -565,7 +611,7 @@ def snapshot_merge(
     i.e. a bad merge is rolled back by pinning version N-1, the
     recovery story plain-parquet MERGE lacks. Source-only columns are
     ADDED to the table (NULL for pre-existing rows) — the same
-    add-column evolution the append path gets from mergeSchema.
+    add-column evolution an append gets from the table schema.
     Returns the new version.
 
     Cost shape: each merge rewrites the live row set (the manifest has

@@ -41,6 +41,8 @@ admission shape the reference never had — north-star operator.
 
 from __future__ import annotations
 
+from functools import reduce
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
@@ -293,9 +295,14 @@ def curation_batch(
     Per-batch scale shape: one minhash pass + one bucketing pass over
     the PROBE SET only (each localCheckpointed and reused by probe,
     within-join, and admission), both store probes pruned by the
-    persisted two-layer prune — per-day cost is O(|Δ| + matches),
-    independent of store size. The within-batch joins and the
-    components run on Δ-sized frames. The curation corpus is documents
+    persisted two-layer prune, and store reads that take their schema
+    from the manifest (no footer job) — per-day cost is O(|Δ| +
+    matches), independent of store size. The four Δ-sized pair sets
+    (store and within-batch, text and vec) are evaluated once, as ONE
+    kind-tagged pin that the components and the decision flags both
+    read; the decisions are pinned once more for their three
+    consumers. The three commits — the decisions write and the two
+    fenced admissions — run in overlap. The curation corpus is documents
     WITH embeddings (both stores must be probeable for every corpus
     document): batch ids missing from ``embeddings`` (matched on
     vec_id) are outside the corpus and emit no decision row.
@@ -368,41 +375,40 @@ def curation_batch(
         vec_fut = submit(_vec_chain)
     sig_delta, t_cross = sig_fut.result()
     vec_delta, v_cross = vec_fut.result()
-    t_within = (
-        pairs_sharing_key(sig_delta, id_col, ["band", "band_key"])
-        .select("id_a", "id_b")
-        .distinct()
-    )
-    v_within = within_cosine_pairs(vec_delta, tau, "vec_id", vec_col).select(
-        "id_a", "id_b"
-    )
-
-    def _mark(pairs: DataFrame, flag: str, cross: bool) -> DataFrame:
-        # Δ∩store = ∅ by the admission contract, so a CROSS pair has
-        # exactly ONE side in the batch — the semi-join picks it out;
-        # WITHIN pairs reject the GREATER id (id_b), the keep-min rule
-        # the batch funnel (curation_v2) uses.
-        ids = (
-            pairs.select(F.col("id_a").alias(id_col)).unionByName(
-                pairs.select(F.col("id_b").alias(id_col))
-            )
-            if cross
-            else pairs.select(F.col("id_b").alias(id_col))
-        )
-        return (
-            ids.join(probe_ids, id_col, "left_semi")
-            .distinct()
-            .withColumn(flag, F.lit(True))
-        )
-
-    edges = t_within.unionByName(v_within)
+    t_within = pairs_sharing_key(
+        sig_delta, id_col, ["band", "band_key"]
+    ).distinct()
+    v_within = within_cosine_pairs(vec_delta, tau, "vec_id", vec_col)
+    # ONE pin of all four pair sets, tagged by kind, so each is
+    # evaluated once: the components and the decision flags both read
+    # it. Every set is Δ-sized.
+    kinds = {"tc": t_cross, "vc": v_cross, "tw": t_within, "vw": v_within}
+    pairs = reduce(
+        DataFrame.unionByName,
+        [
+            p.select("id_a", "id_b", F.lit(k).alias("kind"))
+            for k, p in kinds.items()
+        ],
+    ).localCheckpoint()
+    cross = F.col("kind").isin("tc", "vc")
+    edges = pairs.filter(~cross).select("id_a", "id_b")
     clusters = connected_components(edges, probe_ids, id_col=id_col)
+    # Δ∩store = ∅ by the admission contract, so a CROSS pair has
+    # exactly ONE side in the batch: mark both endpoints and let the
+    # probe_ids left join drop the store side. WITHIN pairs reject the
+    # GREATER id (id_b), the keep-min rule the batch funnel
+    # (curation_v2) uses.
+    flags = (
+        pairs.select(F.col("id_b").alias(id_col), "kind")
+        .unionByName(
+            pairs.filter(cross).select(F.col("id_a").alias(id_col), "kind")
+        )
+        .groupBy(id_col)
+        .agg(*[F.max(F.col("kind") == k).alias(f"_{k}") for k in kinds])
+    )
     assign = split_assign if split_assign is not None else _default_split_assign
     dec = (
-        probe_ids.join(_mark(t_cross, "_tc", True), id_col, "left")
-        .join(_mark(v_cross, "_vc", True), id_col, "left")
-        .join(_mark(t_within, "_tw", False), id_col, "left")
-        .join(_mark(v_within, "_vw", False), id_col, "left")
+        probe_ids.join(flags, id_col, "left")
         .join(clusters, id_col)
         .select(
             id_col,
@@ -422,7 +428,7 @@ def curation_batch(
                 assign(F.col("cluster_id")),
             ).alias("split"),
         )
-        .localCheckpoint()  # consumed 3×: rows out, admission, and raw join
+        .localCheckpoint()  # consumed 3×: rows out, and both admissions
     )
     rows = (
         raw.select(id_col)
@@ -441,38 +447,44 @@ def curation_batch(
             "split",
         )
     )
-    _write_batch_partition(rows, batch_id, out_dir)
-
-    if not admit:
-        # probe-only mode (the monitoring shape, and the smoke
-        # harness's repeatable-timing shape): decisions are computed
-        # and emitted, neither store is mutated
-        return
-    admitted = dec.filter(F.col("decision") == "admitted").select(id_col)
-    # each store fences independently on ITS OWN txn meta: a crash
-    # between the two admissions replays the batch, the already-
-    # admitted store skips, the other catches up — never double-admits
+    # each store fences independently on ITS OWN txn meta, so the
+    # decisions write and the two admissions are independent commits
+    # and run in overlap: a crash in any of them replays the batch, a
+    # store that already admitted skips, the others catch up — never a
+    # double admission, and the decisions partition is overwritten
+    # with identical rows
     fence = {"txn_app_id": app_id, "txn_version": batch_id}
-    last = S.last_txn_version(sig_dir, app_id)
-    if last is None or batch_id > last:
-        admit_delta(
-            spark,
-            sig_delta.join(admitted, id_col, "left_semi"),
-            sig_dir,
-            extra_meta=fence,
-        )
-    last = S.last_txn_version(vec_dir, app_id)
-    if last is None or batch_id > last:
-        admit_vector_delta(
-            spark,
-            vec_delta.join(
-                admitted.withColumnRenamed(id_col, "vec_id"),
-                "vec_id",
-                "left_semi",
-            ),
-            vec_dir,
-            extra_meta=fence,
-        )
+
+    def _fenced(admit_fn, delta: DataFrame, store_dir: str) -> None:
+        last = S.last_txn_version(store_dir, app_id)
+        if last is None or batch_id > last:
+            admit_fn(spark, delta, store_dir, extra_meta=fence)
+
+    with overlap() as submit:
+        submit(_write_batch_partition, rows, batch_id, out_dir)
+        if admit:
+            # probe-only mode (admit=False — the monitoring shape, and
+            # the smoke harness's repeatable-timing shape) emits the
+            # decisions and mutates neither store
+            admitted = dec.filter(F.col("decision") == "admitted").select(
+                id_col
+            )
+            submit(
+                _fenced,
+                admit_delta,
+                sig_delta.join(admitted, id_col, "left_semi"),
+                sig_dir,
+            )
+            submit(
+                _fenced,
+                admit_vector_delta,
+                vec_delta.join(
+                    admitted.withColumnRenamed(id_col, "vec_id"),
+                    "vec_id",
+                    "left_semi",
+                ),
+                vec_dir,
+            )
 
 
 def stream_curation(

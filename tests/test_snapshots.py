@@ -436,6 +436,8 @@ def _race_recover_commit(table_dir, marker, barrier, q):
 
     barrier.wait()
     prev = _recover_orphan_manifests(table_dir, current_version(table_dir))
+    # both writers resolve prev before either publishes: the race
+    barrier.wait()
     version = prev + 1
     rel = f"data/v{version}-{marker}"
     os.makedirs(f"{table_dir}/{rel}", exist_ok=True)
@@ -826,3 +828,82 @@ def test_partition_column_type_round_trips(spark, tmp_path: Path):
     assert dict(got.dtypes)["dt"] == "string"
     assert got.filter(got.dt == "2024-01-02").count() == 1
     assert dict(snapshot_read(spark, t, version=1).dtypes)["dt"] == "string"
+
+
+def test_append_omitting_a_column_keeps_it_in_the_table(spark, tmp_path: Path):
+    """The manifest records the TABLE schema: an append without an
+    existing column keeps that column, and the append's rows read it
+    as NULL."""
+    from bike_data_flow_spark.operators.snapshots import _read_manifest
+
+    t = str(tmp_path / "tbl")
+    snapshot_write(_df(spark, [(1, "a", 1.5)], "k int, v string, score double"), t)
+    snapshot_write(_df(spark, [(2, "b")]), t)  # no score
+    assert [f["name"] for f in _read_manifest(t, 2)["schema"]["fields"]] == [
+        "k", "v", "score",
+    ]
+    rows = {r["k"]: r["score"] for r in snapshot_read(spark, t).collect()}
+    assert rows == {1: 1.5, 2: None}
+
+
+def test_append_with_a_changed_column_type_is_refused(spark, tmp_path: Path):
+    """An append whose type for an existing column differs from the
+    table schema is refused before the data write: no data dir, no
+    manifest, and the table still reads. Nullability alone is no
+    change, and a lossless widening (int into a bigint column) is cast
+    to the table's type."""
+    import os
+
+    import pytest
+
+    t = str(tmp_path / "tbl")
+    snapshot_write(_df(spark, [(1, "a")], "k bigint, v string"), t)
+    with pytest.raises(ValueError, match="v: table string, append integer"):
+        snapshot_write(_df(spark, [(2, 7)], "k bigint, v int"), t)
+    assert current_version(t) == 1
+    assert len(os.listdir(f"{t}/data")) == 1
+    assert sorted(os.listdir(f"{t}/_snapshots")) == ["v1.json"]
+    snapshot_write(_df(spark, [(3, "c")], "k int not null, v string"), t)
+    got = snapshot_read(spark, t)
+    assert dict(got.dtypes) == {"k": "bigint", "v": "string"}
+    assert {r["k"] for r in got.collect()} == {1, 3}
+
+
+def test_read_starts_no_job_and_matches_merged_read(spark, tmp_path: Path):
+    """Reading with the manifest schema builds the frame without a
+    Spark job (a footer-merging read starts one per dir), and returns
+    the same rows and columns as a mergeSchema read of the same dirs,
+    across five `_shard`-partitioned versions with an added column."""
+    from pyspark.sql import functions as F
+
+    from bike_data_flow_spark.operators.snapshots import _read_manifest
+
+    t = str(tmp_path / "tbl")
+    for v in range(5):
+        df = spark.range(v * 10, v * 10 + 10).select(
+            F.col("id").alias("k"),
+            F.pmod("id", F.lit(3)).cast("int").alias("_shard"),
+        )
+        if v >= 3:
+            df = df.withColumn("score", F.col("k") * 0.5)
+        snapshot_write(df, t, partition_by=["_shard"])
+
+    sched = spark.sparkContext._jsc.sc().dagScheduler()
+    before = sched.nextJobId()
+    got = snapshot_read(spark, t)
+    assert sched.nextJobId() - before == 0
+
+    merged = None
+    for d in _read_manifest(t, 5)["dirs"]:
+        part = spark.read.option("mergeSchema", "true").parquet(f"{t}/{d}")
+        merged = part if merged is None else merged.unionByName(
+            part, allowMissingColumns=True
+        )
+    assert sorted(got.schema.fields, key=lambda f: f.name) == sorted(
+        merged.schema.fields, key=lambda f: f.name
+    )
+    cols = sorted(got.columns)
+    assert sorted(got.select(cols).collect()) == sorted(
+        merged.select(cols).collect()
+    )
+    assert got.count() == 50

@@ -572,6 +572,30 @@ def test_curation_batch_crash_inside_overlapped_probe(
     )
 
 
+def test_curation_batch_crash_in_sig_admission_beside_vec(
+    spark, cur_dirs, monkeypatch
+):
+    """The three commits run in overlap: a fault in the sig admission
+    leaves the vec admission and the decisions write beside it
+    committed; the replay admits sig once and the vec fence skips."""
+    _crash_and_replay(
+        spark, cur_dirs, monkeypatch, "admit_delta",
+        moved=(0, 1), decided=True,
+    )
+
+
+def test_curation_batch_crash_in_decisions_write(
+    spark, cur_dirs, monkeypatch
+):
+    """A fault in the decisions write, with both admissions beside it:
+    both stores commit, no decisions partition lands, and the replay
+    writes a clean run's decisions while both fences skip."""
+    _crash_and_replay(
+        spark, cur_dirs, monkeypatch, "_write_batch_partition",
+        moved=(1, 1), decided=False,
+    )
+
+
 def test_curation_batch_scopes_to_embedded_corpus(spark, cur_dirs):
     """A batch document with no embedding is outside the curation
     corpus: no decision row, no admission to either store."""
