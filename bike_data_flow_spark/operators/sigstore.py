@@ -94,9 +94,11 @@ from .snapshots import (
     SnapshotConflictError,
     current_version,
     latest_meta,
+    snapshot_append,
     snapshot_read,
     snapshot_write,
     table_layout,
+    txn_committed,
 )
 
 # Directory-layout shard for the band-key store: pmod of the combined
@@ -440,7 +442,7 @@ def admit_delta(
     spark: SparkSession,
     delta: DataFrame,
     table_dir: str,
-    extra_meta: dict | None = None,
+    txn: tuple[str, int] | None = None,
 ) -> int | None:
     """Admit PRECOMPUTED Δ band-key rows into the store: CAS-merge Δ's
     bitmap into the persisted bloom, and only then let the store append
@@ -449,9 +451,9 @@ def admit_delta(
     could leave admitted keys missing from it, and a bloom false
     NEGATIVE would silently drop real candidates forever. Returns the
     new store version, or None for an empty Δ (no version bump for a
-    no-op batch). ``extra_meta`` rides on the append manifest beside
-    the carried table properties — the streaming sink's txn fence keys
-    go here.
+    no-op batch) or a replayed ``txn``. ``txn`` = (app_id, batch id) is
+    a streaming caller's fence (snapshots.txn_committed), checked
+    before anything else: a replay starts no job and merges no bits.
 
     The two commits are FUSED for wall time: the bloom CAS runs in
     overlap with the append's data write, and the append's manifest
@@ -464,7 +466,7 @@ def admit_delta(
     commit, (extra bloom bits, store unchanged) after it — plus inert
     unreferenced data files, the same garbage class a crashed serial
     writer already leaves."""
-    if delta.isEmpty():
+    if txn_committed(table_dir, txn) or delta.isEmpty():
         return None
     bloom_dir = _bloom_table(table_dir)
     with overlap() as submit:
@@ -484,35 +486,17 @@ def admit_delta(
                 _commit_bloom_merge, spark, bloom_dir, delta_bloom,
                 current_version(table_dir),
             )
-        # carry the table's properties forward so latest_meta/
-        # table_layout survive any number of appends — but never stale
-        # txn fence keys from a previous writer's commit (the fence
-        # must only ever see keys its own commit wrote)
-        props = {
-            k: v
-            for k, v in latest_meta(table_dir).items()
-            if not k.startswith("txn_")
-        }
-        meta = {**props, **(extra_meta or {})}
-        layout = table_layout(table_dir)
-        if "_shard" in layout:
+        if "_shard" in table_layout(table_dir):
             # re-derive _shard under the STORE's recorded modulus (the
-            # runtime dial may differ), then route one task per shard:
-            # one file per Hive dir per commit (see
-            # signature_store_init's repartition note) — without this
-            # every append sprays task×shard tiny files and probe
-            # scans degrade per day
+            # runtime dial may differ); snapshot_append routes one task
+            # per shard (see signature_store_init's repartition note)
             delta = delta.withColumn(
                 "_shard", _shard_expr(store_shards(table_dir))
-            ).repartition(*layout)
-        elif layout:
-            delta = delta.repartition(*layout)
-        return snapshot_write(
+            )
+        return snapshot_append(
             delta,
             table_dir,
-            mode="append",
-            meta=meta or None,
-            partition_by=layout or None,
+            txn,
             # happens-before fence: the append is visible only after
             # the bloom commit succeeded; a bloom failure abandons the
             # append before any metadata exists

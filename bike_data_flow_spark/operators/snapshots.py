@@ -131,13 +131,19 @@ def _recover_orphan_manifests(table_dir: str, prev: int | None) -> int | None:
     read-check-replace under a short flock skips any stale flip.
     Versions are never reused and no data is ever lost.
     """
-    base = prev if prev is not None else 0
-    v = base
-    while os.path.exists(f"{_manifest_dir(table_dir)}/v{v + 1}.json"):
-        v += 1
-    if v == base:
+    v = _durable_version(table_dir, prev)
+    if v == (prev or 0):
         return prev
     _write_pointer(table_dir, v)
+    return v
+
+
+def _durable_version(table_dir: str, prev: int | None) -> int:
+    """The newest manifest published at or past version ``prev`` (0 =
+    none): past the pointer only when a commit died before its move."""
+    v = prev or 0
+    while os.path.exists(f"{_manifest_dir(table_dir)}/v{v + 1}.json"):
+        v += 1
     return v
 
 
@@ -489,23 +495,22 @@ def snapshot_read(
     return read(*paths)
 
 
+def _head(table_dir: str) -> dict:
+    """The current manifest ({} if no table yet)."""
+    v = current_version(table_dir)
+    return {} if v is None else _read_manifest(table_dir, v)
+
+
 def latest_meta(table_dir: str) -> dict:
     """The `meta` dict of the current manifest ({} if no table yet).
     Older manifests (pre-meta) read as {} too."""
-    v = current_version(table_dir)
-    if v is None:
-        return {}
-    return _read_manifest(table_dir, v).get("meta", {})
+    return _head(table_dir).get("meta", {})
 
 
 def table_layout(table_dir: str) -> list[str]:
     """The table's current partition_by layout ([] if unpartitioned or
-    no table yet) — what an append must match (the mixed-layout guard),
-    so incremental maintainers read it instead of hard-coding theirs."""
-    v = current_version(table_dir)
-    if v is None:
-        return []
-    return _read_manifest(table_dir, v).get("partition_by", [])
+    no table yet) — what an append must match (the mixed-layout guard)."""
+    return _head(table_dir).get("partition_by", [])
 
 
 def last_txn_version(table_dir: str, app_id: str) -> int | None:
@@ -514,18 +519,23 @@ def last_txn_version(table_dir: str, app_id: str) -> int | None:
     newest-to-oldest and stops at the FIRST manifest carrying the
     writer's app id — a single writer commits its txn versions in
     snapshot-version order, so the newest hit is the highest; the scan
-    still walks past interleaved commits from other writers (manual
-    appends, maintenance compaction with no meta), which therefore can
-    never disarm the fence. Long-lived streams pay O(commits since this
+    still walks past interleaved commits from other writers (their
+    appends record their own txn keys or none), which therefore can
+    never disarm the fence. Maintenance commits (compaction, merge,
+    delete, restore) repeat the head's txn keys, so they can neither
+    disarm nor rewind it. Long-lived streams pay O(commits since this
     writer's last commit) manifest reads per fence check, not O(V).
+
+    The scan starts at the newest DURABLE manifest, not the pointer: a
+    commit that died between its manifest publish and its pointer move
+    is rolled forward by the next write, so its txn is committed and
+    its replay must be fenced.
 
     Retention contract: the fence only sees RETAINED manifests, so
     ``expire_snapshots`` retention must exceed the maximum stream
     downtime — expiring ALL of a writer's manifests while its stream is
     down disarms the fence and a replayed batch would commit twice."""
-    latest = current_version(table_dir)
-    if latest is None:
-        return None
+    latest = _durable_version(table_dir, current_version(table_dir))
     for v in range(latest, 0, -1):
         try:
             meta = _read_manifest(table_dir, v).get("meta", {})
@@ -536,6 +546,52 @@ def last_txn_version(table_dir: str, app_id: str) -> int | None:
             if tv is not None:
                 return tv
     return None
+
+
+def txn_committed(table_dir: str, txn: tuple[str, int] | None) -> bool:
+    """The one replay check: True when this writer's ``txn`` = (app_id,
+    version) is at or below its last committed version. ``None`` (an
+    unfenced writer) is never a replay."""
+    if txn is None:
+        return False
+    last = last_txn_version(table_dir, txn[0])
+    return last is not None and txn[1] <= last
+
+
+def _properties(meta: dict) -> dict:
+    """A manifest's ``meta`` minus the txn keys of the writer that made
+    it: the table properties (a store's dials) later commits carry."""
+    return {k: v for k, v in meta.items() if not k.startswith("txn_")}
+
+
+def snapshot_append(
+    df: DataFrame,
+    table_dir: str,
+    txn: tuple[str, int] | None = None,
+    publish_gate=None,
+) -> int:
+    """The one append path of every incremental writer (the streaming
+    sink, both store admissions); returns the new version. From one
+    read of the head manifest it keeps the recorded ``partition_by``,
+    repartitioned on so each Hive dir gets one file per commit, and
+    carries the head's properties plus this writer's ``txn`` keys —
+    never a previous writer's. Callers check ``txn_committed`` first;
+    ``publish_gate`` is snapshot_write's."""
+    head = _head(table_dir)
+    layout = head.get("partition_by", [])
+    meta = _properties(head.get("meta", {}))
+    if txn is not None:
+        meta["txn_app_id"], meta["txn_version"] = txn
+    if layout:
+        df = df.repartition(*layout)
+    return snapshot_write(
+        df,
+        table_dir,
+        mode="append",
+        meta=meta,
+        partition_by=layout,
+        publish_gate=publish_gate,
+    )
 
 
 def snapshot_history(table_dir: str) -> list[dict]:
@@ -967,12 +1023,14 @@ def snapshot_restore(table_dir: str, version: int) -> int:
     shows the rollback as ordinary changes. Returns the new version.
 
     METADATA-ONLY: the new manifest simply references the restored
-    version's existing data dirs (plus its schema/meta/layout) — no
-    data file is read, copied, or written, which is the payoff of
-    manifests naming immutable dirs. expire_snapshots keeps those dirs
-    alive for as long as EITHER referencing manifest is retained, so a
-    restore never races retention. Requires the target manifest to
-    still be retained (expired versions are gone by design)."""
+    version's existing data dirs (plus its schema, layout and table
+    properties; the txn keys stay the head's, so a replay of a batch
+    committed after ``version`` stays fenced) — no data file is read,
+    copied, or written, which is the payoff of manifests naming
+    immutable dirs. expire_snapshots keeps those dirs alive for as
+    long as EITHER referencing manifest is retained, so a restore never
+    races retention. Requires the target manifest to still be retained
+    (expired versions are gone by design)."""
     os.makedirs(_manifest_dir(table_dir), exist_ok=True)
     prev = _recover_orphan_manifests(table_dir, current_version(table_dir))
     if prev is None:
@@ -985,13 +1043,17 @@ def snapshot_restore(table_dir: str, version: int) -> int:
             "retained (expired or never committed)"
         ) from None
     new_version = prev + 1
+    head = _read_manifest(table_dir, prev).get("meta", {})
     manifest = {
         "version": new_version,
         "mode": "overwrite",
         "dirs": target["dirs"],
         "committed_at_unix": int(time.time()),
         "schema": target["schema"],
-        "meta": target.get("meta", {}),
+        "meta": {
+            **_properties(target.get("meta", {})),
+            **{k: v for k, v in head.items() if k.startswith("txn_")},
+        },
         "partition_by": target.get("partition_by", []),
         "maintenance": {"restore_of": version},
     }

@@ -57,11 +57,12 @@ from .bloom import bloom_build, with_bloom_flag
 from .joins import pairs_sharing_key
 from .similarity import cosine, hyperplane_bucket
 from .snapshots import (
-    current_version,
     latest_meta,
+    snapshot_append,
     snapshot_read,
     snapshot_write,
     table_layout,
+    txn_committed,
 )
 
 # Directory-layout shard: the store persists Hive-partitioned on
@@ -78,6 +79,11 @@ from .snapshots import (
 # the gate default 64 keeps per-commit file counts commensurate with
 # gate-scale corpora; a 100 TB deployment dials it up with the planes.
 VECSTORE_SHARDS = 64
+
+
+def _shard_expr(n_shards: int):
+    """_shard under a GIVEN modulus — always the store's recorded one."""
+    return F.pmod(F.col("bucket"), F.lit(n_shards)).cast("int")
 
 
 def store_shards(table_dir: str) -> int:
@@ -105,9 +111,7 @@ def bucket_rows_for(
         F.col(id_col),
         hyperplane_bucket(F.col(vec_col), dim, n_planes).alias("bucket"),
         F.col(vec_col),
-    ).withColumn(
-        "_shard", F.pmod(F.col("bucket"), F.lit(n_shards)).cast("int")
-    )
+    ).withColumn("_shard", _shard_expr(n_shards))
 
 
 def _planes() -> int:
@@ -144,12 +148,11 @@ def vector_store_init(
     )
 
 
-def validate_store_dials(table_dir: str, dim: int) -> dict:
+def validate_store_dials(table_dir: str, dim: int) -> None:
     """Refuse a probe whose bucketing could not match the store's: the
     manifest records the planes dial and dim the index was built with,
     and a mismatch on EITHER silently buckets Δ through a different
-    projection, dropping real collisions — so both fail loudly instead.
-    Returns the store's meta for the caller to carry forward."""
+    projection, dropping real collisions — so both fail loudly instead."""
     meta = latest_meta(table_dir)
     planes = _planes()
     if meta and meta.get("planes") != planes:
@@ -169,7 +172,6 @@ def validate_store_dials(table_dir: str, dim: int) -> dict:
             "(bucket ids are only comparable under the projection that "
             "made them)"
         )
-    return meta
 
 
 def probe_vector_pairs(
@@ -204,11 +206,7 @@ def probe_vector_pairs(
         n_shards = store_shards(table_dir)
         shards = [
             r[0]
-            for r in delta.select(
-                F.pmod(F.col("bucket"), F.lit(n_shards))
-                .cast("int")
-                .alias("_s")
-            )
+            for r in delta.select(_shard_expr(n_shards).alias("_s"))
             .distinct()
             .collect()
         ]
@@ -250,54 +248,26 @@ def admit_vector_delta(
     spark: SparkSession,
     delta: DataFrame,
     table_dir: str,
-    extra_meta: dict | None = None,
+    txn: tuple[str, int] | None = None,
 ) -> int | None:
     """Admit PRECOMPUTED Δ bucket rows into the index. Returns the new
     version, or None for an empty Δ — no version bump for a no-op day
     (a partitionBy write of zero rows emits a fileless dir;
     snapshot_read tolerates those since r9, but the manifest chain
-    should not grow at all). Meta/layout are carried forward so
-    latest_meta keeps the dim/planes dials validatable after any
-    number of appends — minus any txn fence keys a previous writer
-    wrote (the fence must only see keys its own commit wrote);
-    ``extra_meta`` rides beside the carried properties."""
-    if delta.isEmpty():
+    should not grow at all) — or for a replayed ``txn`` = (app_id,
+    batch id), a streaming caller's fence (snapshots.txn_committed),
+    checked before the isEmpty job. The append keeps the store's
+    layout and its dim/planes dials (snapshots.snapshot_append), so
+    latest_meta stays validatable after any number of appends."""
+    if txn_committed(table_dir, txn) or delta.isEmpty():
         return None
-    props = {
-        k: v
-        for k, v in latest_meta(table_dir).items()
-        if not k.startswith("txn_")
-    }
-    meta = {**props, **(extra_meta or {})}
-    # adopt the EXISTING table's layout (a legacy layout-less store
-    # appends layout-less — forcing ["_shard"] onto it would trip the
-    # mixed-layout guard); only a brand-new table gets the sharded
-    # default
-    layout = (
-        table_layout(table_dir)
-        if current_version(table_dir) is not None
-        else ["_shard"]
-    )
-    if "_shard" in layout:
+    if "_shard" in table_layout(table_dir):
         # re-derive _shard under the STORE's recorded modulus (the
         # runtime dial may differ since init)
         delta = delta.withColumn(
-            "_shard",
-            F.pmod(F.col("bucket"), F.lit(store_shards(table_dir))).cast(
-                "int"
-            ),
+            "_shard", _shard_expr(store_shards(table_dir))
         )
-    if layout:
-        # one file per Hive dir per commit (see vector_store_init's
-        # repartition note)
-        delta = delta.repartition(*layout)
-    return snapshot_write(
-        delta,
-        table_dir,
-        mode="append",
-        meta=meta or None,
-        partition_by=layout or None,
-    )
+    return snapshot_append(delta, table_dir, txn)
 
 
 def within_cosine_pairs(

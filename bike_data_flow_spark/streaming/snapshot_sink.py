@@ -7,13 +7,14 @@ wrm_pipeline/wrm_pipeline/assets/iceberg_assets.py:11-49).
 
 Exactly-once: foreachBatch is at-least-once — after a failure the
 engine REPLAYS the last unacknowledged batch. The sink fences commits
-Delta-style on a (txn_app_id, txn_version) pair recorded in the
-manifest meta: the app id identifies THIS stream (derived from its
-checkpoint location — the engine's own identity for a run lineage),
-the version is the batch id. A replayed batch (version ≤ the writer's
-last committed) is skipped. Because the fence scans retained manifests
-newest-to-oldest past commits from OTHER writers — manual appends,
-maintenance compaction overwrites — those can never disarm it.
+Delta-style on an (app id, version) txn recorded in the manifest
+meta: the app id identifies THIS stream (derived from its checkpoint
+location — the engine's own identity for a run lineage), the version
+is the batch id. A replayed batch (version ≤ the writer's last
+committed, snapshots.txn_committed) is skipped. Because the fence
+scans retained manifests newest-to-oldest past commits from OTHER
+writers — manual appends, maintenance compaction overwrites — those
+can never disarm it.
 Restarting with a NEW checkpoint dir is a new writer by definition:
 its batches all commit (Delta's txn semantics; the operator chose
 reprocessing, and silently dropping the new stream's data would be
@@ -38,7 +39,9 @@ size; run expire_snapshots periodically to bound manifest count —
 but keep retention LONGER than the maximum stream downtime, or the
 fence loses the writer's history and a replayed batch commits twice —
 and compact small per-batch data dirs with a maintenance overwrite
-commit (safe: it carries no txn meta, so the fence is unaffected).
+commit. Maintenance never moves the fence: compaction, merge and delete
+carry the head's txn keys forward, and a restore takes them from the
+head, never from the version it restores.
 """
 
 from __future__ import annotations
@@ -61,27 +64,14 @@ def commit_batch(
     batch_df: DataFrame, batch_id: int, table_dir: str, app_id: str
 ) -> bool:
     """Fenced append of one micro-batch; returns False when the batch
-    is a replay (already committed by this writer).
-
-    Layout-aware (r9): a pre-existing Hive-layout target keeps its
-    partition_by — the append adopts the table's recorded layout and
-    routes one task per partition value (the one-file-per-dir write
-    discipline). The pre-fix spelling appended layout-less, so every
-    batch into a partitioned table was refused by the mixed-layout
-    guard and the stream died on its first commit."""
-    last = S.last_txn_version(table_dir, app_id)
-    if last is not None and batch_id <= last:
+    is a replay (already committed by this writer). The append keeps
+    the table's recorded layout and properties
+    (snapshots.snapshot_append), so the sink can target a Hive-layout
+    table or a store whose dials later readers validate."""
+    txn = (app_id, batch_id)
+    if S.txn_committed(table_dir, txn):
         return False
-    layout = S.table_layout(table_dir)
-    if layout:
-        batch_df = batch_df.repartition(*layout)
-    S.snapshot_write(
-        batch_df,
-        table_dir,
-        mode="append",
-        meta={"txn_app_id": app_id, "txn_version": batch_id},
-        partition_by=layout or None,
-    )
+    S.snapshot_append(batch_df, table_dir, txn)
     return True
 
 

@@ -47,7 +47,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
-from ..operators import snapshots as S
 from ..operators.joins import pairs_sharing_key
 from ..operators.sigstore import admit_delta, band_keys_for, probe_store_pairs
 from ..operators.vecstore import (
@@ -132,15 +131,7 @@ def probe_batch(
         # double band keys would emit every colliding pair twice and
         # double-count the bloom (harmless) but break the store ≡
         # band_keys(corpus) maintenance contract.
-        last = S.last_txn_version(table_dir, app_id)
-        if last is not None and batch_id <= last:
-            return
-        admit_delta(
-            spark,
-            delta,
-            table_dir,
-            extra_meta={"txn_app_id": app_id, "txn_version": batch_id},
-        )
+        admit_delta(spark, delta, table_dir, (app_id, batch_id))
 
 
 def stream_store_probe(
@@ -207,15 +198,7 @@ def vector_probe_batch(
     )
     _write_batch_partition(pairs, batch_id, pairs_out_dir)
     if admit:
-        last = S.last_txn_version(table_dir, app_id)
-        if last is not None and batch_id <= last:
-            return
-        admit_vector_delta(
-            spark,
-            delta,
-            table_dir,
-            extra_meta={"txn_app_id": app_id, "txn_version": batch_id},
-        )
+        admit_vector_delta(spark, delta, table_dir, (app_id, batch_id))
 
 
 # The shared leakage-safe split hash (same 'lsp|' md5-bucket spelling
@@ -453,13 +436,7 @@ def curation_batch(
     # store that already admitted skips, the others catch up — never a
     # double admission, and the decisions partition is overwritten
     # with identical rows
-    fence = {"txn_app_id": app_id, "txn_version": batch_id}
-
-    def _fenced(admit_fn, delta: DataFrame, store_dir: str) -> None:
-        last = S.last_txn_version(store_dir, app_id)
-        if last is None or batch_id > last:
-            admit_fn(spark, delta, store_dir, extra_meta=fence)
-
+    txn = (app_id, batch_id)
     with overlap() as submit:
         submit(_write_batch_partition, rows, batch_id, out_dir)
         if admit:
@@ -470,20 +447,22 @@ def curation_batch(
                 id_col
             )
             submit(
-                _fenced,
                 admit_delta,
+                spark,
                 sig_delta.join(admitted, id_col, "left_semi"),
                 sig_dir,
+                txn,
             )
             submit(
-                _fenced,
                 admit_vector_delta,
+                spark,
                 vec_delta.join(
                     admitted.withColumnRenamed(id_col, "vec_id"),
                     "vec_id",
                     "left_semi",
                 ),
                 vec_dir,
+                txn,
             )
 
 

@@ -29,6 +29,8 @@ from collections.abc import Callable, Sequence
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..operators.compact import recover_swap, swap_dir
+
 
 def latest_per_key(
     batch: DataFrame, keys: Sequence[str], order_col: str
@@ -57,16 +59,9 @@ def upsert_batch(
     arrives last). Spelled as union + one keyed window rather than
     merge_upsert for exactly that reason; equal-timestamp ties break
     on a content hash so replays stay deterministic."""
-    import shutil
-
-    # Crash recovery BEFORE reading state: a death between the two
-    # commit renames leaves table_dir missing and __old holding the
-    # only full copy — restore it, never delete it. Only then is a
-    # leftover __old (table_dir present ⇒ commit completed) garbage.
-    old = f"{table_dir}__old"
-    if not os.path.isdir(table_dir) and os.path.isdir(old):
-        os.rename(old, table_dir)
-
+    # crash recovery BEFORE reading state: a death between the two
+    # commit renames left the table's only full copy under __old
+    recover_swap(table_dir)
     compacted = latest_per_key(batch, keys, order_col)
     if os.path.isdir(table_dir):
         target = spark.read.parquet(table_dir)
@@ -82,21 +77,7 @@ def upsert_batch(
         )
     else:
         merged = compacted
-    # write-then-rename: a crash mid-write leaves the old table intact;
-    # the rename is the commit point (same contract as LandingZone.land).
-    # Stale __tmp (always scratch) and __old (garbage only once the
-    # commit completed — the recovery above handled the other case) are
-    # cleared first: os.rename refuses to replace a non-empty directory.
-    tmp = f"{table_dir}__tmp"
-    for stale in (tmp, old):
-        if os.path.isdir(stale):
-            shutil.rmtree(stale)
-    merged.write.mode("overwrite").parquet(tmp)
-    if os.path.isdir(table_dir):
-        os.rename(table_dir, old)
-    os.rename(tmp, table_dir)
-    if os.path.isdir(old):
-        shutil.rmtree(old)
+    swap_dir(table_dir, merged.write.mode("overwrite").parquet)
 
 
 def streaming_upsert(

@@ -35,9 +35,9 @@ def test_compaction_skips_single_file_partitions(spark, tmp_path):
 
 
 def test_compaction_restores_partition_if_swap_fails(spark, tmp_path, monkeypatch):
-    """A crash mid-swap must not strand data in dt=X.old — the old
+    """A crash mid-swap must not strand data in dt=X__old — the old
     partition comes back and readers see the original rows."""
-    from pathlib import Path
+    import os
 
     import pytest
 
@@ -46,18 +46,40 @@ def test_compaction_restores_partition_if_swap_fails(spark, tmp_path, monkeypatc
         F.col("id"), F.lit("2025-05-01").alias("dt")
     ).repartition(4).write.partitionBy("dt").parquet(str(out))
 
-    real_rename = Path.rename
+    real_rename = os.rename
 
-    def failing_rename(self, target):
-        if self.name.startswith(".compact-"):
+    def failing_rename(src, dst):
+        if str(src).endswith("__tmp"):
             raise OSError("simulated crash during swap")
-        return real_rename(self, target)
+        return real_rename(src, dst)
 
-    monkeypatch.setattr(Path, "rename", failing_rename)
+    monkeypatch.setattr(os, "rename", failing_rename)
     with pytest.raises(OSError, match="simulated crash"):
         compact_partitions(spark, out, target_file_bytes=10**9)
     monkeypatch.undo()
 
     assert (out / "dt=2025-05-01").exists()
-    assert not (out / "dt=2025-05-01.old").exists()
+    assert not (out / "dt=2025-05-01__old").exists()
+    assert not (out / "dt=2025-05-01__tmp").exists()
     assert spark.read.parquet(str(out)).count() == 1000
+
+
+def test_compaction_recovers_a_day_left_mid_swap(spark, tmp_path):
+    """A death between the swap's two renames leaves the day only under
+    dt=X__old (and maybe a stage under dt=X__tmp): the next compaction
+    moves it back before listing the zone, so the day is compacted and
+    never read as a partition named X__old."""
+    out = tmp_path / "zone"
+    spark.range(0, 1000).select(
+        F.col("id"), F.lit("2025-05-01").alias("dt")
+    ).repartition(4).write.partitionBy("dt").parquet(str(out))
+    (out / "dt=2025-05-01").rename(out / "dt=2025-05-01__old")
+    (out / "dt=2025-05-01__tmp").mkdir()
+    (out / "dt=2025-05-01__tmp" / "junk").write_text("leftover")
+
+    done = compact_partitions(spark, out, target_file_bytes=10**9)
+    assert done == {"2025-05-01": 1}
+    assert [p.name for p in out.glob("dt=*")] == ["dt=2025-05-01"]
+    back = spark.read.parquet(str(out))
+    assert back.count() == 1000
+    assert back.select("dt").distinct().count() == 1

@@ -243,3 +243,20 @@ def test_no_hand_rolled_pair_self_joins_outside_the_helper():
         if banned.search(line)
     ]
     assert hits == []
+
+
+def test_txn_fence_spelled_only_in_snapshots():
+    """The txn fence — what counts as a replay, which txn keys a commit
+    records and which it drops — is spelled in operators/snapshots.py
+    only; every other writer goes through txn_committed and
+    snapshot_append."""
+    pkg = pathlib.Path(__file__).resolve().parent.parent / "bike_data_flow_spark"
+    banned = re.compile(r"""last_txn_version\(|["']txn_app_id["']|startswith\(["']txn_["']\)""")
+    hits = [
+        f"{path.relative_to(pkg)}:{n}: {line.strip()}"
+        for path in sorted(pkg.rglob("*.py"))
+        if path != pkg / "operators" / "snapshots.py"
+        for n, line in enumerate(path.read_text().splitlines(), 1)
+        if banned.search(line)
+    ]
+    assert hits == []

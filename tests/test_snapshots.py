@@ -276,6 +276,51 @@ def test_fence_stops_at_newest_writer_manifest(spark, tmp_path: Path):
     assert last_txn_version(t, "x") == 9
 
 
+def test_maintenance_never_rewinds_the_fence(spark, tmp_path: Path):
+    """Compaction, restore and expiry keep a writer's newest txn: a
+    restore rolls the ROWS back, not the batch ids the sink committed,
+    so a replay of the newest batch stays fenced, also once only the
+    restore's manifest is retained."""
+    from bike_data_flow_spark.operators.snapshots import (
+        last_txn_version,
+        snapshot_compact,
+        snapshot_restore,
+    )
+    from bike_data_flow_spark.streaming.snapshot_sink import commit_batch
+
+    t = str(tmp_path / "tbl")
+    for b in range(4):
+        assert commit_batch(_df(spark, [(b, f"r{b}")]), b, t, "app") is True
+    snapshot_compact(spark, t)
+    snapshot_restore(t, 2)  # v2 = batches 0 and 1
+    assert last_txn_version(t, "app") == 3
+    assert commit_batch(_df(spark, [(3, "r3")]), 3, t, "app") is False
+    assert sorted(r["k"] for r in snapshot_read(spark, t).collect()) == [0, 1]
+
+    expire_snapshots(t, keep_last=1)
+    assert commit_batch(_df(spark, [(3, "r3")]), 3, t, "app") is False
+    assert sorted(r["k"] for r in snapshot_read(spark, t).collect()) == [0, 1]
+
+
+def test_fence_sees_a_commit_that_died_before_its_pointer_move(
+    spark, tmp_path: Path
+):
+    """A sink commit that died between its manifest publish and its
+    pointer move is durable (the next write rolls it forward), so its
+    replay is fenced instead of committing the batch a second time."""
+    from bike_data_flow_spark.operators.snapshots import last_txn_version
+    from bike_data_flow_spark.streaming.snapshot_sink import commit_batch
+
+    t = str(tmp_path / "tbl")
+    assert commit_batch(_df(spark, [(0, "a")]), 0, t, "app") is True
+    assert commit_batch(_df(spark, [(1, "b")]), 1, t, "app") is True
+    (Path(t) / "_LATEST").write_text("1")  # batch 1's pointer never moved
+    assert last_txn_version(t, "app") == 1
+    assert commit_batch(_df(spark, [(1, "b")]), 1, t, "app") is False
+    assert commit_batch(_df(spark, [(2, "c")]), 2, t, "app") is True
+    assert sorted(r["k"] for r in snapshot_read(spark, t).collect()) == [0, 1, 2]
+
+
 def test_snapshot_write_collision_via_stale_version_read(spark, tmp_path, monkeypatch):
     """A zombie writer that resolved prev BEFORE another writer's
     commit must ERROR inside snapshot_write itself (not just in a

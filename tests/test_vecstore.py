@@ -450,3 +450,39 @@ def test_legacy_layoutless_store_probes_and_appends(spark, store_dir):
         )
     )
     assert probe2 == ref2
+
+
+def test_appends_keep_table_properties(spark, store_dir):
+    """Every append into a store keeps its table properties: a
+    snapshot-sink commit leaves the format/dim/planes/shards dials
+    beside its own txn keys (so the next probe's dial check passes),
+    and a fenced admission by another writer records only ITS txn keys
+    — never the previous writer's."""
+    from bike_data_flow_spark.operators.snapshots import latest_meta
+    from bike_data_flow_spark.streaming.snapshot_sink import commit_batch
+
+    emb = load(spark, "/root/testdata/sf0.001", "embeddings")
+    part = F.pmod(F.col("vec_id"), F.lit(3))
+    V.vector_store_init(emb.filter(part == 0), store_dir, dim=_DIM)
+    dials = {
+        k: latest_meta(store_dir)[k]
+        for k in ("format", "dim", "planes", "shards")
+    }
+
+    rows = V.bucket_rows_for(emb.filter(part == 1), _DIM)
+    assert commit_batch(rows, 0, store_dir, "sink-app") is True
+    assert latest_meta(store_dir) == {
+        **dials, "txn_app_id": "sink-app", "txn_version": 0,
+    }
+    V.validate_store_dials(store_dir, _DIM)
+
+    v = current_version(store_dir)
+    delta = V.bucket_rows_for(emb.filter(part == 2), _DIM).localCheckpoint()
+    assert V.admit_vector_delta(spark, delta, store_dir, ("probe-app", 5)) == v + 1
+    assert latest_meta(store_dir) == {
+        **dials, "txn_app_id": "probe-app", "txn_version": 5,
+    }
+    # the replay of that admission is fenced: no new version
+    assert V.admit_vector_delta(spark, delta, store_dir, ("probe-app", 5)) is None
+    assert current_version(store_dir) == v + 1
+    assert snapshot_read(spark, store_dir).count() == emb.count()
