@@ -19,14 +19,11 @@ Scale notes:
   (snapshot append = manifest union, no rewrite); compaction and
   expiry come free from snapshots.py (snapshot_compact round-trips
   the table's meta and layout — sibling maintenance marker).
-- The store persists Hive-partitioned on pmod(combined band key,
-  SIGSTORE_SHARDS): Δ's occupied shards — a ≤SIGSTORE_SHARDS literal
-  IN-list, never corpus-sized — prune the store scan at the FILE
-  LISTING level (PartitionFilters) before anything is read, the same
-  two-layer prune the vector index (vecstore.py) gets. Pruning only
-  engages when ``_shard`` is the table's recorded layout; a legacy
-  unsharded store still probes correctly, just without the
-  directory-level skip. Honest cost accounting: each doc emits
+- The store persists in the shard layout of shards.py, keyed on the
+  combined band key mod SIGSTORE_SHARDS: Δ's occupied shards prune the
+  store scan at the FILE LISTING level (PartitionFilters) before
+  anything is read, the same two-layer prune the vector index
+  (vecstore.py) gets. Honest cost accounting: each doc emits
   ~MINHASH_BANDS band keys, so a DAILY-sized Δ occupies every shard
   and the directory skip is nil there (the bloom still does the
   map-side work); the prune pays off for SMALL probes — exactly the
@@ -90,28 +87,23 @@ from .dedup import (
     minhash_signatures,
 )
 from .joins import pairs_sharing_key
+from .shards import append_sharded, read_pruned, with_shard, write_sharded
 from .snapshots import (
     SnapshotConflictError,
     current_version,
     latest_meta,
-    snapshot_append,
     snapshot_read,
     snapshot_write,
-    table_layout,
     txn_committed,
 )
 
-# Directory-layout shard for the band-key store: pmod of the combined
+# Shard count of the band-key store (shards.py): pmod of the combined
 # band key, NOT the raw key space (band_key cardinality is unbounded,
-# far too many directories) — bounded by construction, so Δ's occupied
-# shards collect to a bounded literal IN-list that lands as
-# PartitionFilters on the store scan. Mirrors vecstore.VECSTORE_SHARDS
-# with one difference: band keys are hash-uniform, so EVERY shard is
-# occupied even for a tiny corpus (vecstore's dirs are bounded by
-# 2^planes instead) — the shard count is therefore a RUNTIME DIAL,
-# resolved at store-INIT time and RECORDED in the manifest; probes and
-# appends always derive shard values from the store's recorded
-# modulus, so redialing never breaks an existing store. Gate-scale
+# far too many directories). Mirrors vecstore.VECSTORE_SHARDS with one
+# difference: band keys are hash-uniform, so EVERY shard is occupied
+# even for a tiny corpus (vecstore's dirs are bounded by 2^planes
+# instead) — the shard count is therefore a RUNTIME DIAL, read at
+# store-INIT time and RECORDED in the manifest. Gate-scale
 # default 32 keeps per-commit file counts commensurate with the
 # corpus; a 100 TB deployment dials it up (e.g. 1024) so tiny
 # monitoring Δs skip proportionally more of the file listing.
@@ -152,41 +144,32 @@ def _or_blooms(a, b):
     )
 
 
-def _combine():
+def _key():
     """band_key < 2^46 (base-31 Horner over 4 longs < 2^31) and band <
     MINHASH_BANDS, so band_key * MINHASH_BANDS + band is a
     collision-free combine well inside BIGINT — the bloom's probe
-    value and the shard hash input. (Built lazily: Columns need a live
+    value and the shard key. (Built lazily: Columns need a live
     SparkContext.)"""
-    return (
-        F.col("band_key") * F.lit(MINHASH_BANDS) + F.col("band")
-    ).alias("_bk_comb")
+    return F.col("band_key") * F.lit(MINHASH_BANDS) + F.col("band")
 
 
-def _shard_expr(n_shards: int):
-    """_shard under a GIVEN modulus — always the store's recorded one."""
-    return F.pmod(
-        F.col("band_key") * F.lit(MINHASH_BANDS) + F.col("band"),
-        F.lit(n_shards),
-    ).cast("int")
-
-
-def store_shards(table_dir: str) -> int:
-    """The shard modulus the store was built with (manifest property);
-    falls back to the current dial for stores predating the record."""
-    return latest_meta(table_dir).get("shards", SIGSTORE_SHARDS)
+def _combine():
+    """The combined band key as the bloom's ``_bk_comb`` column."""
+    return _key().alias("_bk_comb")
 
 
 def bloom_geometry(table_dir: str) -> tuple[int, int]:
-    """(bits, k) the sibling bloom was built with (manifest property);
-    falls back to the library defaults for blooms predating the
-    record. Every probe and every OR-merge MUST use these — bitmaps of
-    different geometry do not compose."""
+    """(bits, k) the sibling bloom was built with (manifest property).
+    Every probe and every OR-merge MUST use these — bitmaps of
+    different geometry do not compose. A store without a bloom table
+    was not built by signature_store_init and is refused."""
     m = latest_meta(_bloom_table(table_dir))
-    return (
-        m.get("bits", BLOOM_BITS_DEFAULT),
-        m.get("k", BLOOM_K_DEFAULT),
-    )
+    if "bits" not in m:
+        raise ValueError(
+            f"{table_dir} has no bloom table: build the store with "
+            "signature_store_init"
+        )
+    return m["bits"], m["k"]
 
 
 def bloom_saturation(spark: SparkSession, table_dir: str) -> float:
@@ -217,18 +200,15 @@ def band_keys_for(
     n: int = 3,
     k: int = MINHASH_K,
     bands: int = MINHASH_BANDS,
-    n_shards: int | None = None,
 ) -> DataFrame:
     """(id, band, band_key, _shard) — the store's row format: the batch
-    operator's band rows plus the bounded directory-shard column.
-    ``n_shards`` resolves to the CURRENT dial; callers touching an
-    existing store pass that store's recorded modulus instead."""
-    if n_shards is None:
-        n_shards = SIGSTORE_SHARDS
+    operator's band rows plus the shard column (shards.py) under the
+    CURRENT dial; reads and writes of an existing store re-derive it
+    under the store's recorded modulus."""
     rows = minhash_band_keys(
         minhash_signatures(docs, id_col, text_col, n, k), id_col, k, bands
     )
-    return rows.withColumn("_shard", _shard_expr(n_shards))
+    return with_shard(rows, _key(), SIGSTORE_SHARDS)
 
 
 def signature_store_init(
@@ -255,29 +235,17 @@ def signature_store_init(
     version the bloom covers is resolved BEFORE the threads launch
     (version = current + 1 under this writer's single-bootstrap
     contract — snapshots.snapshot_write numbers overwrites the same
-    way).
-
-    The rows REPARTITION ON _shard before the Hive-partitioned write:
-    partitionBy alone writes one file per (task × shard) — every task
-    holds rows of ~all shards, so a 32-task write of a 256-shard
-    layout sprays ~8k tiny files and the probe's scan drowns in file
-    opens (measured 16× on the composed gate query). Hash-routing each
-    shard to one task makes it one file per shard per commit."""
+    way). The store is written one file per shard (shards.py)."""
     n_shards = SIGSTORE_SHARDS
     bits, bk = SIGSTORE_BLOOM_BITS, SIGSTORE_BLOOM_K
-    rows = band_keys_for(
-        docs, id_col, text_col, n_shards=n_shards
-    ).localCheckpoint()
+    rows = band_keys_for(docs, id_col, text_col).localCheckpoint()
     next_version = (current_version(table_dir) or 0) + 1
 
     def _write_store() -> int:
-        return snapshot_write(
-            rows.repartition("_shard"),
-            table_dir,
-            mode="overwrite",
-            meta={"format": "minhash_band_keys", "k": MINHASH_K,
-                  "bands": MINHASH_BANDS, "shards": n_shards},
-            partition_by=["_shard"],
+        return write_sharded(
+            rows, _key(), table_dir, n_shards,
+            {"format": "minhash_band_keys", "k": MINHASH_K,
+             "bands": MINHASH_BANDS},
         )
 
     def _write_bloom() -> int:
@@ -367,59 +335,25 @@ def probe_store_pairs(
 ) -> DataFrame:
     """Δ×store candidate pairs from PRECOMPUTED Δ band-key rows (the
     ``band_keys_for`` format, ideally localCheckpointed by the caller).
-    Two prunes before the equi-join shuffles anything: the store's
-    _shard Hive layout is pruned by Δ's bounded occupied-shard IN-list
-    (PartitionFilters), and the persisted bloom drops non-colliding Δ
+    Two prunes before the equi-join shuffles anything: the store is
+    read from Δ's occupied shards only (shards.read_pruned,
+    PartitionFilters), and the persisted bloom drops non-colliding Δ
     keys map-side. The building block both the batch entry point
     (incremental_lsh_pairs) and the streaming foreachBatch probe
     (streaming/store_probe.py) share — one minhash pass per batch."""
-    store = snapshot_read(spark, table_dir)
-    layout = table_layout(table_dir)
-    bloom_dir = _bloom_table(table_dir)
-    has_bloom_table = current_version(bloom_dir) is not None
-
-    if "_shard" in layout:
-        # directory-level prune FIRST: Δ's occupied shards are a
-        # bounded literal list (≤ the store's recorded modulus by
-        # construction — collecting it can never be corpus-sized), and
-        # _shard is the store's Hive partition column, so this lands as
-        # PartitionFilters — only matching directories are even LISTED.
-        # Shard values derive from the STORE's recorded modulus, not
-        # Δ's _shard column (the runtime dial may have moved since the
-        # store was built). Layout-gated: on an unsharded legacy store,
-        # rows predating the column would read _shard NULL and an
-        # IN-filter would silently drop them from the probe.
-        n_shards = store_shards(table_dir)
-        shards = [
-            r[0]
-            for r in delta.select(_shard_expr(n_shards).alias("_s"))
-            .distinct()
-            .collect()
-        ]
-        store = store.filter(F.col("_shard").isin(shards))
+    store = read_pruned(spark, table_dir, delta, _key())
 
     probe = delta
     if use_bloom:
-        # the persisted one-row bitmap — NO store scan per probe; a
-        # store bootstrapped outside signature_store_init falls back
-        # to building it once from the store (and from then on the
-        # commit path below keeps nothing, preserving old behavior).
+        # the persisted one-row bitmap — NO store scan per probe.
         # Geometry comes from the bloom MANIFEST, never the current
         # dial — probing a bitmap under the wrong (bits, k) would
         # manufacture false negatives.
-        if has_bloom_table:
-            bits, bk = bloom_geometry(table_dir)
-            stored_bloom = snapshot_read(spark, bloom_dir)
-        else:
-            bits, bk = SIGSTORE_BLOOM_BITS, SIGSTORE_BLOOM_K
-            stored_bloom = bloom_build(
-                store.select(_combine()), F.col("_bk_comb"),
-                num_bits=bits, k=bk,
-            )
+        bits, bk = bloom_geometry(table_dir)
         probe = (
             with_bloom_flag(
-                delta, stored_bloom, _combine(), num_bits=bits, k=bk,
-                flag="_hit",
+                delta, snapshot_read(spark, _bloom_table(table_dir)),
+                _combine(), num_bits=bits, k=bk, flag="_hit",
             )
             .filter(F.col("_hit"))
             .drop("_hit")
@@ -468,39 +402,25 @@ def admit_delta(
     writer already leaves."""
     if txn_committed(table_dir, txn) or delta.isEmpty():
         return None
-    bloom_dir = _bloom_table(table_dir)
+    bits, bk = bloom_geometry(table_dir)  # recorded, never the dial
+    # lazy on purpose: the bitmap evaluates inside the CAS write's
+    # plan, so the admission pays ONE action here, not a pinning
+    # action plus the write; a CAS retry (rare — contended concurrent
+    # admitters only) recomputes the same deterministic aggregate from
+    # the caller-pinned delta rows
+    delta_bloom = bloom_build(
+        delta.select(_combine()), F.col("_bk_comb"), num_bits=bits, k=bk
+    )
     with overlap() as submit:
-        bloom_fut = None
-        if current_version(bloom_dir) is not None:
-            bits, bk = bloom_geometry(table_dir)  # recorded, never the dial
-            # lazy on purpose: the bitmap evaluates inside the CAS write's
-            # plan, so the admission pays ONE action here, not a pinning
-            # action plus the write; a CAS retry (rare — contended
-            # concurrent admitters only) recomputes the same deterministic
-            # aggregate from the caller-pinned delta rows
-            delta_bloom = bloom_build(
-                delta.select(_combine()), F.col("_bk_comb"),
-                num_bits=bits, k=bk,
-            )
-            bloom_fut = submit(
-                _commit_bloom_merge, spark, bloom_dir, delta_bloom,
-                current_version(table_dir),
-            )
-        if "_shard" in table_layout(table_dir):
-            # re-derive _shard under the STORE's recorded modulus (the
-            # runtime dial may differ); snapshot_append routes one task
-            # per shard (see signature_store_init's repartition note)
-            delta = delta.withColumn(
-                "_shard", _shard_expr(store_shards(table_dir))
-            )
-        return snapshot_append(
-            delta,
-            table_dir,
-            txn,
-            # happens-before fence: the append is visible only after
-            # the bloom commit succeeded; a bloom failure abandons the
-            # append before any metadata exists
-            publish_gate=bloom_fut.result if bloom_fut is not None else None,
+        bloom_fut = submit(
+            _commit_bloom_merge, spark, _bloom_table(table_dir), delta_bloom,
+            current_version(table_dir),
+        )
+        # happens-before fence: the append is visible only after the
+        # bloom commit succeeded; a bloom failure abandons the append
+        # before any metadata exists
+        return append_sharded(
+            delta, _key(), table_dir, txn, publish_gate=bloom_fut.result
         )
 
 
@@ -517,11 +437,10 @@ def expire_store(table_dir: str, keep_last: int = 2) -> dict:
     Returns {"store": [...], "bloom": [...]} expired version lists."""
     from .snapshots import expire_snapshots
 
-    out = {"store": expire_snapshots(table_dir, keep_last), "bloom": []}
-    bloom_dir = _bloom_table(table_dir)
-    if current_version(bloom_dir) is not None:
-        out["bloom"] = expire_snapshots(bloom_dir, keep_last)
-    return out
+    return {
+        "store": expire_snapshots(table_dir, keep_last),
+        "bloom": expire_snapshots(_bloom_table(table_dir), keep_last),
+    }
 
 
 def incremental_lsh_pairs(

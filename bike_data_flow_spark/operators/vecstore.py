@@ -21,13 +21,12 @@ Scale notes:
 - Unlike MinHash banding, a vector has exactly ONE bucket, so every
   colliding pair is produced once by the equi-join — no distinct.
 - The store is the BIG side, pruned in two layers before the join
-  shuffles anything: (1) it persists Hive-partitioned on
-  pmod(bucket, VECSTORE_SHARDS), and Δ's occupied shards — a literal
-  list bounded by VECSTORE_SHARDS, never corpus-sized — prune the scan
-  at the FILE LISTING level (PartitionFilters); (2) a bloom over Δ's
-  occupied buckets drops surviving non-colliding store rows MAP-SIDE
-  before the shuffle. Bloom false positives just reach the exact
-  equi-join; false negatives cannot occur.
+  shuffles anything: (1) it persists in the shard layout of shards.py,
+  keyed on the bucket id mod VECSTORE_SHARDS, and Δ's occupied shards
+  prune the scan at the FILE LISTING level (PartitionFilters); (2) a
+  bloom over Δ's occupied buckets drops surviving non-colliding store
+  rows MAP-SIDE before the shuffle. Bloom false positives just reach
+  the exact equi-join; false negatives cannot occur.
 - Exact verify runs at CANDIDATE cardinality with the same left-fold
   cosine the batch operators use (similarity.cosine) — the bucket join
   only selects which pairs get scored, it never approximates a value.
@@ -55,41 +54,19 @@ from pyspark.sql import functions as F
 
 from .bloom import bloom_build, with_bloom_flag
 from .joins import pairs_sharing_key
+from .shards import append_sharded, read_pruned, with_shard, write_sharded
 from .similarity import cosine, hyperplane_bucket
-from .snapshots import (
-    latest_meta,
-    snapshot_append,
-    snapshot_read,
-    snapshot_write,
-    table_layout,
-    txn_committed,
-)
+from .snapshots import latest_meta, txn_committed
 
-# Directory-layout shard: the store persists Hive-partitioned on
-# pmod(bucket, VECSTORE_SHARDS), NOT on bucket itself — the bucket
-# count is 2^planes (dial-scaled to ~corpus/cap at 100 TB, far too
-# many directories), while the shard count is bounded by construction,
-# so Δ's occupied shards collect to a bounded literal IN-list
-# that prunes the store scan at the FILE LISTING level
-# (PartitionFilters) before the bloom prunes surviving rows map-side.
-# Like sigstore.SIGSTORE_SHARDS (r9) this is a RUNTIME DIAL, resolved
-# at store-INIT time and RECORDED in the manifest; probes and appends
-# derive shard values from the recorded modulus, so redialing never
-# breaks an existing store. Occupied dirs = min(2^planes, shards):
-# the gate default 64 keeps per-commit file counts commensurate with
-# gate-scale corpora; a 100 TB deployment dials it up with the planes.
+# Shard count of the index (shards.py): pmod(bucket, VECSTORE_SHARDS),
+# NOT the bucket itself — the bucket count is 2^planes (dial-scaled to
+# ~corpus/cap at 100 TB, far too many directories). Like
+# sigstore.SIGSTORE_SHARDS this is a RUNTIME DIAL, read at store-INIT
+# time and RECORDED in the manifest. Occupied dirs = min(2^planes,
+# shards): the gate default 64 keeps per-commit file counts
+# commensurate with gate-scale corpora; a 100 TB deployment dials it
+# up with the planes.
 VECSTORE_SHARDS = 64
-
-
-def _shard_expr(n_shards: int):
-    """_shard under a GIVEN modulus — always the store's recorded one."""
-    return F.pmod(F.col("bucket"), F.lit(n_shards)).cast("int")
-
-
-def store_shards(table_dir: str) -> int:
-    """The shard modulus the store was built with (manifest property);
-    falls back to the current dial for stores predating the record."""
-    return latest_meta(table_dir).get("shards", VECSTORE_SHARDS)
 
 
 def bucket_rows_for(
@@ -98,20 +75,19 @@ def bucket_rows_for(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     n_planes: int | None = None,
-    n_shards: int | None = None,
 ) -> DataFrame:
     """(id, bucket, embedding, _shard) — the store's row format.
     ``n_planes`` resolves to the CURRENT similarity.N_HYPERPLANES at
-    call time inside hyperplane_bucket, honoring the runtime dial;
-    ``n_shards`` likewise — callers touching an existing store pass
-    that store's recorded modulus instead."""
-    if n_shards is None:
-        n_shards = VECSTORE_SHARDS
-    return vecs.select(
+    call time inside hyperplane_bucket, honoring the runtime dial; the
+    shard column (shards.py) is under the CURRENT dial too, and reads
+    and writes of an existing store re-derive it under the store's
+    recorded modulus."""
+    rows = vecs.select(
         F.col(id_col),
         hyperplane_bucket(F.col(vec_col), dim, n_planes).alias("bucket"),
         F.col(vec_col),
-    ).withColumn("_shard", _shard_expr(n_shards))
+    )
+    return with_shard(rows, F.col("bucket"), VECSTORE_SHARDS)
 
 
 def _planes() -> int:
@@ -130,21 +106,15 @@ def vector_store_init(
 ) -> int:
     """Bootstrap (or reset) the index from a corpus; returns version.
     The manifest records dim + planes so later probes can verify they
-    run under the same bucketing. Rows repartition on _shard first so
-    the Hive-partitioned write emits one file per shard per commit —
-    partitionBy alone writes one file per (task × shard), spraying
-    thousands of tiny files that drown later probes in file opens."""
+    run under the same bucketing; the rows are written one file per
+    shard (shards.py)."""
     planes = n_planes if n_planes is not None else _planes()
-    n_shards = VECSTORE_SHARDS
-    return snapshot_write(
-        bucket_rows_for(
-            vecs, dim, id_col, vec_col, planes, n_shards
-        ).repartition("_shard"),
+    return write_sharded(
+        bucket_rows_for(vecs, dim, id_col, vec_col, planes),
+        F.col("bucket"),
         table_dir,
-        mode="overwrite",
-        meta={"format": "hyperplane_buckets", "dim": dim, "planes": planes,
-              "shards": n_shards},
-        partition_by=["_shard"],
+        VECSTORE_SHARDS,
+        {"format": "hyperplane_buckets", "dim": dim, "planes": planes},
     )
 
 
@@ -155,13 +125,13 @@ def validate_store_dials(table_dir: str, dim: int) -> None:
     projection, dropping real collisions — so both fail loudly instead."""
     meta = latest_meta(table_dir)
     planes = _planes()
-    if meta and meta.get("planes") != planes:
+    if meta.get("planes") != planes:
         raise ValueError(
             f"store {table_dir} was bucketed at planes={meta.get('planes')}, "
             f"current dial is {planes}: rebuild the store or match the dial "
             "(bucket ids are only comparable under the planes that made them)"
         )
-    if meta and meta.get("dim") != dim:
+    if meta.get("dim") != dim:
         # same failure mode as a planes mismatch, so the same loud
         # refusal: a different dim projects through different
         # hyperplane components, silently bucketing Δ elsewhere and
@@ -190,27 +160,8 @@ def probe_vector_pairs(
     foreachBatch probe (streaming/store_probe.py) share — one
     bucketing pass per batch. The caller is responsible for
     ``validate_store_dials`` (the dials govern how Δ was bucketed)."""
-    store = snapshot_read(spark, table_dir)
-
-    if "_shard" in store.columns:
-        # directory-level prune FIRST: Δ's occupied shards are a
-        # bounded literal list (≤ the store's recorded modulus by
-        # construction — collecting it can never be corpus-sized), and
-        # _shard is the store's Hive partition column, so this lands
-        # as PartitionFilters — only the matching directories are even
-        # LISTED, let alone scanned. Shard values derive from the
-        # STORE's recorded modulus, not Δ's _shard column (the runtime
-        # dial may have moved). Column-gated for symmetry with
-        # sigstore: a legacy store without the column still probes,
-        # just without the directory skip.
-        n_shards = store_shards(table_dir)
-        shards = [
-            r[0]
-            for r in delta.select(_shard_expr(n_shards).alias("_s"))
-            .distinct()
-            .collect()
-        ]
-        store = store.filter(F.col("_shard").isin(shards))
+    # directory-level prune FIRST (shards.read_pruned), then the bloom
+    store = read_pruned(spark, table_dir, delta, F.col("bucket"))
 
     if use_bloom:
         # Δ is the SMALL side here (the reverse of sigstore's direction):
@@ -257,17 +208,11 @@ def admit_vector_delta(
     should not grow at all) — or for a replayed ``txn`` = (app_id,
     batch id), a streaming caller's fence (snapshots.txn_committed),
     checked before the isEmpty job. The append keeps the store's
-    layout and its dim/planes dials (snapshots.snapshot_append), so
+    layout and its dim/planes dials (shards.append_sharded), so
     latest_meta stays validatable after any number of appends."""
     if txn_committed(table_dir, txn) or delta.isEmpty():
         return None
-    if "_shard" in table_layout(table_dir):
-        # re-derive _shard under the STORE's recorded modulus (the
-        # runtime dial may differ since init)
-        delta = delta.withColumn(
-            "_shard", _shard_expr(store_shards(table_dir))
-        )
-    return snapshot_append(delta, table_dir, txn)
+    return append_sharded(delta, F.col("bucket"), table_dir, txn)
 
 
 def within_cosine_pairs(

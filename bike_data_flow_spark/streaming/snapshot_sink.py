@@ -60,6 +60,22 @@ def _app_id(checkpoint_dir: str) -> str:
     return hashlib.md5(norm.encode()).hexdigest()[:16]
 
 
+def start_batches(
+    stream: DataFrame, checkpoint_dir: str, process
+) -> StreamingQuery:
+    """Start a foreachBatch stream that drains what is available now
+    and stops: ``process(batch_df, batch_id, app_id)`` handles each
+    micro-batch, ``app_id`` being this stream's identity (derived from
+    its checkpoint location) for the txn fence."""
+    app = _app_id(checkpoint_dir)
+    return (
+        stream.writeStream.foreachBatch(lambda df, bid: process(df, bid, app))
+        .option("checkpointLocation", checkpoint_dir)
+        .trigger(availableNow=True)
+        .start()
+    )
+
+
 def commit_batch(
     batch_df: DataFrame, batch_id: int, table_dir: str, app_id: str
 ) -> bool:
@@ -76,22 +92,12 @@ def commit_batch(
 
 
 def write_stream_snapshots(
-    stream_df: DataFrame,
-    table_dir: str,
-    checkpoint_dir: str,
-    available_now: bool = True,
+    stream_df: DataFrame, table_dir: str, checkpoint_dir: str
 ) -> StreamingQuery:
     """Start a foreachBatch stream committing each batch as an append
     snapshot, txn-fenced for idempotent replays."""
-    app = _app_id(checkpoint_dir)
-
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        commit_batch(batch_df, batch_id, table_dir, app)
-
-    writer = (
-        stream_df.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_dir)
+    return start_batches(
+        stream_df,
+        checkpoint_dir,
+        lambda df, bid, app: commit_batch(df, bid, table_dir, app),
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()

@@ -57,7 +57,7 @@ from ..operators.vecstore import (
     within_cosine_pairs,
 )
 from ..session import overlap
-from .snapshot_sink import _app_id
+from .snapshot_sink import start_batches
 
 
 def _write_batch_partition(
@@ -142,32 +142,19 @@ def stream_store_probe(
     id_col: str = "doc_id",
     text_col: str = "text",
     admit: bool = False,
-    available_now: bool = True,
 ) -> StreamingQuery:
     """Start the foreachBatch probe loop over a document stream.
     ``admit=True`` turns it into the full streaming admission pipeline:
     probe, emit pairs, then commit the batch's band keys to the store
     exactly-once (txn-fenced on this stream's checkpoint identity)."""
-    app = _app_id(checkpoint_dir)
-
-    def _fb(batch_df: DataFrame, batch_id: int) -> None:
-        probe_batch(
-            batch_df,
-            batch_id,
-            table_dir,
-            pairs_out_dir,
-            id_col,
-            text_col,
-            admit=admit,
-            app_id=app,
-        )
-
-    writer = docs_stream.writeStream.foreachBatch(_fb).option(
-        "checkpointLocation", checkpoint_dir
+    return start_batches(
+        docs_stream,
+        checkpoint_dir,
+        lambda df, bid, app: probe_batch(
+            df, bid, table_dir, pairs_out_dir, id_col, text_col,
+            admit=admit, app_id=app,
+        ),
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def vector_probe_batch(
@@ -480,39 +467,21 @@ def stream_curation(
     text_col: str = "text",
     vec_col: str = "embedding",
     split_assign=None,
-    available_now: bool = True,
 ) -> StreamingQuery:
     """Start the incremental curation funnel over a document stream:
     every micro-batch runs ``curation_batch`` — quality → exact →
     both store probes → decisions+split out → fenced admission of the
     admitted set into BOTH stores — so each admitted batch becomes
     store for the next."""
-    app = _app_id(checkpoint_dir)
-
-    def _fb(batch_df: DataFrame, batch_id: int) -> None:
-        curation_batch(
-            batch_df,
-            batch_id,
-            embeddings,
-            sig_dir,
-            vec_dir,
-            out_dir,
-            dim,
-            tau,
-            gate=gate,
-            id_col=id_col,
-            text_col=text_col,
-            vec_col=vec_col,
-            app_id=app,
-            split_assign=split_assign,
-        )
-
-    writer = docs_stream.writeStream.foreachBatch(_fb).option(
-        "checkpointLocation", checkpoint_dir
+    return start_batches(
+        docs_stream,
+        checkpoint_dir,
+        lambda df, bid, app: curation_batch(
+            df, bid, embeddings, sig_dir, vec_dir, out_dir, dim, tau,
+            gate=gate, id_col=id_col, text_col=text_col, vec_col=vec_col,
+            app_id=app, split_assign=split_assign,
+        ),
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def stream_vector_probe(
@@ -525,30 +494,15 @@ def stream_vector_probe(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     admit: bool = False,
-    available_now: bool = True,
 ) -> StreamingQuery:
     """Start the foreachBatch probe loop over an embedding stream —
     live semantic near-dup monitoring against the persisted vector
     index; ``admit=True`` closes the admission loop exactly-once."""
-    app = _app_id(checkpoint_dir)
-
-    def _fb(batch_df: DataFrame, batch_id: int) -> None:
-        vector_probe_batch(
-            batch_df,
-            batch_id,
-            table_dir,
-            pairs_out_dir,
-            dim,
-            tau,
-            id_col,
-            vec_col,
-            admit=admit,
-            app_id=app,
-        )
-
-    writer = vecs_stream.writeStream.foreachBatch(_fb).option(
-        "checkpointLocation", checkpoint_dir
+    return start_batches(
+        vecs_stream,
+        checkpoint_dir,
+        lambda df, bid, app: vector_probe_batch(
+            df, bid, table_dir, pairs_out_dir, dim, tau, id_col, vec_col,
+            admit=admit, app_id=app,
+        ),
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()

@@ -260,3 +260,19 @@ def test_txn_fence_spelled_only_in_snapshots():
         if banned.search(line)
     ]
     assert hits == []
+
+
+def test_shard_layout_spelled_only_in_shards():
+    """The dedup stores' shard layout — the shard column, how it is
+    derived, written, appended and pruned — is spelled in
+    operators/shards.py only."""
+    pkg = pathlib.Path(__file__).resolve().parent.parent / "bike_data_flow_spark"
+    banned = re.compile(r"""["']_shard["']""")
+    hits = [
+        f"{path.relative_to(pkg)}:{n}: {line.strip()}"
+        for path in sorted(pkg.rglob("*.py"))
+        if path != pkg / "operators" / "shards.py"
+        for n, line in enumerate(path.read_text().splitlines(), 1)
+        if banned.search(line)
+    ]
+    assert hits == []

@@ -13,6 +13,7 @@ from pyspark.sql import functions as F
 
 from bike_data_flow_spark.operators import dedup as D
 from bike_data_flow_spark.operators import sigstore as G
+from bike_data_flow_spark.operators.shards import shard_count
 from bike_data_flow_spark.operators.snapshots import (
     current_version,
     snapshot_read,
@@ -122,39 +123,6 @@ def test_persisted_bloom_stays_equal_to_from_scratch(spark, store_dir):
     ).first()["bloom"]
     assert list(stored) == list(scratch)
     assert any(w != 0 for w in stored)
-
-
-def test_bloomless_store_falls_back(spark, store_dir):
-    """A store bootstrapped WITHOUT signature_store_init (no bloom
-    table) must still probe correctly — the prefilter builds from the
-    store once, and the commit path leaves no half-maintained bloom."""
-    from bike_data_flow_spark.operators.sigstore import _bloom_table
-    from bike_data_flow_spark.operators.snapshots import (
-        current_version as cv,
-        snapshot_write,
-    )
-
-    docs = load(spark, "/root/testdata/sf0.001", "documents")
-    delta_flag = F.pmod(F.col("doc_id"), F.lit(4)) == 0
-    snapshot_write(
-        G.band_keys_for(docs.filter(~delta_flag)), store_dir, mode="overwrite"
-    )
-    want = _pairs(
-        G.incremental_lsh_pairs(
-            spark,
-            docs.filter(delta_flag),
-            store_dir,
-            commit=False,
-            use_bloom=False,
-        )
-    )
-    got = _pairs(
-        G.incremental_lsh_pairs(
-            spark, docs.filter(delta_flag), store_dir, commit=True
-        )
-    )
-    assert got == want and len(got) > 0
-    assert cv(_bloom_table(store_dir)) is None  # stayed bloomless
 
 
 def test_store_scan_prunes_shard_partitions(spark, store_dir):
@@ -366,7 +334,7 @@ def test_shard_dial_migration_safe(spark, store_dir, monkeypatch):
     docs = load(spark, "/root/testdata/sf0.001", "documents")
     part = F.pmod(F.col("doc_id"), F.lit(3))
     G.signature_store_init(docs.filter(part == 0), store_dir)  # dial=32
-    assert G.store_shards(store_dir) == 32
+    assert shard_count(store_dir) == 32
 
     monkeypatch.setattr(G, "SIGSTORE_SHARDS", 7)  # dial moves
     want = _pairs(

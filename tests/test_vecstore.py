@@ -11,8 +11,10 @@ import tempfile
 import pytest
 from pyspark.sql import functions as F
 
+from bike_data_flow_spark.operators import sigstore as G
 from bike_data_flow_spark.operators import similarity as S
 from bike_data_flow_spark.operators import vecstore as V
+from bike_data_flow_spark.operators.shards import shard_count
 from bike_data_flow_spark.operators.snapshots import (
     current_version,
     snapshot_read,
@@ -385,7 +387,7 @@ def test_shard_dial_migration_safe(spark, store_dir, monkeypatch):
     emb = load(spark, "/root/testdata/sf0.001", "embeddings")
     part = F.pmod(F.col("vec_id"), F.lit(3))
     V.vector_store_init(emb.filter(part == 0), store_dir, dim=_DIM)
-    assert V.store_shards(store_dir) == 64
+    assert shard_count(store_dir) == 64
 
     monkeypatch.setattr(V, "VECSTORE_SHARDS", 5)  # dial moves
     want = _pairs(
@@ -407,49 +409,6 @@ def test_shard_dial_migration_safe(spark, store_dir, monkeypatch):
         F.pmod(F.col("bucket"), F.lit(64)).cast("int").alias("_want"),
     )
     assert rows.filter(F.col("_shard") != F.col("_want")).count() == 0
-
-
-def test_legacy_layoutless_store_probes_and_appends(spark, store_dir):
-    """A store bootstrapped OUTSIDE vector_store_init (raw snapshot
-    write, no Hive layout, no manifest properties) must still probe
-    correctly (no directory skip, bloom only) and accept layout-less
-    admissions — symmetry with sigstore's bloomless-fallback posture."""
-    from bike_data_flow_spark.operators.snapshots import snapshot_write
-
-    emb = load(spark, "/root/testdata/sf0.001", "embeddings")
-    part = F.pmod(F.col("vec_id"), F.lit(3))
-    snapshot_write(
-        V.bucket_rows_for(emb.filter(part == 0), _DIM), store_dir,
-        mode="overwrite",
-    )
-    want = _pairs(
-        V.incremental_cosine_pairs(
-            spark, emb.filter(part == 1), store_dir, dim=_DIM, tau=_TAU,
-            commit=False, use_bloom=False,
-        )
-    )
-    got = _pairs(
-        V.incremental_cosine_pairs(
-            spark, emb.filter(part == 1), store_dir, dim=_DIM, tau=_TAU,
-            commit=True,  # layout-less append must be accepted
-        )
-    )
-    assert got == want and len(got) > 0
-    assert current_version(store_dir) == 2
-    # post-append probe still reconciles
-    probe2 = _pairs(
-        V.incremental_cosine_pairs(
-            spark, emb.filter(part == 2), store_dir, dim=_DIM, tau=_TAU,
-            commit=False,
-        )
-    )
-    ref2 = _pairs(
-        V.incremental_cosine_pairs(
-            spark, emb.filter(part == 2), store_dir, dim=_DIM, tau=_TAU,
-            commit=False, use_bloom=False,
-        )
-    )
-    assert probe2 == ref2
 
 
 def test_appends_keep_table_properties(spark, store_dir):
@@ -486,3 +445,44 @@ def test_appends_keep_table_properties(spark, store_dir):
     assert V.admit_vector_delta(spark, delta, store_dir, ("probe-app", 5)) is None
     assert current_version(store_dir) == v + 1
     assert snapshot_read(spark, store_dir).count() == emb.count()
+
+
+@pytest.mark.parametrize("kind", ["sig", "vec"])
+def test_store_not_built_by_init_refused(spark, store_dir, tmp_path, kind):
+    """Both stores are built only by their init, which records the
+    shard count (and, for the signature store, the sibling bloom): a
+    table written in the row format by a raw snapshot write is refused
+    by the probe and by the admission, and commits nothing. A path with
+    no table at all fails the vector store's dial check."""
+    from bike_data_flow_spark.operators.snapshots import snapshot_write
+
+    if kind == "sig":
+        docs = load(spark, "/root/testdata/sf0.001", "documents")
+        rows = G.band_keys_for(docs)
+        part = F.pmod(F.col("doc_id"), F.lit(4)) == 0
+
+        def probe(d):
+            return G.probe_store_pairs(spark, d, store_dir)
+
+        def admit(d):
+            return G.admit_delta(spark, d, store_dir)
+    else:
+        emb = load(spark, "/root/testdata/sf0.001", "embeddings")
+        rows = V.bucket_rows_for(emb, _DIM)
+        part = F.pmod(F.col("vec_id"), F.lit(4)) == 0
+
+        def probe(d):
+            return V.probe_vector_pairs(spark, d, store_dir, _TAU)
+
+        def admit(d):
+            return V.admit_vector_delta(spark, d, store_dir)
+
+    snapshot_write(rows.filter(~part), store_dir, mode="overwrite")
+    delta = rows.filter(part).localCheckpoint()
+    with pytest.raises(ValueError):
+        probe(delta)
+    with pytest.raises(ValueError):
+        admit(delta)
+    assert current_version(store_dir) == 1
+    with pytest.raises(ValueError):
+        V.validate_store_dials(str(tmp_path / "no_table"), _DIM)
