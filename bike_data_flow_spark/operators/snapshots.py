@@ -26,7 +26,12 @@ via atomic rename. A crash at any point leaves either the old table
 visible or the new one — never a partial: data dirs without a manifest
 are unreachable garbage, and a fully-published manifest whose pointer
 move crashed is rolled forward (the commit was already durable) by the
-next snapshot_write — see _recover_orphan_manifests.
+next snapshot_write — see _recover_orphan_manifests. Every rewrite
+(merge, delete, compaction — see _rewrite) recovers FIRST, reads the
+recovered head, and commits as a CAS on that head: a crashed commit's
+rows and txn fence survive the rewrite, and a commit landing after the
+read makes the rewrite raise SnapshotConflictError instead of being
+silently overwritten.
 
 At 100 TB: manifests store directory paths, not file lists — the
 per-commit metadata is O(1); data dirs inherit whatever partitioning
@@ -507,12 +512,6 @@ def latest_meta(table_dir: str) -> dict:
     return _head(table_dir).get("meta", {})
 
 
-def table_layout(table_dir: str) -> list[str]:
-    """The table's current partition_by layout ([] if unpartitioned or
-    no table yet) — what an append must match (the mixed-layout guard)."""
-    return _head(table_dir).get("partition_by", [])
-
-
 def last_txn_version(table_dir: str, app_id: str) -> int | None:
     """Highest committed transaction version for a writer (Delta-style
     txn fencing: meta carries ``txn_app_id``/``txn_version``). Scans
@@ -594,19 +593,28 @@ def snapshot_append(
     )
 
 
+def _retained_versions(table_dir: str) -> list[int]:
+    """Every version whose manifest is on disk, oldest first: the one
+    listing of ``_snapshots/v*.json``. The sequence has gaps after
+    expire_snapshots, and a commit whose pointer move crashed is listed
+    past the pointer (it is durable; the next write makes it the head)."""
+    mdir = _manifest_dir(table_dir)
+    if not os.path.isdir(mdir):
+        return []
+    return sorted(
+        int(f[1:-5])
+        for f in os.listdir(mdir)
+        if f.startswith("v") and f.endswith(".json")
+    )
+
+
 def snapshot_history(table_dir: str) -> list[dict]:
     """Commit log, oldest RETAINED first: version, mode, dir count,
     timestamp. Versions removed by expire_snapshots are skipped —
     the sequence is not contiguous after maintenance."""
-    latest = current_version(table_dir)
-    if latest is None:
-        return []
     out = []
-    for v in range(1, latest + 1):
-        try:
-            m = _read_manifest(table_dir, v)
-        except FileNotFoundError:
-            continue  # expired
+    for v in _retained_versions(table_dir):
+        m = _read_manifest(table_dir, v)
         out.append(
             {
                 "version": m["version"],
@@ -628,28 +636,66 @@ def expire_snapshots(table_dir: str, keep_last: int = 2) -> list[int]:
     if latest is None or keep_last < 1:
         return []
     cutoff = latest - keep_last + 1
-    live_dirs: set[str] = set()
-    for v in range(max(1, cutoff), latest + 1):
-        try:
-            live_dirs.update(_read_manifest(table_dir, v)["dirs"])
-        except FileNotFoundError:
-            continue  # already expired by an earlier, tighter run
-    expired = []
-    for v in range(1, cutoff):
-        mpath = f"{_manifest_dir(table_dir)}/v{v}.json"
-        if not os.path.exists(mpath):
-            continue
+    versions = _retained_versions(table_dir)
+    live_dirs = {
+        d
+        for v in versions
+        if v >= cutoff
+        for d in _read_manifest(table_dir, v)["dirs"]
+    }
+    expired = [v for v in versions if v < cutoff]
+    for v in expired:
         dirs = _read_manifest(table_dir, v)["dirs"]
         # manifest FIRST, data after: a crash mid-expiry then leaves
         # only unreachable garbage, never a readable-looking version
         # whose data is gone (the module's crash contract).
-        os.remove(mpath)
+        os.remove(f"{_manifest_dir(table_dir)}/v{v}.json")
         for d in dirs:
             full = f"{table_dir}/{d}"
             if d not in live_dirs and os.path.isdir(full):
                 shutil.rmtree(full)
-        expired.append(v)
     return expired
+
+
+def _rewrite(spark: SparkSession, table_dir: str, rows, maintenance=None) -> int:
+    """The one rewrite path (merge, delete, compaction): recover a
+    crashed commit, read the recovered head once, commit
+    ``rows(head_df, layout)`` as an OVERWRITE snapshot; returns the new
+    version. Raises ValueError when there is no table.
+
+    Head after recovery: a commit whose pointer move crashed is durable
+    (its txn is already fenced) and the write rolls it forward anyway,
+    so the rewrite must start from it to keep its rows and its fence.
+    The commit is a CAS on that head (``expected_version``): a commit
+    landing between the read and the publish raises
+    SnapshotConflictError instead of being overwritten; re-run the verb.
+
+    Table properties round-trip: the new manifest carries the head's
+    ``meta`` (properties and txn keys, so a rewrite can neither disarm
+    nor rewind the fence) and ``partition_by`` verbatim — a rewrite
+    changes rows, never the table's layout or recorded properties.
+    ``maintenance(head)`` is the sibling marker a maintenance commit
+    records (it also skips CHECK re-validation, see snapshot_write)."""
+    head = _recover_orphan_manifests(table_dir, current_version(table_dir))
+    if head is None:
+        raise ValueError(f"no snapshot table at {table_dir}")
+    manifest = _read_manifest(table_dir, head)
+    layout = manifest.get("partition_by", [])
+    return snapshot_write(
+        rows(snapshot_read(spark, table_dir, head), layout),
+        table_dir,
+        mode="overwrite",
+        meta=manifest.get("meta", {}),
+        partition_by=layout,
+        maintenance=maintenance(head) if maintenance else None,
+        expected_version=head,
+    )
+
+
+def _one_file_per_dir(df: DataFrame, layout: list[str]) -> DataFrame:
+    """Each Hive dir's rows in one task, so the rewrite writes one file
+    per dir (the compaction write discipline)."""
+    return df.repartition(*layout) if layout else df
 
 
 def snapshot_merge(
@@ -662,50 +708,39 @@ def snapshot_merge(
     """MERGE INTO the snapshot table: read the latest snapshot, apply
     SQL-MERGE semantics (operators/merge.merge_upsert — updates,
     inserts, matched-only deletes, duplicate-source-key guard), commit
-    the result as a new OVERWRITE snapshot. Readers keep snapshot
+    the result as a new OVERWRITE snapshot through _rewrite (properties
+    and layout carried, CAS on the head it read). Readers keep snapshot
     isolation throughout, and the pre-merge version stays readable —
     i.e. a bad merge is rolled back by pinning version N-1, the
     recovery story plain-parquet MERGE lacks. Source-only columns are
     ADDED to the table (NULL for pre-existing rows) — the same
-    add-column evolution an append gets from the table schema.
+    add-column evolution an append gets from the table schema. With no
+    table yet (after recovery), the source commits as version 1.
     Returns the new version.
 
     Cost shape: each merge rewrites the live row set (the manifest has
     no per-partition granularity), so this suits dimension/state tables
     — for fact-scale targets use merge.merge_upsert +
-    persist.write_enhanced's dynamic partition overwrite, which touch
+    enhance.write_enhanced's dynamic partition overwrite, which touch
     only changed partitions.
-
-    Table-properties round-trip (same contract as snapshot_compact):
-    the rewrite preserves the previous manifest's ``meta`` and
-    ``partition_by`` — MERGE changes rows, never the table's layout or
-    recorded properties (the pre-r9 spelling silently de-partitioned a
-    Hive-layout table and dropped its properties on every merge).
     """
     from pyspark.sql import functions as F
 
     from .merge import merge_upsert
 
-    cur = current_version(table_dir)
-    if cur is None:
-        return snapshot_write(source, table_dir, mode="overwrite")
-    prev_manifest = _read_manifest(table_dir, cur)
-    layout = prev_manifest.get("partition_by", [])
-    target = snapshot_read(spark, table_dir)
-    for f in source.schema.fields:  # add-column evolution before merge:
-        if f.name not in target.columns:  # merge projects target.columns
-            target = target.withColumn(f.name, F.lit(None).cast(f.dataType))
-    merged = merge_upsert(target, source, list(keys), **merge_kwargs)
-    if layout:
-        # one file per Hive dir (the compaction write discipline)
-        merged = merged.repartition(*[F.col(c) for c in layout])
-    return snapshot_write(
-        merged,
-        table_dir,
-        mode="overwrite",
-        meta=prev_manifest.get("meta", {}),
-        partition_by=layout,
-    )
+    if not _durable_version(table_dir, current_version(table_dir)):
+        return snapshot_write(
+            source, table_dir, mode="overwrite", expected_version=0
+        )
+
+    def rows(target: DataFrame, layout: list[str]) -> DataFrame:
+        for f in source.schema.fields:  # add-column evolution before merge:
+            if f.name not in target.columns:  # merge projects target.columns
+                target = target.withColumn(f.name, F.lit(None).cast(f.dataType))
+        merged = merge_upsert(target, source, list(keys), **merge_kwargs)
+        return _one_file_per_dir(merged, layout)
+
+    return _rewrite(spark, table_dir, rows)
 
 
 def snapshot_changes(
@@ -796,13 +831,12 @@ def snapshot_compact(
     manifest — and, for partitioned tables, an O(#appends)-branch union
     in every snapshot_read until the rewrite collapses it to one dir).
 
-    TABLE PROPERTIES ROUND-TRIP (the r8 defect): the rewrite preserves
-    the previous manifest's ``meta`` verbatim and keeps the table's
-    ``partition_by`` layout — compaction is maintenance, not a schema
-    or property change. The compaction marker lives in the sibling
-    ``maintenance`` manifest field precisely so it cannot displace
-    properties like a vector store's recorded planes/dim dials (the
-    pre-fix spelling overwrote meta with the marker, which bricked
+    TABLE PROPERTIES ROUND-TRIP (the r8 defect): the rewrite goes
+    through _rewrite like merge and delete — compaction is maintenance,
+    not a schema or property change. The compaction marker lives in the
+    sibling ``maintenance`` manifest field precisely so it cannot
+    displace properties like a vector store's recorded planes/dim dials
+    (the pre-fix spelling overwrote meta with the marker, which bricked
     every subsequent vecstore probe and refused partitioned appends).
 
     Properties the marker buys:
@@ -840,66 +874,53 @@ def snapshot_compact(
     """
     from pyspark.sql import functions as F
 
-    cur = current_version(table_dir)
-    if cur is None:
-        raise FileNotFoundError(f"no committed snapshot under {table_dir}")
-    prev_manifest = _read_manifest(table_dir, cur)
-    layout = prev_manifest.get("partition_by", [])
-    df = snapshot_read(spark, table_dir, cur)
-    if zorder_by:
-        df = df.withColumn(
-            "_zkey", _zorder_col(df, list(zorder_by), zorder_bits)
-        )
-    if layout:
-        cols = [F.col(c) for c in layout]
-        if target_files <= 1:
-            df = df.repartition(*cols)
-        else:
-            # deterministic-enough fan-out salt: splits each partition
-            # across ≤target_files writer tasks; the write is all-or-
-            # nothing into a fresh dir, so retry nondeterminism is moot
-            salt = F.pmod(
-                F.xxhash64(F.spark_partition_id()), F.lit(target_files)
-            )
-            df = df.repartition(*cols, salt.alias("_cf_salt"))
+    def rows(df: DataFrame, layout: list[str]) -> DataFrame:
         if zorder_by:
-            df = df.sortWithinPartitions(*layout, "_zkey")
-    elif zorder_by:
-        # disjoint key ranges across files — the file-level skipping
-        # layout; the final sort makes row groups tight too
-        df = df.repartitionByRange(
-            max(1, target_files), F.col("_zkey")
-        ).sortWithinPartitions("_zkey")
-    else:
-        df = df.repartition(max(1, target_files))
-    if zorder_by:
+            df = df.withColumn(
+                "_zkey", _zorder_col(df, list(zorder_by), zorder_bits)
+            )
+        if layout:
+            if target_files <= 1:
+                df = _one_file_per_dir(df, layout)
+            else:
+                # deterministic-enough fan-out salt: splits each partition
+                # across ≤target_files writer tasks; the write is all-or-
+                # nothing into a fresh dir, so retry nondeterminism is moot
+                salt = F.pmod(
+                    F.xxhash64(F.spark_partition_id()), F.lit(target_files)
+                )
+                df = df.repartition(*layout, salt.alias("_cf_salt"))
+            if zorder_by:
+                df = df.sortWithinPartitions(*layout, "_zkey")
+        elif zorder_by:
+            # disjoint key ranges across files — the file-level skipping
+            # layout; the final sort makes row groups tight too
+            df = df.repartitionByRange(
+                max(1, target_files), F.col("_zkey")
+            ).sortWithinPartitions("_zkey")
+        else:
+            df = df.repartition(max(1, target_files))
         # the key is physical-layout scaffolding, not table data (drop
         # AFTER the sort: a projection does not disturb row order)
-        df = df.drop("_zkey")
-    return snapshot_write(
-        df,
+        return df.drop("_zkey") if zorder_by else df
+
+    return _rewrite(
+        spark,
         table_dir,
-        mode="overwrite",
-        meta=prev_manifest.get("meta", {}),
-        partition_by=layout,
-        maintenance={
+        rows,
+        maintenance=lambda head: {
             "compaction": True,
-            "compacted_from": cur,
+            "compacted_from": head,
             **({"zorder_by": list(zorder_by)} if zorder_by else {}),
         },
     )
 
 
 def is_compaction(table_dir: str, version: int) -> bool:
-    """True iff the version is a data-preserving compaction commit.
-    Reads the sibling ``maintenance`` field; the legacy pre-r9 spelling
-    (marker inside meta) is still honored for tables compacted before
-    the properties-round-trip fix."""
+    """True iff the version is a data-preserving compaction commit (the
+    sibling ``maintenance`` field's marker)."""
     m = _read_manifest(table_dir, version)
-    return bool(
-        m.get("maintenance", {}).get("compaction")
-        or m.get("meta", {}).get("compaction")
-    )
+    return bool(m.get("maintenance", {}).get("compaction"))
 
 
 def snapshot_delete(
@@ -913,9 +934,9 @@ def snapshot_delete(
     The GDPR/right-to-erasure shape: the pre-delete version stays
     readable until ``expire_snapshots`` retires it — run expire (and
     ``snapshot_vacuum``) promptly after erasure deletes, since time
-    travel IS retention. Properties round-trip like merge/compaction:
-    ``meta`` and ``partition_by`` carry forward unchanged, and the
-    commit records a ``maintenance: {"delete": predicate}`` marker —
+    travel IS retention. Properties round-trip like merge/compaction
+    (see _rewrite), and the commit records a ``maintenance: {"delete":
+    predicate}`` marker —
     which also means CHECK constraints are NOT re-validated: a delete
     can only remove rows, and a retroactive constraint that historic
     rows violate must never block erasing exactly those rows.
@@ -927,23 +948,15 @@ def snapshot_delete(
     """
     from pyspark.sql import functions as F
 
-    cur = current_version(table_dir)
-    if cur is None:
-        raise ValueError(f"no snapshot table at {table_dir}")
-    prev_manifest = _read_manifest(table_dir, cur)
-    layout = prev_manifest.get("partition_by", [])
-    kept = snapshot_read(spark, table_dir).filter(
-        ~F.coalesce(F.expr(predicate), F.lit(False))
-    )
-    if layout:
-        kept = kept.repartition(*[F.col(c) for c in layout])
-    return snapshot_write(
-        kept,
+    def rows(df: DataFrame, layout: list[str]) -> DataFrame:
+        kept = df.filter(~F.coalesce(F.expr(predicate), F.lit(False)))
+        return _one_file_per_dir(kept, layout)
+
+    return _rewrite(
+        spark,
         table_dir,
-        mode="overwrite",
-        meta=prev_manifest.get("meta", {}),
-        partition_by=layout,
-        maintenance={"delete": predicate, "deleted_from": cur},
+        rows,
+        maintenance=lambda head: {"delete": predicate, "deleted_from": head},
     )
 
 
@@ -972,6 +985,28 @@ def _dir_in_flight(path: str, cutoff: float) -> bool:
     return newest > cutoff
 
 
+def _unreferenced_dirs(table_dir: str, older_than_seconds: float) -> list[str]:
+    """The one orphan-dir scan: data dirs (table-relative, sorted) that
+    no retained manifest references and that are not possibly in flight
+    (see _dir_in_flight) after ``older_than_seconds``."""
+    data_root = f"{table_dir}/data"
+    if not os.path.isdir(data_root):
+        return []
+    live = {
+        d
+        for v in _retained_versions(table_dir)
+        for d in _read_manifest(table_dir, v)["dirs"]
+    }
+    cutoff = time.time() - older_than_seconds
+    return [
+        f"data/{d}"
+        for d in sorted(os.listdir(data_root))
+        if f"data/{d}" not in live
+        and os.path.isdir(f"{data_root}/{d}")
+        and not _dir_in_flight(f"{data_root}/{d}", cutoff)
+    ]
+
+
 def snapshot_vacuum(
     table_dir: str, older_than_seconds: float = 86400.0
 ) -> list[str]:
@@ -993,27 +1028,9 @@ def snapshot_vacuum(
     """
     import shutil
 
-    data_root = f"{table_dir}/data"
-    if not os.path.isdir(data_root):
-        return []
-    live: set[str] = set()
-    mdir = _manifest_dir(table_dir)
-    if os.path.isdir(mdir):
-        for f in os.listdir(mdir):
-            if f.startswith("v") and f.endswith(".json"):
-                v = int(f[1:-5])
-                live.update(_read_manifest(table_dir, v)["dirs"])
-    cutoff = time.time() - older_than_seconds
-    removed = []
-    for d in sorted(os.listdir(data_root)):
-        rel = f"data/{d}"
-        full = f"{data_root}/{d}"
-        if rel in live or not os.path.isdir(full):
-            continue
-        if _dir_in_flight(full, cutoff):
-            continue  # possibly an in-flight writer — retention guard
-        shutil.rmtree(full)
-        removed.append(rel)
+    removed = _unreferenced_dirs(table_dir, older_than_seconds)
+    for rel in removed:
+        shutil.rmtree(f"{table_dir}/{rel}")
     return removed
 
 
@@ -1095,12 +1112,7 @@ def maintenance_plan(
     cur = current_version(table_dir)
     if cur is None:
         return plan
-    mdir = _manifest_dir(table_dir)
-    versions = sorted(
-        int(f[1:-5])
-        for f in os.listdir(mdir)
-        if f.startswith("v") and f.endswith(".json")
-    )
+    versions = _retained_versions(table_dir)
     plan["n_versions"] = len(versions)
     n_dirs = len(_read_manifest(table_dir, cur)["dirs"])
     plan["n_dirs"] = n_dirs
@@ -1114,21 +1126,7 @@ def maintenance_plan(
         reasons.append(
             f"{len(versions)} manifests retained (> {keep_last}): expire"
         )
-    live: set[str] = set()
-    for v in versions:
-        live.update(_read_manifest(table_dir, v)["dirs"])
-    data_root = f"{table_dir}/data"
-    cutoff = time.time() - vacuum_after_seconds
-    if os.path.isdir(data_root):
-        for d in sorted(os.listdir(data_root)):
-            rel = f"data/{d}"
-            full = f"{data_root}/{d}"
-            if (
-                rel not in live
-                and os.path.isdir(full)
-                and not _dir_in_flight(full, cutoff)
-            ):
-                plan["vacuum"].append(rel)
+    plan["vacuum"] = _unreferenced_dirs(table_dir, vacuum_after_seconds)
     if plan["vacuum"]:
         reasons.append(
             f"{len(plan['vacuum'])} orphaned data dir(s) past retention: vacuum"

@@ -262,6 +262,57 @@ def test_txn_fence_spelled_only_in_snapshots():
     assert hits == []
 
 
+def test_rewrite_and_manifest_listing_spelled_once_in_snapshots():
+    """In operators/snapshots.py, a commit that carries a manifest's
+    ``meta`` goes through _rewrite (head read after crash recovery, CAS
+    on it) or snapshot_append, and the manifest directory is listed by
+    _retained_versions only."""
+    import ast
+
+    path = (
+        pathlib.Path(__file__).resolve().parent.parent
+        / "bike_data_flow_spark" / "operators" / "snapshots.py"
+    )
+
+    def calls(node, name):
+        return [
+            c for c in ast.walk(node)
+            if isinstance(c, ast.Call)
+            and name in (getattr(c.func, "id", None), getattr(c.func, "attr", None))
+        ]
+
+    hits = []
+    for fn in ast.parse(path.read_text()).body:
+        if not isinstance(fn, ast.FunctionDef):
+            continue
+        if fn.name not in ("_rewrite", "snapshot_append"):
+            hits += [
+                f"{fn.name}:{c.lineno}: snapshot_write(meta=...)"
+                for c in calls(fn, "snapshot_write")
+                if any(k.arg == "meta" for k in c.keywords)
+            ]
+        if fn.name != "_retained_versions":
+            # names bound to the manifest dir, then any listing of them
+            mdir = {
+                t.id
+                for a in ast.walk(fn)
+                if isinstance(a, ast.Assign) and calls(a.value, "_manifest_dir")
+                for t in a.targets
+                if isinstance(t, ast.Name)
+            }
+            hits += [
+                f"{fn.name}:{c.lineno}: lists the manifest dir"
+                for lister in ("listdir", "scandir", "glob", "iglob", "walk")
+                for c in calls(fn, lister)
+                if any(
+                    calls(arg, "_manifest_dir")
+                    or any(getattr(n, "id", None) in mdir for n in ast.walk(arg))
+                    for arg in c.args
+                )
+            ]
+    assert hits == []
+
+
 def test_shard_layout_spelled_only_in_shards():
     """The dedup stores' shard layout — the shard column, how it is
     derived, written, appended and pruned — is spelled in

@@ -5,12 +5,19 @@ from __future__ import annotations
 
 from pathlib import Path
 
+import pytest
+
 from bike_data_flow_spark.operators.snapshots import (
     current_version,
     expire_snapshots,
+    snapshot_append,
+    snapshot_compact,
+    snapshot_delete,
     snapshot_history,
+    snapshot_merge,
     snapshot_read,
     snapshot_write,
+    txn_committed,
 )
 
 
@@ -115,8 +122,6 @@ def test_history_and_expire_survive_prior_expiry(spark, tmp_path: Path):
 
 
 def test_corrupt_pointer_fails_loudly(spark, tmp_path: Path):
-    import pytest
-
     t = str(tmp_path / "tbl")
     snapshot_write(_df(spark, [(1, "a")]), t)
     Path(f"{t}/_LATEST").write_text("garbage")
@@ -226,8 +231,6 @@ def test_version_collision_errors_not_clobbers(spark, tmp_path: Path):
     snapshot_sink's concurrency contract)."""
     import json
 
-    import pytest
-
     t = str(tmp_path / "tbl")
     snapshot_write(_df(spark, [(1, "a")]), t)
     # simulate the racing writer: it observed prev=1 before the other
@@ -330,8 +333,6 @@ def test_snapshot_write_collision_via_stale_version_read(spark, tmp_path, monkey
     the collision path exists for the one whose competitor publishes
     AFTER the scan — then let the real code path hit the conditional
     publish."""
-    import pytest
-
     from bike_data_flow_spark.operators import snapshots as S
 
     t = str(tmp_path / "tbl")
@@ -369,6 +370,67 @@ def test_orphaned_manifest_self_heals_on_next_write(spark, tmp_path: Path):
     assert {r["k"] for r in snapshot_read(spark, t).collect()} == {1, 2, 3}
     # and time travel to the recovered version works
     assert {r["k"] for r in snapshot_read(spark, t, version=2).collect()} == {1, 2}
+
+
+# each rewrite verb on a table holding k in {1, 2, 3}, and the keys it
+# leaves behind
+_REWRITES = {
+    "compact": (lambda spark, t: snapshot_compact(spark, t), {1, 2, 3}),
+    "delete": (lambda spark, t: snapshot_delete(spark, t, "k = 1"), {2, 3}),
+    "merge": (
+        lambda spark, t: snapshot_merge(
+            spark, t, _df(spark, [(4, "d")]), ["k"]
+        ),
+        {1, 2, 3, 4},
+    ),
+}
+
+
+@pytest.mark.parametrize("verb", sorted(_REWRITES))
+def test_rewrite_keeps_orphaned_commit_and_its_fence(spark, tmp_path, verb):
+    """A rewrite after a crash between a fenced append's manifest
+    publish and its pointer move starts from the durable orphan: the
+    orphan's rows survive (minus what the verb deletes) and its txn
+    stays committed — the rewrite carries the orphan's txn keys, not the
+    pointer version's."""
+    t = str(tmp_path / "tbl")
+    snapshot_write(_df(spark, [(1, "a"), (2, "b")]), t, mode="overwrite")
+    snapshot_append(_df(spark, [(3, "c")]), t, txn=("app", 2))
+    (Path(t) / "_LATEST").write_text("1")  # pointer move never happened
+    assert txn_committed(t, ("app", 2))
+
+    run, keys = _REWRITES[verb]
+    assert run(spark, t) == 3
+    assert {r["k"] for r in snapshot_read(spark, t).collect()} == keys
+    assert txn_committed(t, ("app", 2))
+
+
+@pytest.mark.parametrize("verb", sorted(_REWRITES))
+def test_rewrite_refuses_commit_landing_after_its_read(
+    spark, tmp_path, monkeypatch, verb
+):
+    """A rewrite is a CAS on the head it read: a commit landing between
+    the read and the publish makes the rewrite raise
+    SnapshotConflictError, and the interloper's rows stay in the table
+    instead of being overwritten."""
+    from bike_data_flow_spark.operators import snapshots as S
+
+    t = str(tmp_path / "tbl")
+    snapshot_write(_df(spark, [(1, "a"), (2, "b")]), t, mode="overwrite")
+    snapshot_write(_df(spark, [(3, "c")]), t)
+
+    def read_then_interloper_appends(*args, **kwargs):
+        df = snapshot_read(*args, **kwargs)
+        monkeypatch.setattr(S, "snapshot_read", snapshot_read)  # once
+        snapshot_append(_df(spark, [(7, "x")]), t)
+        return df
+
+    monkeypatch.setattr(S, "snapshot_read", read_then_interloper_appends)
+    run, _ = _REWRITES[verb]
+    with pytest.raises(S.SnapshotConflictError):
+        run(spark, t)
+    assert current_version(t) == 3
+    assert {r["k"] for r in snapshot_read(spark, t).collect()} == {1, 2, 3, 7}
 
 
 def test_first_commit_orphan_recovers_too(spark, tmp_path: Path):
@@ -671,8 +733,6 @@ def test_snapshot_write_cas_expected_version(spark, tmp_path: Path):
     """expected_version turns the commit into a compare-and-swap: a
     stale precondition raises SnapshotConflictError BEFORE any data
     write, and a fresh one commits exactly once."""
-    import pytest
-
     from bike_data_flow_spark.operators.snapshots import (
         SnapshotConflictError,
     )
@@ -763,9 +823,9 @@ def test_stream_sink_into_partitioned_table(spark, tmp_path: Path):
     got = {r["k"] for r in snapshot_read(spark, t).collect()}
     assert got == {0, 1, 2, 3, 4, 5, 10, 11}
     # layout survived and still prunes
-    from bike_data_flow_spark.operators.snapshots import table_layout
+    from bike_data_flow_spark.operators.snapshots import _read_manifest
 
-    assert table_layout(t) == ["p"]
+    assert _read_manifest(t, current_version(t))["partition_by"] == ["p"]
     odd = {r["k"] for r in snapshot_read(spark, t).filter(F.col("p") == 1).collect()}
     assert odd == {1, 3, 5, 11}
     # replay fence still holds on the partitioned path
@@ -898,8 +958,6 @@ def test_append_with_a_changed_column_type_is_refused(spark, tmp_path: Path):
     change, and a lossless widening (int into a bigint column) is cast
     to the table's type."""
     import os
-
-    import pytest
 
     t = str(tmp_path / "tbl")
     snapshot_write(_df(spark, [(1, "a")], "k bigint, v string"), t)
