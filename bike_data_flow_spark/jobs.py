@@ -132,6 +132,7 @@ def cmd_curate(args) -> int:
     import pyspark.sql.functions as F
 
     from .operators import dedup as D
+    from .operators import pins
     from .operators import text as T
     from .session import get_spark
 
@@ -139,13 +140,12 @@ def cmd_curate(args) -> int:
     docs = spark.read.parquet(args.documents)
     c = F.col("text")
     staged = docs.select("doc_id", c, T.tokens(c).alias("_toks"))
-    quality = (
+    quality = pins.cache(
         staged.filter(
             F.size("_toks").between(args.min_tokens, args.max_tokens)
             & (T.alpha_ratio(c) >= args.min_alpha)
         )
         .select("doc_id", "text")
-        .cache()
     )
     exact = D.drop_exact_duplicates(quality)
     pairs = D.minhash_lsh_candidates(exact)

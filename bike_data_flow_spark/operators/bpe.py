@@ -33,6 +33,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from . import pins
 from .text import tokens
 
 _MARK = "\x01"
@@ -58,6 +59,7 @@ def _pair_counts(cur: DataFrame) -> DataFrame:
     )
 
 
+@pins.scope()
 def bpe_learned_merges(
     df: DataFrame, n_merges: int = 3, text_col: str = "text"
 ) -> DataFrame:
@@ -68,7 +70,7 @@ def bpe_learned_merges(
     Iterative-state hygiene (ADVICE r5): each round collects the 1-row
     argmax to the driver (bounded by contract) and rewrites the
     vocabulary with LITERAL needles — so the superseded round's cached
-    vocabulary can be unpersisted as soon as the new one materializes,
+    vocabulary can be released as soon as the new one materializes,
     instead of every intermediate copy staying pinned in executor
     storage for the session. The per-round count() that forces the new
     cache also truncates the recompute chain, the same reason the
@@ -81,14 +83,14 @@ def bpe_learned_merges(
         .agg(F.count(F.lit(1)).alias("wc"))
     )
     chars = F.expr("transform(sequence(1, length(w)), i -> substring(w, i, 1))")
-    cur = words.select(
+    cur = pins.cache(words.select(
         F.concat(F.lit("  "), F.concat_ws("  ", chars), F.lit("  ")).alias("s"),
         "wc",
-    ).cache()
+    ))
 
     schema = "step int, left_sym string, right_sym string, pair_count bigint"
     rows = []
-    pending = None  # superseded round, safe to drop after the NEXT argmax
+    superseded = []  # the round cur replaced: released after the NEXT argmax
     for step in range(1, n_merges + 1):
         best = (
             _pair_counts(cur)
@@ -98,11 +100,9 @@ def bpe_learned_merges(
         )
         # this argmax just materialized cur's cache, so the round it
         # superseded is no longer needed by anything — drop it now
-        # (deferred one round: unpersisting before cur materializes
+        # (deferred one round: releasing before cur materializes
         # would force a full-chain recompute)
-        if pending is not None:
-            pending.unpersist()
-            pending = None
+        pins.release(*superseded)
         if best is None:  # vocabulary exhausted / empty corpus
             break
         rows.append(
@@ -116,13 +116,12 @@ def bpe_learned_merges(
         if step < n_merges:
             needle = f" {best['l']}  {best['r']} "
             merged = f" {best['l']}{_MARK}{best['r']} "
-            pending = cur
-            cur = pending.select(
+            superseded = [cur]
+            cur = pins.cache(cur.select(
                 F.replace(F.col("s"), F.lit(needle), F.lit(merged)).alias("s"),
                 "wc",
-            ).cache()
-    cur.unpersist()
-    return spark.createDataFrame(rows, schema)
+            ))
+    return spark.createDataFrame(rows, schema)  # the scope releases cur
 
 
 def bpe_vocab_lengths(
@@ -140,11 +139,11 @@ def bpe_vocab_lengths(
         .agg(F.count(F.lit(1)).alias("wc"))
     )
     chars = F.expr("transform(sequence(1, length(w)), i -> substring(w, i, 1))")
-    cur = words.select(
+    cur = pins.cache(words.select(
         "w",
         F.concat(F.lit("  "), F.concat_ws("  ", chars), F.lit("  ")).alias("s"),
         "wc",
-    ).cache()
+    ))
     for _ in range(n_merges):
         best = (
             _pair_counts(cur)
@@ -157,13 +156,13 @@ def bpe_vocab_lengths(
         needle = f" {best['l']}  {best['r']} "
         merged = f" {best['l']}{_MARK}{best['r']} "
         prev = cur
-        cur = prev.select(
+        cur = pins.cache(prev.select(
             "w",
             F.replace(F.col("s"), F.lit(needle), F.lit(merged)).alias("s"),
             "wc",
-        ).cache()
-        cur.count()  # materialize before dropping the superseded round
-        prev.unpersist()
+        ))
+        cur.count()  # materialize before releasing the superseded round
+        pins.release(prev)
     return cur.select(
         "w", F.size(F.split(F.trim(F.col("s")), "  ")).alias("n_syms")
     )

@@ -24,13 +24,14 @@ near-uniform by construction (hash keys), so no skew handling needed;
 frequency-capping of pathological shingles (stop-shingles appearing in
 >F docs) is available via ``max_shingle_freq``.
 
-Cache policy: the ``.cache()`` calls here (and in similarity/textops)
-mark subtrees consumed by multiple lazy consumers inside ONE returned
-plan — they cannot be unpersisted by the operator (the plan has not
-executed yet). Blocks are MEMORY_AND_DISK and LRU-evicted, so a
-long-lived session degrades to recompute, never to failure; callers
-running many queries can call ``spark.catalog.clearCache()`` between
-them.
+Cache policy: the caches here (and in similarity/textops) mark
+subtrees consumed by multiple lazy consumers inside ONE returned plan
+— the operator cannot release them (the plan has not executed yet),
+so they belong to the caller. Blocks are MEMORY_AND_DISK and
+LRU-evicted, so an unreleased pin degrades to recompute, never to
+failure; a caller that consumes the plan inside ``pins.scope()``
+(operators/pins.py, which owns the mechanism) gets every such pin
+released when the scope exits.
 """
 
 from __future__ import annotations
@@ -38,6 +39,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from . import pins
 from .joins import pairs_sharing_key
 from .text import normalized_text, tokens
 
@@ -208,7 +210,7 @@ def _shingle_overlaps(
     (broadcastable side stats) → pairs sharing a shingle (only
     co-occurring docs meet) → per-pair intersection count → size join.
     The shared front of the Jaccard and containment joins."""
-    sh = doc_shingles(df, id_col, text_col, n, max_shingle_freq).cache()
+    sh = pins.cache(doc_shingles(df, id_col, text_col, n, max_shingle_freq))
     sizes = sh.groupBy(id_col).agg(F.count(F.lit(1)).alias("set_size"))
 
     # set sizes count EVERY shingle, but the pair join only needs the
@@ -216,9 +218,9 @@ def _shingle_overlaps(
     # so dropping it shrinks the pair join's input without touching the
     # output. Cached: pairs_sharing_key reads it twice.
     gf = sh.groupBy("shingle").agg(F.count(F.lit(1)).alias("_df"))
-    joinable = sh.join(
+    joinable = pins.cache(sh.join(
         gf.filter(F.col("_df") >= 2).select("shingle"), "shingle"
-    ).cache()
+    ))
     inter = (
         pairs_sharing_key(joinable, id_col, ["shingle"])
         .groupBy("id_a", "id_b")
@@ -332,9 +334,9 @@ def minhash_lsh_candidates(
     uncached, the whole shingle→md5→min-signature pipeline (the most
     expensive subtree in the dedup family) runs once per side.
     """
-    keys = minhash_band_keys(
+    keys = pins.cache(minhash_band_keys(
         minhash_signatures(df, id_col, text_col, n, k), id_col, k, bands
-    ).cache()
+    ))
     return (
         pairs_sharing_key(keys, id_col, ["band", "band_key"])
         .select("id_a", "id_b")
@@ -449,12 +451,11 @@ def connected_components(
     # the eager pin only added one extra serial driver-blocking job
     # before it (guide §1.2 — serial action count is the wall at
     # per-batch scale).
-    sym = (
+    sym = pins.cache(
         edges.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
         .unionByName(
             edges.select(F.col("id_b").alias("src"), F.col("id_a").alias("dst"))
         )
-        .cache()
     )
     # Work ONLY on edge endpoints: a vertex with no near-dup pair can
     # never change label, so it rejoins the result as its own singleton
@@ -473,8 +474,7 @@ def connected_components(
     int_ids = dict(sym.dtypes).get("src") in ("int", "bigint")
     if int_ids and sym.count() <= SMALL_GRAPH_EDGES:
         # the returned union-find plan reads the cached sym, so the
-        # cache cannot be unpersisted here (module Cache policy
-        # applies: MEMORY_AND_DISK, LRU-evicted, session-lifetime)
+        # caller's pins.scope() releases it (module Cache policy)
         uf = sym.coalesce(1).mapInPandas(_unionfind_batches, "id long, label long")
         id_type = dict(vertices.select(F.col(id_col).alias("id")).dtypes)["id"]
         uf = uf.select(F.col("id").cast(id_type).alias("id"),
@@ -485,11 +485,10 @@ def connected_components(
         return uf.unionByName(
             singletons.select("id", F.col("id").alias("label"))
         ).select(F.col("id").alias(id_col), F.col("label").alias("cluster_id"))
-    labels = (
+    labels = pins.checkpoint(
         sym.select(F.col("src").alias("id"))
         .distinct()
         .select("id", F.col("id").alias("label"))
-        .localCheckpoint()
     )
     singletons = vertices.select(F.col(id_col).alias("id")).join(
         labels.select("id"), "id", "left_anti"
@@ -511,7 +510,7 @@ def connected_components(
         # carry the change flag in the checkpointed frame: the probe
         # then scans materialized partitions instead of re-joining the
         # old and new label tables (one fewer shuffle per round)
-        new_labels = (
+        new_labels = pins.checkpoint(
             labels.join(nbr, labels["id"] == nbr["dst"], "left")
             .join(hop, labels["label"] == hop["_hid"], "left")
             .select(
@@ -519,16 +518,15 @@ def connected_components(
                 new_label.alias("label"),
                 (new_label != labels["label"]).alias("_changed"),
             )
-            .localCheckpoint()
         )
         changed = new_labels.filter(F.col("_changed")).limit(1).count()
         labels = new_labels.drop("_changed")
         if changed == 0:
-            # owner-unpersist (ADVICE r12): every remaining consumer
+            # owner release (ADVICE r12): every remaining consumer
             # reads the CHECKPOINTED labels, so the cached edge list is
             # dead weight from here — long-lived sessions composing
             # this operator repeatedly must not accumulate its blocks
-            sym.unpersist()
+            pins.release(sym)
             return labels.unionByName(
                 singletons.select("id", F.col("id").alias("label"))
             ).select(F.col("id").alias(id_col), F.col("label").alias("cluster_id"))
@@ -621,10 +619,9 @@ def capped_block_join(
             )
         )
     sigs = staged.groupBy("nid").agg(*aggs)
-    keys = (
+    keys = pins.cache(  # pairs_sharing_key reads it twice
         minhash_band_keys(sigs, id_col="nid", k=k, bands=bands)
         .join(big.select("nid", "name", "blk"), "nid")
-        .cache()  # pairs_sharing_key reads it twice
     )
     # pairs are ordered by NAME (na < nb), as on the exact route
     approx = (
@@ -671,7 +668,7 @@ def _hamming_band_pairs(
     # upstream plan (the simhash aggregation, a media-decoding
     # mapInPandas) and the explode then run once, and a keyed row is
     # only an id and three longs, so holding blocks× rows is cheap.
-    keyed = (
+    keyed = pins.cache(
         sig.select(
             F.col(id_col), F.col(sig_col), F.explode(F.array(*structs)).alias("bk")
         )
@@ -681,7 +678,6 @@ def _hamming_band_pairs(
             F.col("bk.blk").alias("blk"),
             F.col("bk.blk_val").alias("blk_val"),
         )
-        .cache()
     )
     sig_a, sig_b = f"{sig_col}_a", f"{sig_col}_b"
     return (
@@ -753,12 +749,11 @@ def prefix_filter_jaccard_pairs(
     # materializing `arr` stops Catalyst's projection collapse from
     # inlining the whole shingle transform into the explode below
     # (measured 15× slower uncached)
-    docs = (
+    docs = pins.cache(
         doc_shingle_arrays(
             spread_for_map(df, id_col), id_col=id_col, text_col=text_col, n=n
         )
         .withColumn("n", F.size("arr"))
-        .cache()
     )
     ex = docs.select(F.col(id_col), F.col("n"), F.explode("arr").alias("shingle"))
     gf2 = (
@@ -767,7 +762,7 @@ def prefix_filter_jaccard_pairs(
         .filter(F.col("df") >= 2)
     )
     plen = F.col("n") - F.ceil(F.lit(threshold) * F.col("n")) + F.lit(1)
-    pref = (
+    pref = pins.cache(
         ex.join(gf2, "shingle")
         # n is functionally dependent on the id; grouping by both saves
         # a join back to docs
@@ -800,7 +795,6 @@ def prefix_filter_jaccard_pairs(
         # two join consumers below (probe + index side); the index-side
         # filter breaks Spark's self-join exchange reuse, so an
         # uncached pref would execute the whole shingle pipeline twice
-        .cache()
     )
     a = pref.select(
         F.col(id_col).alias("id_a"),
@@ -924,7 +918,7 @@ def shingle_novelty_scores(
     md5-free keys, vocab-sized output), joined back to the doc-shingle
     pairs for a per-doc mean — two bounded shuffles, no pair term.
     """
-    sh = doc_shingles(df, id_col=id_col, text_col=text_col, n=n).cache()
+    sh = pins.cache(doc_shingles(df, id_col=id_col, text_col=text_col, n=n))
     first = sh.groupBy("shingle").agg(F.min(id_col).alias("_first"))
     novel = F.when(F.col("_first") == F.col(id_col), 1).otherwise(0)
     return (
@@ -992,10 +986,9 @@ def duplicate_spans(
             lambda p: F.md5(F.concat_ws(" ", F.slice("_toks", p, W))),
         ),
     ).otherwise(F.array().cast("array<string>"))
-    wins = (
+    wins = pins.cache(  # two consumers: the frequency agg and the semi-join
         toks_df.select(F.col(id_col), F.posexplode(fps).alias("pos0", "fp"))
         .select(F.col(id_col), (F.col("pos0") + 1).alias("pos"), F.col("fp"))
-        .cache()  # two consumers: the frequency agg and the semi-join
     )
     dupfp = (
         wins.groupBy("fp")
@@ -1115,7 +1108,7 @@ def minhash_estimate_errors(
             )
         )
     aggs.append(F.sort_array(F.collect_list("shingle")).alias("arr"))
-    sigs = staged.groupBy(id_col).agg(*aggs).cache()
+    sigs = pins.cache(staged.groupBy(id_col).agg(*aggs))
     cand = (
         pairs_sharing_key(
             minhash_band_keys(sigs, id_col, k, bands), id_col, ["band", "band_key"]

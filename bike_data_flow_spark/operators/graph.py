@@ -7,11 +7,12 @@ triangle counting and label propagation over the k-NN graph in
 queries/vectors.py) with the classic frontier-expansion primitives.
 
 Iteration discipline — WINDOWED checkpointing (shared by all three
-loops): rounds cache lazily inside a window of ``_CKPT_EVERY`` rounds;
-at each window boundary the state table localCheckpoints (eager:
-materializes AND truncates the logical plan) and every cache/checkpoint
-the window superseded is released deterministically. Why a window
-rather than per-round eagerness or pure laziness:
+loops, ``pins.Window``): rounds cache lazily inside a window of
+``_CKPT_EVERY`` rounds; at each window boundary the state table
+localCheckpoints (eager: materializes AND truncates the logical plan)
+and every cache/checkpoint the window superseded is released
+deterministically. Why a window rather than per-round eagerness or
+pure laziness:
 
 - pure lazy caching (the pre-r7 spelling) leaks one cached round per
   iteration AND lets the logical plan double per round where the state
@@ -26,12 +27,11 @@ rather than per-round eagerness or pure laziness:
   and plan size: ≤ 2^window plan leaves and ≤ window live rounds,
   constants independent of depth.
 
-Superseded checkpoints release through the persistent-RDD handle
-captured at checkpoint time (local checkpoints have no public
-unpersist); superseded window caches unpersist right after the
-boundary checkpoint materializes — the bpe.py deferred-release rule
-(never release before the successor is durable: local checkpoints
-cannot recompute).
+Superseded pins are released only after the boundary checkpoint has
+materialized: never release before the successor is durable, since
+local checkpoints cannot recompute. How a checkpoint is released, and
+who owns the last window's pins (the caller's ``pins.scope()``), is
+operators/pins.py's.
 """
 
 from __future__ import annotations
@@ -39,54 +39,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from . import pins
+
 _CKPT_EVERY = 4  # window length: shallow (≤4-round) loops never checkpoint
-
-
-def _checkpoint(df: DataFrame):
-    """localCheckpoint(eager) + THE checkpointed RDD handle, so the
-    round can be released deterministically once superseded.
-
-    The handle is captured DIRECTLY from the returned DataFrame's plan
-    — a local checkpoint's analyzed plan is a LogicalRDD wrapping the
-    persisted RDD — never by diffing the global persistent-RDD
-    registry: a registry diff would sweep up any cache some concurrent
-    job happened to materialize during the checkpoint and force-
-    unpersist it at the next window roll."""
-    out = df.localCheckpoint()  # eager by default
-    try:
-        handles = [out._jdf.queryExecution().analyzed().rdd()]
-    except Exception:
-        # plan-shape drift across Spark versions: fall back to keeping
-        # the checkpoint pinned (leak one round) rather than guessing
-        # from the global registry and risking an unrelated unpersist
-        handles = []
-    return out, handles
-
-
-class _Window:
-    """Tracks one checkpoint window: the caches opened since the last
-    boundary and the previous boundary's checkpoint handles."""
-
-    def __init__(self) -> None:
-        self.caches: list[DataFrame] = []
-        self.handles: list = []
-
-    def cache(self, df: DataFrame) -> DataFrame:
-        df = df.cache()
-        self.caches.append(df)
-        return df
-
-    def roll(self, state: DataFrame) -> DataFrame:
-        """Checkpoint ``state`` (materializes the window), then release
-        everything the checkpoint supersedes."""
-        new_state, new_handles = _checkpoint(state)
-        for c in self.caches:
-            c.unpersist()
-        self.caches = []
-        for h in self.handles:
-            h.unpersist(False)
-        self.handles = new_handles
-        return new_state
 
 
 def bfs_hops(
@@ -113,7 +68,7 @@ def bfs_hops(
     textbook Pregel superstep). State follows the windowed-checkpoint
     discipline in the module docstring.
     """
-    win = _Window()
+    win = pins.Window()
     visited = win.cache(
         sources.select(F.col(node_col)).distinct().withColumn("hops", F.lit(0))
     )
@@ -168,7 +123,7 @@ def pagerank(
     iteration. State follows the windowed-checkpoint discipline in the
     module docstring.
     """
-    win = _Window()
+    win = pins.Window()
     deg = win.cache(
         edges.groupBy(F.col(src_col).alias("node")).agg(
             F.count(F.lit(1)).alias("deg")
@@ -236,7 +191,7 @@ def bellman_ford(
     union) follows the windowed-checkpoint discipline in the module
     docstring.
     """
-    win = _Window()
+    win = pins.Window()
     dist = win.cache(
         sources.select(F.col(node_col), F.lit(0).cast("long").alias("cost"))
     )

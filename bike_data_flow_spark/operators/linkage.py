@@ -46,6 +46,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..session import overlap
+from . import pins
 from .joins import pairs_sharing_key
 
 
@@ -250,9 +251,9 @@ def global_sort_index(
     part = records.repartitionByRange(max(1, n_parts), *keys).withColumn(
         "_pid", F.spark_partition_id()
     )
-    local = part.withColumn(
+    local = pins.checkpoint(part.withColumn(
         "_rn", F.row_number().over(Window.partitionBy("_pid").orderBy(*keys))
-    ).localCheckpoint()
+    ))
     counts = local.groupBy("_pid").agg(F.max("_rn").alias("_cnt"))
     offsets = counts.withColumn(
         "_off",

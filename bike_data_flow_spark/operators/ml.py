@@ -29,6 +29,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from . import pins
 from .dedup import md5_hash64
 from .text import tokens
 
@@ -102,12 +103,12 @@ def logreg_train(
     arithmetic step mirrors the SQL-oracle spelling (see module
     docstring) so the learned weights hash-match across engines.
 
-    Cache ownership: only cache (and only unpersist) the feature
-    frame when the CALLER hasn't already — the old unconditional
-    ``unpersist()`` dropped the caller's cache too, so a subsequent
-    ``logreg_score`` over the same frame recomputed every feature."""
-    owned = not features.is_cached
-    feats = features.cache() if owned else features
+    Cache ownership: the feature frame is pinned for the rounds and
+    released after them, unless the CALLER already cached it — then
+    ``pins.cache`` makes no pin and the caller's cache survives (an
+    unconditional release dropped it, so a subsequent ``logreg_score``
+    over the same frame recomputed every feature)."""
+    feats = pins.cache(features)
     weights = [0.0] * (n_buckets + 1)
     for _ in range(n_iter):
         p = _p_expr(weights, n_buckets)
@@ -127,8 +128,7 @@ def logreg_train(
         ]
         row = feats.agg(*updates).first()
         weights = [row[f"w{i}"] for i in range(n_buckets + 1)]
-    if owned:
-        feats.unpersist()
+    pins.release(feats)
     return weights
 
 

@@ -28,6 +28,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from . import pins
 from . import text as T
 
 BM25_K1 = 1.2
@@ -76,10 +77,9 @@ def bm25_scores(
     ).filter(F.col("term").isin(*terms))
     # cached: feeds the score rows AND the df aggregate (tiny, but the
     # uncached plan would tokenize the corpus twice)
-    tf = (
+    tf = pins.cache(
         tok.groupBy(id_col, "dl", "term")
         .agg(F.count(F.lit(1)).alias("tf"))
-        .cache()
     )
     dfreq = doc_frequencies(tf)
 

@@ -32,6 +32,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from . import pins
+
 
 def select_within_token_budget(
     df: DataFrame,
@@ -51,7 +53,7 @@ def select_within_token_budget(
     # cached: three consumers (bin totals, full-bin keep, boundary
     # fill) would otherwise re-run the caller's scoring pipeline —
     # typically regex-heavy quality metrics — once each
-    binned = d.withColumn("_bin", F.floor(F.col(score_col) * bins)).cache()
+    binned = pins.cache(d.withColumn("_bin", F.floor(F.col(score_col) * bins)))
     totals = binned.groupBy("_bin").agg(F.sum(weight_col).alias("_bin_w"))
     wdesc = Window.orderBy(F.desc("_bin")).rowsBetween(
         Window.unboundedPreceding, -1
@@ -122,12 +124,12 @@ def exact_quantile_cont(
     CacheManager entry per call AND scanned the caller's pipeline
     twice — stats, then cache materialization; measured 2.5 s vs
     1.3 s on regression_conformal_q at sf0.1). The pinned column is
-    O(n) executor storage, the same footprint the cache had; blocks
-    release with the plan via the ContextCleaner instead of waiting
-    on an unpersist.
+    O(n) executor storage, the same footprint the cache had; the
+    returned plan reads it, so its blocks release when the caller's
+    ``pins.scope()`` exits (or with the plan, via the ContextCleaner).
     """
     v = F.col(value_col)
-    pinned = values.select(v.alias(value_col)).localCheckpoint()
+    pinned = pins.checkpoint(values.select(v.alias(value_col)))
     stats = pinned.agg(
         F.count(F.lit(1)).cast("bigint").alias("_n"),
         F.min(v).alias("_lo"),
@@ -138,12 +140,12 @@ def exact_quantile_cont(
     width = (F.col("_hi") - F.col("_lo")) / F.lit(bins)
     # eager 1-row pin: the stats scan of `values` runs ONCE and feeds
     # the binned projection, the bucket pick, and the n==0 totality row
-    ranks = stats.select(
+    ranks = pins.checkpoint(stats.select(
         "_n", "_lo", "_hi",
         k.alias("_k"),
         (pos - k.cast("double")).alias("_frac"),
         width.alias("_w"),
-    ).localCheckpoint()
+    ))
     # two consumers (bucket counts, rank-holding-bucket pick) both read
     # the PINNED column — in-memory block re-reads, not pipeline re-runs
     binned = pinned.select(v.alias("_v")).crossJoin(F.broadcast(ranks)).select(

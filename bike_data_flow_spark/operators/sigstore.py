@@ -74,6 +74,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..session import overlap
+from . import pins
 from .bloom import (
     BLOOM_BITS_DEFAULT,
     BLOOM_K_DEFAULT,
@@ -211,6 +212,7 @@ def band_keys_for(
     return with_shard(rows, _key(), SIGSTORE_SHARDS)
 
 
+@pins.scope()
 def signature_store_init(
     docs: DataFrame,
     table_dir: str,
@@ -238,7 +240,7 @@ def signature_store_init(
     way). The store is written one file per shard (shards.py)."""
     n_shards = SIGSTORE_SHARDS
     bits, bk = SIGSTORE_BLOOM_BITS, SIGSTORE_BLOOM_K
-    rows = band_keys_for(docs, id_col, text_col).localCheckpoint()
+    rows = pins.checkpoint(band_keys_for(docs, id_col, text_col))
     next_version = (current_version(table_dir) or 0) + 1
 
     def _write_store() -> int:
@@ -480,7 +482,7 @@ def incremental_lsh_pairs(
     delta = (
         delta_rows
         if delta_rows is not None
-        else band_keys_for(new_docs, id_col, text_col).localCheckpoint()
+        else pins.checkpoint(band_keys_for(new_docs, id_col, text_col))
     )
     cross = probe_store_pairs(spark, delta, table_dir, id_col, use_bloom)
     if include_within:

@@ -21,6 +21,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from . import pins
+
 
 def _d(c: Column) -> Column:
     return c.cast("double")
@@ -519,7 +521,7 @@ def kmeans_lloyd(
     # cached: every Lloyd round (and the final assignment) scans this
     # projection — without the cache that is n_iter+2 full source scans
     # (codebook-only callers go through pq_codebooks instead)
-    base = df.select(F.col(id_col), F.col(vec_col).alias("_v")).cache()
+    base = pins.cache(df.select(F.col(id_col), F.col(vec_col).alias("_v")))
     if train_pct is not None:
         bucket = (
             "pmod(conv(substring(md5(concat('smp|', "
@@ -528,7 +530,7 @@ def kmeans_lloyd(
         # the sample is bounded by construction; coalescing it keeps each
         # Lloyd round at a handful of Arrow workers instead of one tiny
         # batch per corpus partition
-        train = base.filter(F.expr(bucket) < F.lit(train_pct)).coalesce(4).cache()
+        train = pins.cache(base.filter(F.expr(bucket) < F.lit(train_pct)).coalesce(4))
     else:
         train = base
     init = train.orderBy(F.asc(id_col)).limit(k).select("_v").collect()
@@ -678,10 +680,9 @@ def semdedup(
     # cache runs the Arrow assignment pass ONCE inside the action
     # instead of once per consumer, without the extra serial
     # driver-blocking job an eager localCheckpoint pays
-    assign = (
+    assign = pins.cache(
         kmeans_lloyd(df, k=k, n_iter=n_iter, id_col=id_col, vec_col=vec_col)
         .select(id_col, "cluster")
-        .cache()
     )
     e = df.select(id_col, vec_col).join(assign, id_col)
     cut = tau - margin
@@ -1048,12 +1049,12 @@ def ann_recall_at_k(
     # would re-fold both norms inside every |corpus|×|Q| pair (~2/3 of
     # the fold work for the same values); dot/(na*nq) is the identical
     # arithmetic, so ranks and values are unchanged
-    base = df.select(
+    base = pins.cache(df.select(
         F.col(id_col),
         F.col(vec_col),
         hyperplane_bucket(F.col(vec_col), dim, n_planes).alias("_bucket"),
         norm(F.col(vec_col)).alias("_nrm"),
-    ).cache()
+    ))
     q = base.filter(F.col(id_col) < n_queries).select(
         F.col(id_col).alias("qid"),
         F.col(vec_col).alias("_qv"),
@@ -1455,6 +1456,7 @@ def jl_project(
 _KCENTER_CHECKPOINT_EVERY = 32
 
 
+@pins.scope()
 def kcenter_greedy(
     df: DataFrame,
     k: int = 5,
@@ -1492,9 +1494,8 @@ def kcenter_greedy(
     )
 
     spark = df.sparkSession
-    base = df.select(
-        F.col(id_col).alias("_id"), F.col(vec_col).alias("_v")
-    ).cache()
+    base = pins.cache(df.select(F.col(id_col).alias("_id"), F.col(vec_col).alias("_v")))
+    win = pins.Window()
 
     def sqd(vals: list[float]) -> Column:
         lit = F.array(*[F.lit(v) for v in vals])
@@ -1519,9 +1520,6 @@ def kcenter_greedy(
     seed = seed_rows[0]
     picks = [(1, seed["_id"], 0.0)]
     chosen = {seed["_id"]}
-    from .graph import _checkpoint as _graph_checkpoint
-
-    ckpt_handles: list = []
     cur = base.select(
         "_id", "_v", sqd([float(x) for x in seed["_v"]]).alias("_dmin")
     )
@@ -1551,18 +1549,11 @@ def kcenter_greedy(
             # the running min, bounding both; _dmin values are
             # unchanged (same doubles, just stored instead of
             # recomputed), so picks — and oracle parity — are too.
-            # Superseded checkpoints release eagerly through the
-            # graph-loop handle discipline (ADVICE r11): the previous
-            # boundary's corpus-sized RDD unpersists as soon as the new
-            # checkpoint is durable, instead of lingering for the async
+            # The window roll releases the previous boundary's
+            # corpus-sized checkpoint as soon as the new one is durable
+            # (ADVICE r11), instead of leaving it to the async
             # ContextCleaner — a large-k caller otherwise holds
             # k/_KCENTER_CHECKPOINT_EVERY stale corpus copies in memory.
-            cur, new_handles = _graph_checkpoint(cur)
-            for h in ckpt_handles:
-                h.unpersist(False)
-            ckpt_handles = new_handles
-    base.unpersist()
-    for h in ckpt_handles:
-        h.unpersist(False)
+            cur = win.roll(cur)
     out = spark.createDataFrame(picks, schema)
     return out.select("sel_rank", id_col, F.round("d", 6).alias("d"))

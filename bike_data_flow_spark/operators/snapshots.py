@@ -224,8 +224,8 @@ def _validate_constraints(df: DataFrame, table_dir: str) -> None:
     current_timestamp(), non-idempotent source reads) can pass the
     audit here yet commit DIFFERENT rows — i.e. write-time CHECK
     enforcement is silently bypassed. Callers with nondeterministic
-    inputs must ``.cache()`` or ``.localCheckpoint()`` the frame before
-    snapshot_write (same contract as Delta's CHECK + retry
+    inputs must pin the frame (``pins.cache`` or ``pins.checkpoint``)
+    before snapshot_write (same contract as Delta's CHECK + retry
     semantics)."""
     from pyspark.sql import functions as F
 

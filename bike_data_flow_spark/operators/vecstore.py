@@ -52,6 +52,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from . import pins
 from .bloom import bloom_build, with_bloom_flag
 from .joins import pairs_sharing_key
 from .shards import append_sharded, read_pruned, with_shard, write_sharded
@@ -260,9 +261,9 @@ def incremental_cosine_pairs(
     and the commit all read one materialization.
     """
     validate_store_dials(table_dir, dim)
-    delta = bucket_rows_for(
+    delta = pins.checkpoint(bucket_rows_for(
         new_vecs, dim, id_col, vec_col, _planes()
-    ).localCheckpoint()
+    ))
     cross = probe_vector_pairs(
         spark, delta, table_dir, tau, id_col, vec_col, use_bloom
     )

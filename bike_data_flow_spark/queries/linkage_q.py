@@ -17,6 +17,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators import linkage as L
+from ..operators import pins
 from ..tables import load
 from . import query
 
@@ -341,14 +342,14 @@ def fs_linkage_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the match residue feeds THREE consumers (CC's symmetrized edge
     # materialization, node derivation, membership join) — pin it so
     # the blocked-join + scoring pipeline runs once, not per consumer
-    matches = L.fs_score(
+    matches = pins.cache(L.fs_score(
         pairs,
         u_row,
         _FS_M,
         match_threshold=_FS_MATCH_T,
         possible_threshold=_FS_MATCH_T,  # matches only
         dedup_pairs=True,
-    ).select("id_a", "id_b").cache()
+    ).select("id_a", "id_b"))
     nodes = (
         matches.select(F.col("id_a").alias("nid"))
         .unionByName(matches.select(F.col("id_b").alias("nid")))
@@ -485,20 +486,20 @@ def fs_canonical_records(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs = L.blocked_pairs(
         records, "p_partkey", _FS_BLOCKS, carry=_FS_FIELDS, dedup=False
     )
-    matches = L.fs_score(
+    matches = pins.cache(L.fs_score(
         pairs, u_row, _FS_M,
         match_threshold=_FS_MATCH_T, possible_threshold=_FS_MATCH_T,
         dedup_pairs=True,
-    ).select("id_a", "id_b").cache()  # three consumers, one compute
+    ).select("id_a", "id_b"))  # three consumers, one compute
     nodes = (
         matches.select(F.col("id_a").alias("nid"))
         .unionByName(matches.select(F.col("id_b").alias("nid")))
         .distinct()
     )
     comp = connected_components(matches, nodes, id_col="nid")
-    mem = comp.join(
+    mem = pins.cache(comp.join(
         records.withColumnRenamed("p_partkey", "nid"), "nid"
-    ).cache()
+    ))
 
     def mode(field: str, out: str) -> DataFrame:
         cnt = mem.groupBy("cluster_id", field).agg(

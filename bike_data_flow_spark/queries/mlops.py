@@ -14,6 +14,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators import ml as M
+from ..operators import pins
 from ..tables import load
 from .textops import _sql_hash
 from . import query
@@ -111,9 +112,9 @@ def quality_classifier_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     by tests/test_ml.py on a separable fixture (accuracy 1.0).
     See operators/ml.py for the float-parity contract."""
     docs = load(spark, sf_dir, "documents")
-    feats = M.hashed_token_features(
+    feats = pins.cache(M.hashed_token_features(
         docs, label=(F.col("lang") == "en").cast("int")
-    ).cache()
+    ))
     weights = M.logreg_train(feats)
     out = M.logreg_score(feats, weights)
     return out.select("doc_id", "y", "p", "predicted")
@@ -146,9 +147,9 @@ def quality_classifier_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def score_calibration_bins(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load(spark, sf_dir, "documents")
-    feats = M.hashed_token_features(
+    feats = pins.cache(M.hashed_token_features(
         docs, label=(F.col("lang") == "en").cast("int")
-    ).cache()
+    ))
     weights = M.logreg_train(feats)
     scored = M.logreg_score(feats, weights)
     return (
@@ -419,11 +420,11 @@ def price_regression_ols(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def regression_conformal_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load(spark, sf_dir, "lineitem")
-    raw = li.select(
+    raw = pins.cache(li.select(
         F.col("l_quantity").cast("bigint").alias("q"),
         F.round(F.col("l_discount") * 100).cast("bigint").alias("d"),
         F.round(F.col("l_extendedprice") * 100).cast("bigint").alias("y"),
-    ).cache()
+    ))
     dec = lambda c: c.cast("decimal(38,0)")  # noqa: E731
     g = raw.agg(
         F.count(F.lit(1)).cast("double").alias("n"),

@@ -18,6 +18,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from ..operators import pins
 from ..tables import load
 from . import query
 
@@ -202,10 +203,9 @@ def copurchase_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     Part-frequency joins broadcast at catalog scale."""
     li = load(spark, sf_dir, "lineitem")
     # cached: three consumers (order count, part counts, pair explode)
-    baskets = (
+    baskets = pins.cache(
         li.groupBy(F.col("l_orderkey").alias("okey"))
         .agg(F.sort_array(F.collect_set("l_partkey")).alias("basket"))
-        .cache()
     )
     n_orders = baskets.agg(F.count(F.lit(1)).cast("double").alias("n"))
     part_counts = (
@@ -669,12 +669,11 @@ def copurchase_bfs_hops(spark: SparkSession, sf_dir: str) -> DataFrame:
     a = items.select("okey", F.col("part").alias("src"))
     b = items.select("okey", F.col("part").alias("dst"))
     # cached: every BFS round probes this edge list
-    edges = (
+    edges = pins.cache(
         a.join(b, "okey")
         .filter(F.col("src") != F.col("dst"))
         .select("src", "dst")
         .distinct()
-        .cache()
     )
     src = li.sparkSession.range(_BFS_SRC, _BFS_SRC + 1).select(
         F.col("id").alias("node")
@@ -756,12 +755,11 @@ def copurchase_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).distinct()
     a = items.select("okey", F.col("part").alias("src"))
     b = items.select("okey", F.col("part").alias("dst"))
-    edges = (
+    edges = pins.cache(
         a.join(b, "okey")
         .filter(F.col("src") != F.col("dst"))
         .select("src", "dst")
         .distinct()
-        .cache()
     )
     return pagerank(edges, damping=_PR_D, iters=_PR_ITERS)
 

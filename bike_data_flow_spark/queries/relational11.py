@@ -19,6 +19,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from ..operators import pins
 from ..tables import load
 from . import query
 
@@ -184,11 +185,11 @@ def copurchase_cheapest_path(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("src", "dst")
         .agg(F.count(F.lit(1)).alias("s"))
     )
-    edges = support.select(
+    edges = pins.cache(support.select(
         "src",
         "dst",
         F.ceil(F.lit(100.0) / F.col("s")).cast("long").alias("w"),
-    ).cache()
+    ))
     seed = spark.range(1).select(F.lit(_SSSP_SRC).cast("long").alias("node"))
     return bellman_ford(edges, seed, rounds=_SSSP_ROUNDS)
 
@@ -242,9 +243,9 @@ def fuzzy_entity_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.dedup import capped_block_join, connected_components
 
     part = load(spark, sf_dir, "part")
-    n = part.groupBy("p_name").agg(
+    n = pins.cache(part.groupBy("p_name").agg(
         F.min("p_partkey").cast("long").alias("nid")
-    ).cache()
+    ))
     blk = F.element_at(F.split(F.col("p_name"), " "), -1)
     names = n.select(
         F.col("nid"), F.col("p_name").alias("name"), blk.alias("blk")

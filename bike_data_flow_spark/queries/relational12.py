@@ -14,6 +14,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..operators import pins
 from ..operators import similarity as S
 from ..tables import load
 from . import query
@@ -420,10 +421,9 @@ def mutual_knn_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # lazy cache: the reciprocal self-join consumes the k-NN edge plan
     # twice — without it the bucket-GEMM + window pipeline evaluates
     # once per side inside the single action
-    e = (
+    e = pins.cache(
         knn_graph_edges(spark, sf_dir)
         .select("src_id", "dst_id", "cos_sim")
-        .cache()
     )
     a = e.select(
         F.col("src_id").alias("id_a"),
@@ -499,7 +499,7 @@ def mmr_diversified_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     def cos(a, b):
         return (F.round(S.dot(a, b) / (S.norm(a) * S.norm(b)), 6) + F.lit(0.0))
 
-    r = (
+    r = pins.cache(
         emb.filter(F.col("vec_id") != _MMR_QUERY_ID)
         .crossJoin(F.broadcast(qv))
         .select(
@@ -507,7 +507,6 @@ def mmr_diversified_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             "embedding",
             cos(F.col("embedding"), F.col("qe")).alias("rel"),
         )
-        .cache()
     )
     s1 = r.orderBy(F.desc("rel"), F.asc("vec_id")).limit(1)
     s1b = F.broadcast(

@@ -14,6 +14,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from ..operators import pins
 from ..operators import retrieval as R
 from ..operators import similarity as S
 from ..tables import load
@@ -202,7 +203,7 @@ def retrieval_ndcg(spark: SparkSession, sf_dir: str) -> DataFrame:
     staged = docs.filter(F.length(F.trim("text")) > 0).select(
         "doc_id", T.tokens(F.col("text")).alias("toks")
     )
-    rel = staged.select(
+    rel = pins.cache(staged.select(
         "doc_id",
         F.size(
             F.array_intersect(
@@ -210,7 +211,7 @@ def retrieval_ndcg(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.array(*[F.lit(t) for t in _BM25_TERMS]),
             )
         ).alias("rel"),
-    ).cache()
+    ))
 
     expr = None
     for r, d in _DISC.items():

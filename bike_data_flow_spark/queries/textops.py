@@ -14,6 +14,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators import dedup as D
+from ..operators import pins
 from ..operators import text as T
 from ..session import overlap
 from ..tables import load
@@ -315,7 +316,7 @@ def incremental_dedup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     with overlap() as submit:
         submit(signature_store_init, docs.filter(~delta_flag), table)
         delta = submit(
-            lambda: band_keys_for(docs.filter(delta_flag)).localCheckpoint()
+            lambda: pins.checkpoint(band_keys_for(docs.filter(delta_flag)))
         )
     return incremental_lsh_pairs(
         spark, docs.filter(delta_flag), table, commit=True,
@@ -621,24 +622,23 @@ def curated_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     staged = docs.select("doc_id", c, T.tokens(c).alias("_toks"))
     # Cache the quality-gated PROJECTION (doc_id + text), not just keeper
     # ids: every downstream stage (exact dedup, LSH shingling) reads it,
-    # so the base parquet is scanned exactly once. cache() is
+    # so the base parquet is scanned exactly once. The cache is
     # MEMORY_AND_DISK; at 100 TB swap for a checkpoint to parquet.
-    quality = (
+    quality = pins.cache(
         staged.filter(
             F.size("_toks").between(_MIN_TOKENS, _MAX_TOKENS)
             & (T.alpha_ratio(c) >= _MIN_ALPHA)
         )
         .select("doc_id", "text")
-        .cache()
     )
 
     # exact_kept feeds two joins; without its own cache the md5-groupBy
     # shuffle runs twice (the id set itself is tiny)
-    exact_kept = (
+    exact_kept = pins.cache(
         quality.groupBy(F.md5(T.normalized_text(F.col("text"))).alias("_h"))
         .agg(F.min("doc_id").alias("doc_id"))
         .select("doc_id")
-    ).cache()
+    )
     kept_docs = quality.join(exact_kept, "doc_id", "left_semi")
 
     pairs = D.minhash_lsh_candidates(kept_docs)
@@ -833,19 +833,18 @@ def curation_funnel_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load(spark, sf_dir, "documents")
     c = F.col("text")
     staged = docs.select("doc_id", c, T.tokens(c).alias("_toks"))
-    quality = (
+    quality = pins.cache(
         staged.filter(
             F.size("_toks").between(_MIN_TOKENS, _MAX_TOKENS)
             & (T.alpha_ratio(c) >= _MIN_ALPHA)
         )
         .select("doc_id", "text")
-        .cache()
     )
-    exact_kept = (
+    exact_kept = pins.cache(
         quality.groupBy(F.md5(T.normalized_text(F.col("text"))).alias("_h"))
         .agg(F.min("doc_id").alias("doc_id"))
         .select("doc_id")
-    ).cache()
+    )
     kept_docs = quality.join(exact_kept, "doc_id", "left_semi")
     pairs = D.minhash_lsh_candidates(kept_docs)
     dropped = pairs.select(F.col("id_b").alias("doc_id")).distinct()

@@ -19,6 +19,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..operators import dedup as D
+from ..operators import pins
 from ..operators import text as T
 from ..tables import load
 from . import query
@@ -315,7 +316,7 @@ def bloom_decontamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators import bloom as B
 
     docs = load(spark, sf_dir, "documents")
-    sh = D.doc_shingles(docs, n=_DECON_N).cache()
+    sh = pins.cache(D.doc_shingles(docs, n=_DECON_N))
     is_bench = F.col("doc_id") % _BENCH_MOD == 0
     bench = sh.filter(is_bench).select("shingle").distinct()
     train = sh.filter(~is_bench)
@@ -324,15 +325,14 @@ def bloom_decontamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     # flagged and exact each feed two consumers (their own count + the
     # soundness anti-join) — cache the doc-id residues (tiny) so the
     # probe and the broadcast join run once, not twice
-    flagged = (
+    flagged = pins.cache(
         B.with_bloom_flag(train, bf, F.col("shingle"), _BLOOM_BITS, _BLOOM_K)
         .filter(F.col("in_bloom"))
         .select("doc_id")
         .distinct()
-        .cache()
     )
-    exact = (
-        train.join(F.broadcast(bench), "shingle").select("doc_id").distinct().cache()
+    exact = pins.cache(
+        train.join(F.broadcast(bench), "shingle").select("doc_id").distinct()
     )
 
     n_exact = exact.agg(F.count(F.lit(1)).alias("n_contaminated"))
@@ -487,9 +487,9 @@ def gopher_quality_flags(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load(spark, sf_dir, "documents")
     # cached: three consumers (base stats, bigram agg, trigram agg)
     # would otherwise each re-scan parquet and re-tokenize the corpus
-    staged = docs.select(
+    staged = pins.cache(docs.select(
         "doc_id", T.tokens(F.col("text")).alias("_toks")
-    ).cache()
+    ))
     base = staged.select(
         "doc_id",
         F.size("_toks").alias("n_tokens"),
@@ -590,10 +590,10 @@ def dsir_importance_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     # evaluations total (counts + probe) instead of 4.
     # cached: two consumers (stats, tots) — 4096 rows pinned vs re-
     # running the corpus explode+agg for each
-    q = feat.groupBy("b").agg(
+    q = pins.cache(feat.groupBy("b").agg(
         F.count(F.lit(1)).alias("c_all"),
         F.count(F.when(F.col("lang") == _DSIR_TARGET_LANG, 1)).alias("c_tgt"),
-    ).cache()
+    ))
     tots = q.agg(
         F.sum("c_all").alias("t_all"), F.sum("c_tgt").alias("t_tgt")
     )

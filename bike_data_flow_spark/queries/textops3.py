@@ -23,6 +23,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators import dedup as D
+from ..operators import pins
 from ..operators import text as T
 from ..tables import load
 from . import query
@@ -113,7 +114,7 @@ def pmi_collocations(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load(spark, sf_dir, "documents").filter(
         F.length(F.trim(F.col("text"))) > 0
     )
-    toks = docs.select(T.tokens(F.col("text")).alias("_toks")).cache()
+    toks = pins.cache(docs.select(T.tokens(F.col("text")).alias("_toks")))
     ucnt = (
         toks.select(F.explode("_toks").alias("tok"))
         .groupBy("tok")
@@ -294,14 +295,13 @@ def textrank_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # vocab²-bounded table: one partition is right up to ~1e6 edges
     # (scale the coalesce with vocabulary, not corpus, beyond that)
-    frac = (
+    frac = pins.checkpoint(
         edges.select(
             "u",
             "v",
             (F.col("w") / F.sum("w").over(Window.partitionBy("u"))).alias("f"),
         )
         .coalesce(1)
-        .localCheckpoint()
     )
     ranks = frac.select(F.col("u").alias("v")).distinct().withColumn(
         "r", F.lit(1.0)
@@ -373,7 +373,7 @@ def doc_bigram_perplexity(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load(spark, sf_dir, "documents").filter(
         F.length(F.trim(F.col("text"))) > 0
     )
-    toks = docs.select("doc_id", T.tokens(F.col("text")).alias("_toks")).cache()
+    toks = pins.cache(docs.select("doc_id", T.tokens(F.col("text")).alias("_toks")))
     uni = (
         toks.select(F.explode("_toks").alias("tok"))
         .groupBy("tok")
@@ -739,7 +739,7 @@ def boilerplate_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     quality metrics miss. One shingle-keyed frequency join over the
     distinct-shingle projection; document frequencies are vocab-sized."""
     docs = load(spark, sf_dir, "documents")
-    sh = D.doc_shingles(docs, id_col="doc_id", text_col="text", n=3).cache()
+    sh = pins.cache(D.doc_shingles(docs, id_col="doc_id", text_col="text", n=3))
     gf = sh.groupBy("shingle").agg(F.count(F.lit(1)).alias("df"))
     common = F.when(F.col("df") > _BP_COMMON_DF, 1).otherwise(0)
     return (

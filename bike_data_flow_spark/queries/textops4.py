@@ -20,6 +20,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from ..operators import pins
 from ..operators.dedup import normalized_text
 from ..operators import text as T
 from ..tables import load
@@ -128,13 +129,12 @@ def source_dedup_crosstab(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load(spark, sf_dir, "documents")
     # two consumers (join probe + content totals): pinned so the
     # corpus is hashed/aggregated once, not once per consumer
-    per = (
+    per = pins.cache(
         docs.select(
             F.md5(normalized_text(F.col("text"))).alias("h"), "source"
         )
         .groupBy("h", "source")
         .agg(F.count(F.lit(1)).alias("ks"))
-        .cache()
     )
     tot = per.groupBy("h").agg(F.sum("ks").alias("k"))
     j = per.join(tot, "h")
@@ -479,23 +479,22 @@ def curation_v2(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load(spark, sf_dir, "documents")
     c = F.col("text")
     staged = docs.select("doc_id", "source", c, T.tokens(c).alias("_toks"))
-    quality = (
+    quality = pins.cache(
         staged.filter(
             F.size("_toks").between(_MIN_TOKENS, _MAX_TOKENS)
             & (T.alpha_ratio(c) >= _MIN_ALPHA)
         )
         .select("doc_id", "source", "text")
-        .cache()
     )
     exact_kept = (
         quality.groupBy(F.md5(normalized_text(F.col("text"))).alias("_h"))
         .agg(F.min("doc_id").alias("doc_id"))
         .select("doc_id")
     )
-    kept_docs = quality.join(exact_kept, "doc_id", "left_semi").cache()
-    pairs = D.minhash_lsh_candidates(kept_docs).cache()
+    kept_docs = pins.cache(quality.join(exact_kept, "doc_id", "left_semi"))
+    pairs = pins.cache(D.minhash_lsh_candidates(kept_docs))
     dropped = pairs.select(F.col("id_b").alias("doc_id")).distinct()
-    survivors = kept_docs.join(dropped, "doc_id", "left_anti").cache()
+    survivors = pins.cache(kept_docs.join(dropped, "doc_id", "left_anti"))
     clusters = D.connected_components(pairs, kept_docs.select("doc_id"))
     clean = D.drop_duplicate_spans(
         survivors.select("doc_id", "text"), window=_SPAN_W

@@ -10,6 +10,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..operators import pins
 from ..operators import similarity as S
 from ..streaming import await_or_raise
 from ..tables import load
@@ -740,12 +741,12 @@ def knn_graph_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     # norms once per VECTOR, not per pair: cosine(a,b) recomputes both
     # norms inside every candidate pair (~2/3 of the fold work for the
     # same values); dot/(na*nb) is the identical arithmetic
-    wb = emb.select(
+    wb = pins.cache(emb.select(
         "vec_id",
         "embedding",
         S.hyperplane_bucket(F.col("embedding"), _DIM).alias("_bucket"),
         S.norm(F.col("embedding")).alias("_nrm"),
-    ).cache()
+    ))
     cand = S.bucketed_knn_candidates(wb, k=_KNN_K)
     a = wb.select(
         F.col("vec_id").alias("src_id"),
@@ -830,14 +831,11 @@ def knn_graph_refined(spark: SparkSession, sf_dir: str) -> DataFrame:
     # materializes it in-plan, instead of paying a separate serial
     # driver-blocking job before the main one (guide §1.2 — the wall
     # at this scale is serial action count × job latency).
-    # Ownership: the returned plan reads this cache, so it cannot be
-    # unpersisted here — session-lifetime, MEMORY_AND_DISK/LRU (same
-    # policy as operators/dedup.py's module docstring); callers running
-    # many queries clear between them (bench.py does).
-    base = (
+    # Ownership: the returned plan reads this cache, so the caller's
+    # pins.scope() releases it (operators/dedup.py's Cache policy).
+    base = pins.cache(
         knn_graph_edges(spark, sf_dir)
         .select("src_id", "dst_id")
-        .cache()
     )
     hop2 = (
         base.alias("a")
@@ -1130,12 +1128,12 @@ def knn_label_spread(spark: SparkSession, sf_dir: str) -> DataFrame:
     # pin is a serial driver-blocking job each — the single noop action
     # materializes both in-plan and every later consumer reads the
     # cached partitions (guide §1.2: serial action count is the wall).
-    labels = emb.select(
+    labels = pins.cache(emb.select(
         "vec_id",
         F.when(F.expr(seed), F.col("label")).alias("lab"),
-    ).cache()
+    ))
     edges = (
-        knn_graph_edges(spark, sf_dir).select("src_id", "dst_id").cache()
+        pins.cache(knn_graph_edges(spark, sf_dir).select("src_id", "dst_id"))
     )
     cur = labels
     w = Window.partitionBy("src_id").orderBy(F.desc("c"), F.asc("lab"))
@@ -1222,7 +1220,7 @@ def knn_graph_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
     # interleave orders). The pin costs one serial job but bounds the
     # pipeline to exactly one evaluation however many consumers race.
     edges = (
-        knn_graph_edges(spark, sf_dir).select("src_id", "dst_id").localCheckpoint()
+        pins.checkpoint(knn_graph_edges(spark, sf_dir).select("src_id", "dst_id"))
     )
     und = edges.select(
         F.least("src_id", "dst_id").alias("u"),
@@ -1239,7 +1237,7 @@ def knn_graph_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
     lower = (F.col("du") < F.col("dv")) | (
         (F.col("du") == F.col("dv")) & (F.col("u") < F.col("v"))
     )
-    oriented = (
+    oriented = pins.checkpoint(
         und.join(du, "u")
         .join(dv, "v")
         .select(
@@ -1248,7 +1246,6 @@ def knn_graph_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         # eager pin: e1/e2/e3 are three concurrent consumers — see the
         # edges pin note above
-        .localCheckpoint()
     )
     e1 = oriented.select(F.col("lo").alias("a"), F.col("hi").alias("b"))
     e2 = oriented.select(F.col("lo").alias("b"), F.col("hi").alias("c"))
@@ -1306,13 +1303,13 @@ def hard_negative_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.window import Window
 
     emb = load(spark, sf_dir, "embeddings")
-    wb = emb.select(
+    wb = pins.cache(emb.select(
         "vec_id",
         "label",
         "embedding",
         S.hyperplane_bucket(F.col("embedding"), _DIM).alias("_bucket"),
         S.norm(F.col("embedding")).alias("_nrm"),
-    ).cache()
+    ))
     cand = S.bucketed_knn_candidates(
         wb, k=1, exclude_label_col="label"
     ).select(
@@ -1810,7 +1807,7 @@ def embedding_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
     max_abs = F.array_max(F.transform(vd, F.abs))
     # quality feeds the code groupBy AND the survivor semi-join AND the
     # SemDedup input — cache the gated projection, scan parquet once
-    quality = staged.filter(max_abs <= F.lit(_EC_MAX_ABS)).cache()
+    quality = pins.cache(staged.filter(max_abs <= F.lit(_EC_MAX_ABS)))
     mn = F.array_min(vd)
     scale = F.array_max(vd) - mn
     q_codes = F.when(
@@ -1831,10 +1828,9 @@ def embedding_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.min("vec_id").alias("vec_id"))
         .select("vec_id")
     )
-    kept = (
+    kept = pins.cache(
         quality.select("vec_id", "label", "embedding")
         .join(exact_kept, "vec_id", "left_semi")
-        .cache()
     )
     sem = S.semdedup(kept, k=_SEM_K, n_iter=_SEM_ITER, tau=_SEM_TAU)
     sizes = sem.groupBy("cluster").agg(F.count(F.lit(1)).alias("cluster_n"))

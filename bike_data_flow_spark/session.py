@@ -10,6 +10,7 @@ pandas-UDF paths).
 
 from __future__ import annotations
 
+import contextvars
 import os
 import threading
 from collections.abc import Callable, Iterator
@@ -109,7 +110,9 @@ def overlap() -> Iterator[Callable[..., Future]]:
     caller's local properties taken at submit time (job group, job
     description, scheduler pool), so its jobs stay attributed to the
     caller and a ``cancelJobGroup`` on the caller's group reaches them;
-    a plain thread would see none of them.
+    a plain thread would see none of them. It also runs in a copy of the
+    caller's ``contextvars`` context taken at submit time, so a pin made
+    on a branch is released by the caller's ``pins.scope()``.
 
     The block exits only after every branch has settled, so no thread
     outlives it. An exception from the block itself wins; otherwise
@@ -127,7 +130,7 @@ def overlap() -> Iterator[Callable[..., Future]]:
             except BaseException as e:  # noqa: BLE001 — re-raised below
                 fut.set_exception(e)
 
-        thread = threading.Thread(target=run)
+        thread = threading.Thread(target=contextvars.copy_context().run, args=(run,))
         thread.start()
         branches.append((thread, fut))
         return fut

@@ -47,6 +47,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
+from ..operators import pins
 from ..operators.joins import pairs_sharing_key
 from ..operators.sigstore import admit_delta, band_keys_for, probe_store_pairs
 from ..operators.vecstore import (
@@ -100,6 +101,7 @@ def _drop_batch_echo(pairs: DataFrame, batch_ids: DataFrame) -> DataFrame:
     )
 
 
+@pins.scope()
 def probe_batch(
     batch_df: DataFrame,
     batch_id: int,
@@ -119,7 +121,7 @@ def probe_batch(
     spark = batch_df.sparkSession
     # ONE minhash pass per batch: the probe and the admission both read
     # this pinned frame
-    delta = band_keys_for(batch_df, id_col, text_col).localCheckpoint()
+    delta = pins.checkpoint(band_keys_for(batch_df, id_col, text_col))
     pairs = _drop_batch_echo(
         probe_store_pairs(spark, delta, table_dir, id_col).distinct(),
         delta.select(id_col),
@@ -157,6 +159,7 @@ def stream_store_probe(
     )
 
 
+@pins.scope()
 def vector_probe_batch(
     batch_df: DataFrame,
     batch_id: int,
@@ -178,7 +181,7 @@ def vector_probe_batch(
         return
     spark = batch_df.sparkSession
     validate_store_dials(table_dir, dim)
-    delta = bucket_rows_for(batch_df, dim, id_col, vec_col).localCheckpoint()
+    delta = pins.checkpoint(bucket_rows_for(batch_df, dim, id_col, vec_col))
     pairs = _drop_batch_echo(
         probe_vector_pairs(spark, delta, table_dir, tau, id_col, vec_col),
         delta.select(id_col),
@@ -211,6 +214,7 @@ def _default_split_assign(cluster_id):
     )
 
 
+@pins.scope()
 def curation_batch(
     batch_df: DataFrame,
     batch_id: int,
@@ -286,14 +290,13 @@ def curation_batch(
     # the curation corpus is documents WITH embeddings (both stores
     # must be probeable for every batch document): ids missing from
     # ``embeddings`` are outside the corpus and emit no decision row
-    raw = (
+    raw = pins.checkpoint(
         batch_df.select(id_col, text_col)
         .join(
             embeddings.select(F.col("vec_id").alias(id_col)),
             id_col,
             "left_semi",
         )
-        .localCheckpoint()
     )
     quality = gate(raw) if gate is not None else raw
     keep_ids = (
@@ -303,7 +306,7 @@ def curation_batch(
         .agg(F.min(id_col).alias(id_col))
         .select(id_col)
     )
-    probe_docs = quality.join(keep_ids, id_col, "left_semi").localCheckpoint()
+    probe_docs = pins.checkpoint(quality.join(keep_ids, id_col, "left_semi"))
     probe_ids = probe_docs.select(id_col)
 
     # ONE minhash pass and ONE bucketing pass for the whole funnel:
@@ -315,7 +318,7 @@ def curation_batch(
     # they run in overlap. Same frames, same plans, same results — only
     # the action ORDER changes.
     def _sig_chain():
-        sd = band_keys_for(probe_docs, id_col, text_col).localCheckpoint()
+        sd = pins.checkpoint(band_keys_for(probe_docs, id_col, text_col))
         # _drop_batch_echo keeps replay output byte-identical: a
         # replayed batch that already admitted would otherwise see its
         # own documents in the stores and flip decisions (an admitted
@@ -333,7 +336,7 @@ def curation_batch(
             embeddings.select("vec_id", vec_col),
             probe_docs[id_col] == F.col("vec_id"),
         ).select("vec_id", vec_col)
-        vd = bucket_rows_for(vecs, dim, "vec_id", vec_col).localCheckpoint()
+        vd = pins.checkpoint(bucket_rows_for(vecs, dim, "vec_id", vec_col))
         vc = _drop_batch_echo(
             probe_vector_pairs(spark, vd, vec_dir, tau, "vec_id", vec_col),
             probe_ids,
@@ -353,13 +356,13 @@ def curation_batch(
     # evaluated once: the components and the decision flags both read
     # it. Every set is Δ-sized.
     kinds = {"tc": t_cross, "vc": v_cross, "tw": t_within, "vw": v_within}
-    pairs = reduce(
+    pairs = pins.checkpoint(reduce(
         DataFrame.unionByName,
         [
             p.select("id_a", "id_b", F.lit(k).alias("kind"))
             for k, p in kinds.items()
         ],
-    ).localCheckpoint()
+    ))
     cross = F.col("kind").isin("tc", "vc")
     edges = pairs.filter(~cross).select("id_a", "id_b")
     clusters = connected_components(edges, probe_ids, id_col=id_col)
@@ -377,7 +380,7 @@ def curation_batch(
         .agg(*[F.max(F.col("kind") == k).alias(f"_{k}") for k in kinds])
     )
     assign = split_assign if split_assign is not None else _default_split_assign
-    dec = (
+    dec = pins.checkpoint(  # consumed 3×: rows out, and both admissions
         probe_ids.join(flags, id_col, "left")
         .join(clusters, id_col)
         .select(
@@ -398,7 +401,6 @@ def curation_batch(
                 assign(F.col("cluster_id")),
             ).alias("split"),
         )
-        .localCheckpoint()  # consumed 3×: rows out, and both admissions
     )
     rows = (
         raw.select(id_col)

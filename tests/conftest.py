@@ -20,6 +20,16 @@ def spark():
     s.stop()
 
 
+def pinned(spark) -> tuple[int, set[int]]:
+    """What the session holds pinned: (CacheManager entries, ids of the
+    persistent RDDs — caches and local checkpoints). A leak reads as more
+    entries or a new id. Compare id sets, not counts: the ContextCleaner
+    collecting an older pin meanwhile cannot hide a new one, so no GC or
+    sleep is needed."""
+    entries = spark._jsparkSession.sharedState().cacheManager().numCachedEntries()
+    return entries, set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
+
+
 # --- raw wire-format fixtures (FIXTURES.md §1 grammar) ---------------------
 
 HEADER = (

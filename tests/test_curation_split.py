@@ -10,6 +10,8 @@ from pyspark.sql import functions as F
 
 from bike_data_flow_spark.queries import load_all
 
+from .conftest import pinned
+
 SF = "/root/testdata/sf0.001"
 
 
@@ -214,30 +216,24 @@ def test_kcenter_greedy_checkpoint_boundary_matches_brute_force(spark):
 
 def test_kcenter_greedy_releases_caches_and_checkpoints(spark):
     """ADVICE r11: superseded periodic checkpoints (and the corpus
-    cache) must release eagerly via the graph-loop handle discipline,
-    not linger for the async ContextCleaner — after a run crossing
-    MULTIPLE checkpoint boundaries the persistent-RDD registry must be
-    back where it started (clamped at 0: cleaner noise from earlier
-    tests can only understate growth, never fake a leak)."""
+    cache) must release eagerly, not linger for the async ContextCleaner
+    — after a run crossing MULTIPLE checkpoint boundaries no cache entry
+    and no persistent RDD the run made may remain."""
     import random
-    import time as _t
 
     from bike_data_flow_spark.operators import similarity as S
 
-    sc = spark.sparkContext
     rng = random.Random(7)
     rows = [(i, [rng.uniform(-1, 1) for _ in range(3)]) for i in range(80)]
     df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
 
-    spark.catalog.clearCache()
-    sc._jvm.System.gc()
-    _t.sleep(0.5)
-    base = sc._jsc.sc().getPersistentRDDs().size()
+    entries, rdds = pinned(spark)
     # k=70 crosses two _KCENTER_CHECKPOINT_EVERY=32 boundaries
     out = S.kcenter_greedy(df, k=70).collect()
     assert len(out) == 70
-    grow = max(0, sc._jsc.sc().getPersistentRDDs().size() - base)
-    assert grow == 0, grow
+    after_entries, after_rdds = pinned(spark)
+    assert after_entries <= entries
+    assert after_rdds <= rdds, after_rdds - rdds
 
 
 def test_kmeans_train_sample_cap_raises_loudly(spark, monkeypatch):

@@ -6,7 +6,8 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from tests.conftest import SF_DIR
+from bike_data_flow_spark.operators import pins
+from tests.conftest import SF_DIR, pinned
 
 
 def test_ann_recall_bounds_and_shape(spark):
@@ -269,25 +270,19 @@ def test_exact_quantile_cont_total_on_empty(spark):
     the cache before returning)."""
     from bike_data_flow_spark.operators.selection import exact_quantile_cont
 
-    sc = spark.sparkContext
-    def cached_ids():
-        ids = set()
-        it = sc._jsc.sc().getPersistentRDDs().iterator()
-        while it.hasNext():
-            kv = it.next()
-            # localCheckpoint pins show as Disk+Memory; the leak the
-            # advisor flagged was the MEMORY-cached binned projection
-            if "Disk" not in kv._2().getStorageLevel().description():
-                ids.add(kv._1())
-        return ids
-
-    before = cached_ids()
+    entries, _ = pinned(spark)
     empty = spark.createDataFrame([], "r double")
     rows = exact_quantile_cont(empty, 0.9, value_col="r").collect()
     assert len(rows) == 1
     assert rows[0]["n"] == 0 and rows[0]["q"] is None
-    # nonempty path still exactly one row, and no new MEMORY_ONLY pins
+    # nonempty path still exactly one row, and no cache entry registered
     one = spark.createDataFrame([(1.0,), (2.0,)], "r double")
     rows = exact_quantile_cont(one, 0.5, value_col="r").collect()
     assert len(rows) == 1 and rows[0]["q"] == 1.5
-    assert cached_ids() <= before
+    assert pinned(spark)[0] <= entries
+    # its checkpoints are read by the returned plan: the caller's scope
+    # releases them
+    _, rdds = pinned(spark)
+    with pins.scope():
+        assert exact_quantile_cont(one, 0.5, value_col="r").first()["q"] == 1.5
+    assert pinned(spark)[1] <= rdds

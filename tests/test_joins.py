@@ -262,6 +262,40 @@ def test_txn_fence_spelled_only_in_snapshots():
     assert hits == []
 
 
+def test_pins_taken_and_released_only_in_pins():
+    """Every cache, persist, local checkpoint and release in the package
+    goes through operators/pins.py, and so does the capture of a
+    checkpoint's RDD handle: one lifecycle, so a scope sees every pin."""
+    import ast
+
+    pkg = pathlib.Path(__file__).resolve().parent.parent / "bike_data_flow_spark"
+
+    def banned(call):
+        f = call.func
+        if not isinstance(f, ast.Attribute):
+            return False
+        if f.attr in ("persist", "localCheckpoint", "unpersist"):
+            return True
+        if f.attr == "cache":  # df.cache(); pins.cache(df) takes the frame
+            return not call.args and not call.keywords
+        inner = f.value  # <plan>.analyzed().rdd()
+        return (
+            f.attr == "rdd"
+            and isinstance(inner, ast.Call)
+            and isinstance(inner.func, ast.Attribute)
+            and inner.func.attr == "analyzed"
+        )
+
+    hits = [
+        f"{path.relative_to(pkg)}:{node.lineno}: {node.func.attr}"
+        for path in sorted(pkg.rglob("*.py"))
+        if path != pkg / "operators" / "pins.py"
+        for node in ast.walk(ast.parse(path.read_text()))
+        if isinstance(node, ast.Call) and banned(node)
+    ]
+    assert hits == []
+
+
 def test_rewrite_and_manifest_listing_spelled_once_in_snapshots():
     """In operators/snapshots.py, a commit that carries a manifest's
     ``meta`` goes through _rewrite (head read after crash recovery, CAS

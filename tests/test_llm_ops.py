@@ -13,6 +13,8 @@ from bike_data_flow_spark.operators import multimodal as M
 from bike_data_flow_spark.operators import similarity as S
 from bike_data_flow_spark.operators import text as T
 
+from .conftest import pinned
+
 
 @pytest.fixture(scope="module")
 def docs(spark):
@@ -283,25 +285,45 @@ def test_connected_components_long_chain(spark):
 
 
 def test_connected_components_iterative_path_releases_edge_cache(spark, monkeypatch):
-    """The iterative branch owner-unpersists the symmetrized edge cache
+    """The iterative branch owner-releases the symmetrized edge cache
     on convergence (ADVICE r12): every remaining consumer reads the
     CHECKPOINTED labels, so a long-lived session composing the operator
-    repeatedly must not accumulate DataFrame-cache entries. (The
-    union-find fast path's returned plan still reads the cache — that
-    one is documented session-lifetime, not asserted here.)"""
+    repeatedly must not accumulate DataFrame-cache entries."""
     from bike_data_flow_spark.operators import dedup
 
-    spark.catalog.clearCache()
-    cm = spark._jsparkSession.sharedState().cacheManager()
-    assert cm.isEmpty()
     edges = spark.createDataFrame(
         [(1, 2), (2, 3), (7, 8)], ["id_a", "id_b"]
     )
     vertices = spark.createDataFrame([(i,) for i in (1, 2, 3, 7, 8)], ["doc_id"])
     monkeypatch.setattr(dedup, "SMALL_GRAPH_EDGES", 0)  # force iterative
+    spark.catalog.clearCache()  # so the operator's own cache is fresh
+    entries, _ = pinned(spark)
     out = dedup.connected_components(edges, vertices)
-    assert cm.isEmpty(), "edge cache must be released before returning"
+    assert pinned(spark)[0] == entries, "edge cache must be released before returning"
     assert len(out.collect()) == 5
+
+
+@pytest.mark.parametrize("route", ["union_find", "iterative"])
+def test_connected_components_pins_released_by_callers_scope(spark, monkeypatch, route):
+    """The union-find route's returned plan reads the edge cache, so the
+    operator cannot release it; the caller's pins.scope() does, with
+    every label checkpoint of the iterative route."""
+    from bike_data_flow_spark.operators import dedup, pins
+
+    if route == "iterative":
+        monkeypatch.setattr(dedup, "SMALL_GRAPH_EDGES", 0)
+    edges = spark.createDataFrame([(1, 2), (2, 3), (7, 8)], ["id_a", "id_b"])
+    vertices = spark.createDataFrame([(i,) for i in (1, 2, 3, 7, 8)], ["doc_id"])
+    spark.catalog.clearCache()  # so the operator's own cache is fresh
+    entries, rdds = pinned(spark)
+    with pins.scope():
+        got = dedup.connected_components(edges, vertices).collect()
+    assert {(r["doc_id"], r["cluster_id"]) for r in got} == {
+        (1, 1), (2, 1), (3, 1), (7, 7), (8, 7)
+    }
+    after_entries, after_rdds = pinned(spark)
+    assert after_entries <= entries
+    assert after_rdds <= rdds, after_rdds - rdds
 
 
 def _tiny_ppm() -> bytes:

@@ -1,9 +1,11 @@
 """session.overlap — the one driver-concurrency primitive: branches
-inherit the caller's local properties, start at once, return in
-submission order, and never outlive the call, whichever side fails."""
+inherit the caller's local properties and context variables, start at
+once, return in submission order, and never outlive the call, whichever
+side fails."""
 
 from __future__ import annotations
 
+import contextvars
 import pathlib
 import re
 import threading
@@ -11,7 +13,10 @@ import time
 
 import pytest
 
+from bike_data_flow_spark.operators import pins
 from bike_data_flow_spark.session import overlap
+
+from .conftest import pinned
 
 _GROUP, _DESC = "spark.jobGroup.id", "spark.job.description"
 
@@ -49,6 +54,33 @@ def test_branch_sees_callers_job_group_and_description(spark, caller_group):
     assert fut.result() == ("overlap-test", "caller description")
     # the branch's job is attributed to (and cancellable with) the group
     assert sc.statusTracker().getJobIdsForGroup("overlap-test")
+
+
+def test_branch_sees_callers_context_variables():
+    var = contextvars.ContextVar("overlap_test")
+    token = var.set("caller")
+    try:
+        with overlap() as submit:
+            fut = submit(var.get)  # LookupError in a context without it
+        assert fut.result() == "caller"
+    finally:
+        var.reset(token)
+
+
+def test_pins_made_on_branches_are_released_by_callers_scope(spark):
+    entries, rdds = pinned(spark)
+    with pins.scope():
+        with overlap() as submit:
+            ckpt = submit(lambda: pins.checkpoint(spark.range(5)))
+            cached = submit(
+                lambda: pins.cache(spark.range(7).selectExpr("id * 3 AS x"))
+            )
+        assert cached.result().count() == 7 and ckpt.result().count() == 5
+        inside_entries, inside_rdds = pinned(spark)
+        assert inside_entries == entries + 1 and len(inside_rdds - rdds) == 2
+    after_entries, after_rdds = pinned(spark)
+    assert after_entries <= entries
+    assert after_rdds <= rdds, after_rdds - rdds
 
 
 def test_results_in_submission_order_and_no_worker_cap(spark):

@@ -12,6 +12,8 @@ from bike_data_flow_spark.operators import graph as G
 from bike_data_flow_spark.operators import retrieval as R
 from bike_data_flow_spark.operators import similarity as S
 
+from .conftest import pinned
+
 
 @pytest.fixture(scope="module")
 def corpus(spark):
@@ -134,54 +136,38 @@ def test_graph_loops_release_superseded_round_caches(spark):
     iteration: after a DEEP run (depth 16 — would also OOM on plan
     analysis without windowed checkpoint truncation), the
     persistent-RDD registry grows by at most one checkpoint WINDOW of
-    state (a constant), never by O(rounds)."""
-    sc = spark.sparkContext
+    state (a constant), never by O(rounds) — and the caller's
+    pins.scope() releases that last window too."""
+    from bike_data_flow_spark.operators import pins
+    from bike_data_flow_spark.operators.graph import bellman_ford
+
     edges = spark.createDataFrame(
         [(i, i + 1) for i in range(30)] + [(i + 1, i) for i in range(30)],
         "src long, dst long",
     )
     src = spark.createDataFrame([(0,)], "node long")
+    w = edges.withColumn("w", F.lit(1).cast("long"))
     # tail window caches (≤2 per round for BFS) + boundary checkpoint
     limit = 2 * G._CKPT_EVERY + 2
 
-    def n_persistent():
-        return sc._jsc.sc().getPersistentRDDs().size()
-
-    def settle():
-        # Spark's ContextCleaner unpersists asynchronously: in a long
-        # suite, RDDs from EARLIER tests can vanish from the registry
-        # mid-measurement, reading as negative "growth" and breaking
-        # the depth comparison (observed once: bfs@8 = -9). Force a GC
-        # and give the cleaner a beat so each baseline is quiescent;
-        # growth is additionally clamped at 0 below — cleaner noise
-        # can only UNDERSTATE growth, never fake a leak.
-        import time as _t
-
-        spark.catalog.clearCache()
-        sc._jvm.System.gc()
-        _t.sleep(0.5)
-
-    grow = {}
-    for depth in (8, 16):  # same bound at both depths ⇒ not O(rounds)
-        settle()
-        base = n_persistent()
-        G.pagerank(edges, iters=depth).collect()
-        grow[("pr", depth)] = max(0, n_persistent() - base)
-
-        settle()
-        base = n_persistent()
+    def bfs(depth):
         vis = G.bfs_hops(edges, src, max_hops=depth)
         assert vis.count() == depth + 1  # path graph: 0..depth reachable
-        grow[("bfs", depth)] = max(0, n_persistent() - base)
 
-        from bike_data_flow_spark.operators.graph import bellman_ford
-
-        settle()
-        base = n_persistent()
-        w = edges.withColumn("w", F.lit(1).cast("long"))
-        bellman_ford(w, src, rounds=depth).collect()
-        grow[("bf", depth)] = max(0, n_persistent() - base)
-        spark.catalog.clearCache()
+    runs = {
+        "pr": lambda depth: G.pagerank(edges, iters=depth).collect(),
+        "bfs": bfs,
+        "bf": lambda depth: bellman_ford(w, src, rounds=depth).collect(),
+    }
+    grow = {}
+    for depth in (8, 16):  # same bound at both depths ⇒ not O(rounds)
+        for op, run in runs.items():
+            spark.catalog.clearCache()  # every round's cache is the run's own
+            _, rdds = pinned(spark)
+            with pins.scope():
+                run(depth)
+                grow[(op, depth)] = len(pinned(spark)[1] - rdds)
+            assert pinned(spark)[1] <= rdds, (op, depth)
     assert all(g <= limit for g in grow.values()), grow
     # doubling the depth must not grow resident state
     for op in ("pr", "bfs", "bf"):

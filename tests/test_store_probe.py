@@ -22,6 +22,8 @@ from bike_data_flow_spark.streaming.store_probe import (
 )
 from bike_data_flow_spark.tables import load
 
+from .conftest import pinned
+
 SF = "/root/testdata/sf0.001"
 
 
@@ -655,3 +657,61 @@ def test_curation_batch_probe_only_mode_mutates_nothing(spark, cur_dirs):
         5: "rejected_near_vec",
         6: "admitted",
     }
+
+
+def test_curation_batches_leave_nothing_pinned(spark, cur_dirs):
+    """Each micro-batch releases every pin it makes, on overlap branches
+    too: after each of two consecutive curation batches the session
+    holds no more cache entries and no persistent RDD it did not hold
+    before the batch (the union-find components' edge cache, and the
+    pair pin its plan reads, used to outlive every batch)."""
+    from bike_data_flow_spark.operators.vecstore import vector_store_init
+    from bike_data_flow_spark.queries.curation_inc import _quality_gate
+    from bike_data_flow_spark.streaming.store_probe import curation_batch
+
+    store_ids, batches = [100, 101], [[1, 2, 3, 4, 5, 6, 7, 8, 9, 20, 21, 22], [30, 31]]
+    emb = _cur_embs(spark, store_ids + batches[0] + batches[1])
+    G.signature_store_init(_cur_docs(spark, store_ids), cur_dirs["sig"])
+    vector_store_init(_cur_embs(spark, store_ids), cur_dirs["vec"], dim=_CUR_DIM)
+    for batch_id, ids in enumerate(batches):
+        entries, rdds = pinned(spark)
+        curation_batch(
+            _cur_docs(spark, ids), batch_id, emb,
+            cur_dirs["sig"], cur_dirs["vec"], cur_dirs["out"],
+            dim=_CUR_DIM, tau=0.4, gate=_quality_gate, app_id="test-app",
+        )
+        after_entries, after_rdds = pinned(spark)
+        assert after_entries <= entries, (batch_id, entries, after_entries)
+        assert after_rdds <= rdds, (batch_id, after_rdds - rdds)
+    assert spark.read.parquet(cur_dirs["out"]).count() == sum(map(len, batches))
+
+
+@pytest.mark.parametrize("kind", ["sig", "vec"])
+def test_probe_batch_with_admission_leaves_nothing_pinned(spark, dirs, kind):
+    """probe_batch and vector_probe_batch, admitting, release their Δ
+    pin before they return: no new cache entry, no new persistent RDD."""
+    from bike_data_flow_spark.operators import vecstore as V
+    from bike_data_flow_spark.streaming.store_probe import vector_probe_batch
+
+    if kind == "sig":
+        rows, id_col = load(spark, SF, "documents"), "doc_id"
+    else:
+        rows, id_col = load(spark, SF, "embeddings"), "vec_id"
+    part = F.pmod(F.col(id_col), F.lit(2))
+    a, b = rows.filter(part == 0), rows.filter(part == 1)
+    if kind == "sig":
+        G.signature_store_init(a, dirs["store"])
+    else:
+        V.vector_store_init(a, dirs["store"], dim=_DIM)
+    version = current_version(dirs["store"])
+    entries, rdds = pinned(spark)
+    if kind == "sig":
+        probe_batch(b, 0, dirs["store"], dirs["pairs"], admit=True, app_id="w")
+    else:
+        vector_probe_batch(
+            b, 0, dirs["store"], dirs["pairs"], _DIM, _TAU, admit=True, app_id="w"
+        )
+    after_entries, after_rdds = pinned(spark)
+    assert after_entries <= entries
+    assert after_rdds <= rdds, after_rdds - rdds
+    assert current_version(dirs["store"]) == version + 1  # admitted
