@@ -194,7 +194,7 @@ def vector_probe_batch(
 # The shared leakage-safe split hash (same 'lsp|' md5-bucket spelling
 # as queries/textops4's batch split — parity-proven against its DuckDB
 # twin there): cluster id → 0..99 bucket → train/val/test at 80/10/10.
-def _default_split_assign(cluster_id):
+def _cluster_split(cluster_id):
     h = F.pmod(
         F.conv(
             F.substring(
@@ -229,7 +229,6 @@ def curation_batch(
     text_col: str = "text",
     vec_col: str = "embedding",
     app_id: str | None = None,
-    split_assign=None,
     admit: bool = True,
 ) -> None:
     """ONE day of the incremental curation funnel, per micro-batch: the
@@ -379,7 +378,6 @@ def curation_batch(
         .groupBy(id_col)
         .agg(*[F.max(F.col("kind") == k).alias(f"_{k}") for k in kinds])
     )
-    assign = split_assign if split_assign is not None else _default_split_assign
     dec = pins.checkpoint(  # consumed 3×: rows out, and both admissions
         probe_ids.join(flags, id_col, "left")
         .join(clusters, id_col)
@@ -398,7 +396,7 @@ def curation_batch(
             "decision",
             F.when(
                 F.col("decision") == "admitted",
-                assign(F.col("cluster_id")),
+                _cluster_split(F.col("cluster_id")),
             ).alias("split"),
         )
     )
@@ -468,7 +466,6 @@ def stream_curation(
     id_col: str = "doc_id",
     text_col: str = "text",
     vec_col: str = "embedding",
-    split_assign=None,
 ) -> StreamingQuery:
     """Start the incremental curation funnel over a document stream:
     every micro-batch runs ``curation_batch`` — quality → exact →
@@ -481,7 +478,7 @@ def stream_curation(
         lambda df, bid, app: curation_batch(
             df, bid, embeddings, sig_dir, vec_dir, out_dir, dim, tau,
             gate=gate, id_col=id_col, text_col=text_col, vec_col=vec_col,
-            app_id=app, split_assign=split_assign,
+            app_id=app,
         ),
     )
 

@@ -361,3 +361,31 @@ def test_shard_layout_spelled_only_in_shards():
         if banned.search(line)
     ]
     assert hits == []
+
+
+def test_plans_captured_only_in_tools_plans():
+    """A physical plan is captured in tools/plans.py only (`explain`,
+    then `canonical`): no other `.explain(` call or stdout redirect in
+    the package, the tools or the tests."""
+    import ast
+
+    root = pathlib.Path(__file__).resolve().parent.parent
+
+    def banned(node):
+        if isinstance(node, ast.Call) and isinstance(node.func, ast.Attribute):
+            return node.func.attr == "explain"
+        if isinstance(node, ast.Attribute):
+            return node.attr == "redirect_stdout"
+        if isinstance(node, ast.alias):  # from contextlib import redirect_stdout
+            return node.name == "redirect_stdout"
+        return False
+
+    hits = [
+        f"{path.relative_to(root)}:{getattr(node, 'lineno', '?')}"
+        for top in ("bike_data_flow_spark", "tools", "tests")
+        for path in sorted((root / top).rglob("*.py"))
+        if path != root / "tools" / "plans.py"
+        for node in ast.walk(ast.parse(path.read_text()))
+        if banned(node)
+    ]
+    assert hits == []

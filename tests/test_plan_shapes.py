@@ -7,18 +7,10 @@ of in a 100 TB run.
 
 from __future__ import annotations
 
-import contextlib
-import io
 import re
 
 from tests.conftest import SF_DIR
-
-
-def _plan(df) -> str:
-    buf = io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        df.explain("formatted")
-    return buf.getvalue()
+from tools.plans import explain
 
 
 def _count(plan: str, pattern: str) -> int:
@@ -30,7 +22,7 @@ def test_time_weighted_value_single_exchange(spark):
     the agg must reuse the window's exchange, not add its own."""
     from bike_data_flow_spark.queries.relational9 import time_weighted_value
 
-    plan = _plan(time_weighted_value(spark, SF_DIR))
+    plan = explain(time_weighted_value(spark, SF_DIR))
     assert _count(plan, r"\(\d+\) Exchange") == 1, plan
     assert _count(plan, r"\(\d+\) Scan parquet") == 1, plan
 
@@ -41,7 +33,7 @@ def test_dsir_bounded_scans(spark):
     naive 4; the per-bucket stats join is a broadcast."""
     from bike_data_flow_spark.queries.textops2 import dsir_importance_weights
 
-    plan = _plan(dsir_importance_weights(spark, SF_DIR))
+    plan = explain(dsir_importance_weights(spark, SF_DIR))
     assert _count(plan, r"\(\d+\) Scan parquet") <= 3, plan
     assert "BroadcastHashJoin" in plan or "BroadcastNestedLoopJoin" in plan
     assert "SortMergeJoin" not in plan, plan
@@ -52,7 +44,7 @@ def test_hof_profile_map_only(spark):
     exchanges, one scan, and column pruning down to the two columns."""
     from bike_data_flow_spark.queries.vectors import embedding_hof_profile
 
-    plan = _plan(embedding_hof_profile(spark, SF_DIR))
+    plan = explain(embedding_hof_profile(spark, SF_DIR))
     assert _count(plan, r"\(\d+\) Exchange") == 0, plan
     assert _count(plan, r"\(\d+\) Scan parquet") == 1, plan
     m = re.search(r"ReadSchema: (.+)", plan)
@@ -66,7 +58,7 @@ def test_semdedup_no_cross_cluster_pairs(spark):
     from bike_data_flow_spark.tables import load
 
     df = semdedup(load(spark, SF_DIR, "embeddings"), k=3, n_iter=1, tau=0.4)
-    plan = _plan(df)
+    plan = explain(df)
     assert "CartesianProduct" not in plan, plan
     assert "BroadcastNestedLoopJoin" not in plan, plan
 
@@ -79,7 +71,7 @@ def test_prefix_filter_join_shape(spark):
     from bike_data_flow_spark.tables import load
 
     df = prefix_filter_jaccard_pairs(load(spark, SF_DIR, "documents"))
-    plan = _plan(df)
+    plan = explain(df)
     assert "CartesianProduct" not in plan, plan
     assert "BroadcastNestedLoopJoin" not in plan, plan
     # the ppjoin prunes must sit in the candidate join's condition/filter
@@ -92,7 +84,7 @@ def test_knn_graph_refined_no_cross_product(spark):
     a refactor to all-pairs would surface as a cross product here."""
     from bike_data_flow_spark.queries.vectors import knn_graph_refined
 
-    plan = _plan(knn_graph_refined(spark, SF_DIR))
+    plan = explain(knn_graph_refined(spark, SF_DIR))
     assert "CartesianProduct" not in plan, plan
     assert "BroadcastNestedLoopJoin" not in plan, plan
 
@@ -102,7 +94,7 @@ def test_embedding_top_component_bounded_shuffle(spark):
     aggs — nothing corpus-sized may shuffle, and no join exists."""
     from bike_data_flow_spark.queries.vectors import embedding_top_component
 
-    plan = _plan(embedding_top_component(spark, SF_DIR))
+    plan = explain(embedding_top_component(spark, SF_DIR))
     assert "CartesianProduct" not in plan, plan
     assert _count(plan, r"\(\d+\) SortMergeJoin") == 0, plan
 
@@ -113,7 +105,7 @@ def test_group_hash_sample_window_group_limit(spark):
     whole groups through the shuffle."""
     from bike_data_flow_spark.queries.relational10 import group_hash_sample
 
-    plan = _plan(group_hash_sample(spark, SF_DIR))
+    plan = explain(group_hash_sample(spark, SF_DIR))
     assert "WindowGroupLimit" in plan, plan
 
 
@@ -127,7 +119,7 @@ def test_token_budget_selection_no_global_window(spark):
     _bin partition key."""
     from bike_data_flow_spark.queries.textops2 import token_budget_selection
 
-    plan = _plan(token_budget_selection(spark, SF_DIR))
+    plan = explain(token_budget_selection(spark, SF_DIR))
     # boundary-fill window is partitioned by _bin
     assert "partitionBy=[_bin" in plan.replace(" ", "") or "_bin" in plan, plan
     assert "CartesianProduct" not in plan, plan
@@ -145,7 +137,7 @@ def test_round5_graph_and_ann_queries_no_cross_product(spark):
 
     for fn in (knn_label_spread, knn_graph_triangles, copurchase_pairs,
                point_in_time_value_band):
-        plan = _plan(fn(spark, SF_DIR))
+        plan = explain(fn(spark, SF_DIR))
         assert "CartesianProduct" not in plan, (fn.__name__, plan)
 
 
@@ -155,7 +147,7 @@ def test_ivfpq_probed_scan_and_no_python(spark):
     nested-loop is the broadcast of the 1-row query vector."""
     from bike_data_flow_spark.queries.vectors import ivfpq_topk
 
-    plan = _plan(ivfpq_topk(spark, SF_DIR))
+    plan = explain(ivfpq_topk(spark, SF_DIR))
     assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan, plan
     assert "CartesianProduct" not in plan, plan
 
@@ -167,7 +159,7 @@ def test_duplicate_spans_no_pair_join(spark):
     from bike_data_flow_spark.operators.dedup import duplicate_spans
     from bike_data_flow_spark.tables import load
 
-    plan = _plan(duplicate_spans(load(spark, SF_DIR, "documents")))
+    plan = explain(duplicate_spans(load(spark, SF_DIR, "documents")))
     assert "CartesianProduct" not in plan, plan
     assert "BroadcastNestedLoopJoin" not in plan, plan
     assert "LeftSemi" in plan, plan
@@ -177,7 +169,7 @@ def test_pii_redaction_map_only(spark):
     """The scrub is a pure map pass: zero exchanges, one scan."""
     from bike_data_flow_spark.queries.pii_q import pii_redaction
 
-    plan = _plan(pii_redaction(spark, SF_DIR))
+    plan = explain(pii_redaction(spark, SF_DIR))
     assert _count(plan, r"\(\d+\) Exchange") == 0, plan
     assert _count(plan, r"\(\d+\) Scan parquet") == 1, plan
 
@@ -197,7 +189,7 @@ def test_classifier_scoring_is_map_only_over_features(spark):
         docs, label=(F.col("lang") == "en").cast("int")
     )
     out = M.logreg_score(feats, [0.1] * (M.LOGREG_BUCKETS + 1))
-    plan = _plan(out)
+    plan = explain(out)
     assert _count(plan, r"\(\d+\) Exchange") == 0, plan
     assert "Join" not in plan, plan
 
@@ -206,7 +198,7 @@ def test_containment_join_is_keyed(spark):
     from bike_data_flow_spark.operators.dedup import containment_pairs
     from bike_data_flow_spark.tables import load
 
-    plan = _plan(containment_pairs(load(spark, SF_DIR, "documents")))
+    plan = explain(containment_pairs(load(spark, SF_DIR, "documents")))
     assert "CartesianProduct" not in plan, plan
     assert "BroadcastNestedLoopJoin" not in plan, plan
 
@@ -218,7 +210,7 @@ def test_bm25_topk_shape(spark):
     from bike_data_flow_spark.operators.retrieval import bm25_topk
     from bike_data_flow_spark.tables import load
 
-    plan = _plan(bm25_topk(load(spark, SF_DIR, "documents"), ("hash", "dup")))
+    plan = explain(bm25_topk(load(spark, SF_DIR, "documents"), ("hash", "dup")))
     assert "TakeOrderedAndProject" in plan, plan
     assert "CartesianProduct" not in plan, plan
     assert _count(plan, r"\(\d+\) Sort\b") == 0, plan
@@ -230,7 +222,7 @@ def test_jl_projection_map_only(spark):
     from bike_data_flow_spark.operators.similarity import jl_project
     from bike_data_flow_spark.tables import load
 
-    plan = _plan(jl_project(load(spark, SF_DIR, "embeddings"), in_dim=64))
+    plan = explain(jl_project(load(spark, SF_DIR, "embeddings"), in_dim=64))
     assert _count(plan, r"\(\d+\) Exchange") == 0, plan
     assert "Join" not in plan, plan
     assert _count(plan, r"\(\d+\) Scan parquet") == 1, plan
@@ -243,7 +235,7 @@ def test_column_profile_single_scan_no_multidistinct_expand(spark):
     the manual spelling replaces)."""
     from bike_data_flow_spark.queries.maintenance import column_profile
 
-    plan = _plan(column_profile(spark, SF_DIR))
+    plan = explain(column_profile(spark, SF_DIR))
     assert _count(plan, r"\(\d+\) Scan parquet") == 1, plan
     assert "Generate" in plan, plan          # the long-form explode
     assert "Expand" not in plan, plan        # no multi-distinct rewrite
@@ -255,7 +247,7 @@ def test_ndcg_take_ordered_ideal(spark):
     no corpus-sized single-partition window feeds the IDCG arm."""
     from bike_data_flow_spark.queries.retrieval_q import retrieval_ndcg
 
-    plan = _plan(retrieval_ndcg(spark, SF_DIR))
+    plan = explain(retrieval_ndcg(spark, SF_DIR))
     assert "TakeOrderedAndProject" in plan, plan
     assert "CartesianProduct" not in plan, plan
 
@@ -265,7 +257,7 @@ def test_zone_map_single_scan(spark):
     aggregates only."""
     from bike_data_flow_spark.queries.maintenance import zone_map_pruning
 
-    plan = _plan(zone_map_pruning(spark, SF_DIR))
+    plan = explain(zone_map_pruning(spark, SF_DIR))
     assert _count(plan, r"\(\d+\) Scan parquet") == 1, plan
     assert "Join" not in plan, plan
     m = re.search(r"ReadSchema: (.+)", plan)
@@ -277,7 +269,7 @@ def test_chi2_broadcast_stats(spark):
     TakeOrderedAndProject, never a global sort."""
     from bike_data_flow_spark.queries.mlops import chi2_token_ranking
 
-    plan = _plan(chi2_token_ranking(spark, SF_DIR))
+    plan = explain(chi2_token_ranking(spark, SF_DIR))
     assert "BroadcastNestedLoopJoin" in plan or "BroadcastHashJoin" in plan, plan
     assert "SortMergeJoin" not in plan, plan
     assert "TakeOrderedAndProject" in plan, plan
@@ -288,7 +280,7 @@ def test_streaks_no_join(spark):
     self-join spelling must never creep back in."""
     from bike_data_flow_spark.queries.relational11 import user_activity_streaks
 
-    plan = _plan(user_activity_streaks(spark, SF_DIR))
+    plan = explain(user_activity_streaks(spark, SF_DIR))
     assert "Join" not in plan, plan
     assert _count(plan, r"\(\d+\) Scan parquet") == 1, plan
 
@@ -298,7 +290,7 @@ def test_sweep_calendar_bounded_window(spark):
     bounded), so exactly one window and it sits above the date agg."""
     from bike_data_flow_spark.queries.relational11 import in_flight_lineitems_peak
 
-    plan = _plan(in_flight_lineitems_peak(spark, SF_DIR))
+    plan = explain(in_flight_lineitems_peak(spark, SF_DIR))
     assert _count(plan, r"\(\d+\) Window") == 1, plan
     assert "TakeOrderedAndProject" in plan, plan
 
@@ -309,7 +301,7 @@ def test_crosstab_no_pair_blowup(spark):
     content-total join."""
     from bike_data_flow_spark.queries.textops4 import source_dedup_crosstab
 
-    plan = _plan(source_dedup_crosstab(spark, SF_DIR))
+    plan = explain(source_dedup_crosstab(spark, SF_DIR))
     assert _count(plan, r"\(\d+\) (SortMergeJoin|BroadcastHashJoin|ShuffledHashJoin)") <= 1, plan
     # the cached per-(content, source) aggregate feeds both sides: one scan
     assert _count(plan, r"\(\d+\) Scan parquet") <= 1, plan
@@ -320,7 +312,7 @@ def test_sweep_single_join(spark):
     union-of-two-selects spelling would execute it twice."""
     from bike_data_flow_spark.queries.relational11 import in_flight_lineitems_peak
 
-    plan = _plan(in_flight_lineitems_peak(spark, SF_DIR))
+    plan = explain(in_flight_lineitems_peak(spark, SF_DIR))
     assert _count(plan, r"\(\d+\) (SortMergeJoin|BroadcastHashJoin|ShuffledHashJoin)") == 1, plan
 
 
@@ -330,7 +322,7 @@ def test_fs_linkage_u_row_broadcast_no_global_sort(spark):
     sorts or windows the pair set."""
     from bike_data_flow_spark.queries.linkage_q import fs_linkage_scores
 
-    plan = _plan(fs_linkage_scores(spark, SF_DIR))
+    plan = explain(fs_linkage_scores(spark, SF_DIR))
     assert "BroadcastNestedLoopJoin" in plan, plan
     assert _count(plan, r"\(\d+\) Window") == 0, plan
     assert _count(plan, r"\(\d+\) Sort ") == 0 or "SortMergeJoin" in plan, plan
@@ -343,7 +335,7 @@ def test_cluster_balanced_sample_no_window_broadcast_sizes(spark):
     keyed on the (skewed, k-valued) cluster column."""
     from bike_data_flow_spark.queries.vectors import cluster_balanced_sample
 
-    plan = _plan(cluster_balanced_sample(spark, SF_DIR))
+    plan = explain(cluster_balanced_sample(spark, SF_DIR))
     assert "BroadcastHashJoin" in plan, plan
     assert "SortMergeJoin" not in plan, plan
     assert _count(plan, r"\(\d+\) Window") == 0, plan
@@ -371,7 +363,7 @@ def test_kcenter_rounds_take_ordered_no_shuffle_join(spark):
             lambda acc, x: acc + x,
         ).alias("_dmin"),
     ).orderBy(F.desc("_dmin"), F.asc("vec_id")).limit(1)
-    plan = _plan(probe)
+    plan = explain(probe)
     assert "TakeOrderedAndProject" in plan, plan
     assert "Join" not in plan, plan
     assert _count(plan, r"\(\d+\) Exchange") == 0, plan
@@ -385,7 +377,7 @@ def test_split_contamination_no_pair_join(spark):
         split_contamination_audit,
     )
 
-    plan = _plan(split_contamination_audit(spark, SF_DIR))
+    plan = explain(split_contamination_audit(spark, SF_DIR))
     assert "CartesianProduct" not in plan, plan
     # joins: doc_id (shingle->split) + whatever the CC residue pipeline
     # needs; the pair-free claim is "no join keyed on shingle=shingle"
@@ -406,7 +398,7 @@ def test_fs_canonical_windows_are_cluster_partitioned(spark):
     an unpartitioned window would single-task the corpus."""
     from bike_data_flow_spark.queries.linkage_q import fs_canonical_records
 
-    plan = _plan(fs_canonical_records(spark, SF_DIR))
+    plan = explain(fs_canonical_records(spark, SF_DIR))
     import re
 
     windows = list(re.finditer(r"\(\d+\) Window\n(?:.*\n){1,4}", plan))

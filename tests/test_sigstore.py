@@ -130,19 +130,16 @@ def test_store_scan_prunes_shard_partitions(spark, store_dir):
     on _shard, so a bounded shard IN-list must land as PartitionFilters
     — directory-listing-level pruning, symmetric to the vector index
     (test_vecstore.py)."""
-    import contextlib
-    import io
     import re
+
+    from tools.plans import explain
 
     docs = load(spark, "/root/testdata/sf0.001", "documents")
     G.signature_store_init(docs, store_dir)
     pruned = snapshot_read(spark, store_dir).filter(
         F.col("_shard").isin([1, 2, 3])
     )
-    buf = io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        pruned.explain("formatted")
-    plan = buf.getvalue()
+    plan = explain(pruned)
     pf = re.search(r"PartitionFilters: \[([^\]]*)\]", plan)
     assert pf and "_shard" in pf.group(1), plan
     # and the pruned read returns exactly the matching rows

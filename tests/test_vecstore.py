@@ -259,18 +259,14 @@ def test_store_scan_prunes_shard_partitions(spark, store_dir):
     """The store persists Hive-partitioned on _shard, so the probe's
     bounded shard IN-list must land as PartitionFilters — directory
     listing-level pruning, not a post-scan filter."""
-    import contextlib
-    import io
+    from tools.plans import explain
 
     emb = load(spark, "/root/testdata/sf0.001", "embeddings")
     V.vector_store_init(emb, store_dir, dim=_DIM)
     pruned = snapshot_read(spark, store_dir).filter(
         F.col("_shard").isin([1, 2])
     )
-    buf = io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        pruned.explain("formatted")
-    plan = buf.getvalue()
+    plan = explain(pruned)
     assert "PartitionFilters" in plan and "_shard" in plan, plan
     # the partition filter must not degrade into a data filter only
     import re
